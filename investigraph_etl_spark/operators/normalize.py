@@ -7,21 +7,15 @@ Reference semantics being preserved:
 * value cleaning happens *on ingest*, before merge
   (/root/reference/investigraph/util.py:41-43)
 
-Two implementations with identical semantics:
-* native Spark SQL expressions (JVM-side, whole-stage codegen — the
-  default hot path; strictly faster than any Python crossing), and
-* an Arrow-vectorized ``pandas_udf`` path (``use_arrow_udf=True``) for
-  normalizations that genuinely need Python (none of the core ones do;
-  it exists to host future tokenizer-adjacent logic and to prove the
-  batch plumbing).  Never row-at-a-time Python.
+Native Spark SQL expressions only (JVM-side, whole-stage codegen —
+strictly faster than any Python crossing); none of these
+normalizations needs Python.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StringType
 
 
 def clean_str(col: Column) -> Column:
@@ -32,21 +26,7 @@ def clean_str(col: Column) -> Column:
     return F.nullif(F.lower(stripped), F.lit(""))
 
 
-@F.pandas_udf(StringType())
-def clean_str_arrow(s: pd.Series) -> pd.Series:
-    """Arrow-batched twin of :func:`clean_str` (Series→Series)."""
-    out = s.astype("string").str.strip().str.lower()
-    return out.mask(out == "", None)
-
-
-@F.pandas_udf(IntegerType())
-def _len_arrow(tokens: pd.Series) -> pd.Series:
-    return pd.array(
-        [None if t is None else len(t) for t in tokens], dtype="Int32"
-    )
-
-
-def normalize_events(events: DataFrame, *, use_arrow_udf: bool = False) -> DataFrame:
+def normalize_events(events: DataFrame) -> DataFrame:
     """Normalize a change-event DataFrame in place:
 
     * ``source`` cleaned (trim/lower/null-if-empty)
@@ -54,15 +34,7 @@ def normalize_events(events: DataFrame, *, use_arrow_udf: bool = False) -> DataF
       untrusted (the generator deliberately corrupts some)
     * delete events keep null payload
 
-    Narrow (no shuffle); stays inside whole-stage codegen on the
-    default path.
+    Narrow (no shuffle); stays inside whole-stage codegen.
     """
-    if use_arrow_udf:
-        src = clean_str_arrow(F.col("source"))
-        ntok = _len_arrow(F.col("tokens"))
-    else:
-        src = clean_str(F.col("source"))
-        ntok = F.when(
-            F.col("tokens").isNotNull(), F.size(F.col("tokens"))
-        ).cast("int")
-    return events.withColumns({"source": src, "n_tok": ntok})
+    ntok = F.when(F.col("tokens").isNotNull(), F.size(F.col("tokens"))).cast("int")
+    return events.withColumns({"source": clean_str(F.col("source")), "n_tok": ntok})

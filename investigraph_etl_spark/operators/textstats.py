@@ -191,9 +191,11 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     O(n·distinct)/doc.
 
     Tokenization follows the simhash precedent for cross-engine
-    parity: ASCII ``\\s+`` splitting (Java ``\\s`` ≡ RE2 ≡ the pinned
-    Python class) so the DuckDB oracle reproduces token boundaries
-    exactly; lowercasing is ASCII-equivalent across Python/JVM/DuckDB
+    parity: ASCII ``\\s+`` splitting (Java ``\\s`` ≡ the pinned Python
+    class ``[ \\t\\n\\x0b\\f\\r]``) so the DuckDB oracle reproduces token
+    boundaries — except U+000B (vertical tab), which RE2/DuckDB ``\\s``
+    does not match, so only a text containing it tokenizes differently
+    in the oracle; lowercasing is ASCII-equivalent across Python/JVM/DuckDB
     on the value-checked corpora.  The keep rule evaluates the ROUNDED
     ratios so the flag is reproducible bit-for-bit across engines (the
     oracle runs the same rule in SQL; values and schema are identical

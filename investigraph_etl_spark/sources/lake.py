@@ -57,7 +57,7 @@ import os
 import pathlib
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -221,10 +221,10 @@ class HashLakeTable:
         # only buckets whose file lists changed get new bucket-manifest
         # files (the Iceberg manifest-reuse analog)
         self._persisted = self._manifest
-        # async-compaction state (see merge(compact_mode="async")):
-        # _compact_future is None or (future, consumed, out_dir) where
-        # consumed maps bucket -> number of delta sets the running job
-        # snapshotted (harvest drops exactly that prefix per bucket)
+        # async-compaction state (see _compact): _compact_future is None
+        # or (future, consumed) where consumed maps bucket -> number of
+        # delta sets the running fold snapshotted (harvest drops exactly
+        # that prefix per bucket)
         self._compact_pool = None
         self._compact_future = None
         # compaction rewrites sort each bucket by key and roll files at
@@ -331,6 +331,12 @@ class HashLakeTable:
             self.root, self._manifest, self._persisted
         )
         self._persisted = self._manifest
+
+    def _commit_version(self, **changes) -> None:
+        """Persist the manifest, with ``changes`` applied, as the next
+        version (schema-only and compaction-only commits)."""
+        self._manifest = {**self._manifest, **changes, "version": self.version + 1}
+        self._commit_manifest()
 
     @staticmethod
     def _materialize(mdir: pathlib.Path, doc: dict) -> dict:
@@ -487,6 +493,32 @@ class HashLakeTable:
             return self.spark.createDataFrame([], stored)
         return self.spark.read.schema(stored).parquet(*files)
 
+    def _lww(self, rows: DataFrame) -> DataFrame:
+        """The read-time LWW rule: per key, the row with the max
+        ``(_seq, _commit)``.  The winner semi-join strategy is left to
+        Catalyst/AQE — a table scan is not a micro-batch, forcing
+        broadcast would be wrong at scale."""
+        from investigraph_etl_spark.operators.lww import lww_dedup
+
+        return lww_dedup(
+            rows, self.key, "_seq", extra_keys=("_commit",), winners_strategy="auto"
+        )
+
+    def _bucket_col(self) -> Column:
+        """A row's bucket, ``pmod(xxhash64(key), num_buckets)`` — the
+        one assignment the delta write, the fold and bucket pruning
+        agree on."""
+        return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.num_buckets))
+
+    @staticmethod
+    def _bucket_outputs(out_dir: pathlib.Path) -> dict[str, list[str]]:
+        """Bucket → sorted parquet files of a ``partitionBy("_bucket")``
+        write (its directory listing — no Spark job)."""
+        return {
+            bdir.name.split("=", 1)[1]: sorted(str(p) for p in bdir.glob("*.parquet"))
+            for bdir in out_dir.glob("_bucket=*")
+        }
+
     def read_raw(
         self,
         buckets: list[int] | None = None,
@@ -497,21 +529,10 @@ class HashLakeTable:
         (merge-on-read: LWW over base ∪ deltas on ``(_seq, _commit)``).
         Passing ``buckets`` prunes the scan to those buckets' files;
         ``version`` time-travels to a retained manifest (MVCC — the
-        snapshot's file set AND its schema as of that version).
-        The winner semi-join strategy is left to Catalyst/AQE — the
-        full table is not a micro-batch, forcing broadcast would be
-        wrong at scale."""
-        from investigraph_etl_spark.operators.lww import lww_dedup
-
+        snapshot's file set AND its schema as of that version)."""
         manifest = self._manifest if version is None else self._manifest_at(version)
         payload = StructType.fromJson(manifest["schema"])
-        merged = lww_dedup(
-            self._scan(self._bucket_files(buckets, manifest), payload),
-            self.key,
-            "_seq",
-            extra_keys=("_commit",),
-            winners_strategy="auto",
-        )
+        merged = self._lww(self._scan(self._bucket_files(buckets, manifest), payload))
         return merged.select(
             *[f.name for f in payload.fields], *[f.name for f in _INTERNAL]
         )
@@ -520,12 +541,10 @@ class HashLakeTable:
         """Live rows, public schema.  ``version`` time-travels to any
         manifest still retained by :meth:`vacuum` (Iceberg
         ``VERSION AS OF`` analog)."""
-        manifest = self._manifest if version is None else self._manifest_at(version)
-        cols = [f["name"] for f in manifest["schema"]["fields"]]
         return (
             self.read_raw(version=version)
             .filter(~F.col("_deleted"))
-            .select(*cols)
+            .drop(*[f.name for f in _INTERNAL])
         )
 
     def read_keys(self, keys: list[str]) -> DataFrame:
@@ -546,8 +565,6 @@ class HashLakeTable:
         Pruning never changes LWW winners: a skipped file contains no
         version of any requested key.  Tombstoned keys return no row,
         exactly like :meth:`read`."""
-        from investigraph_etl_spark.operators.lww import lww_dedup
-
         cols = [f.name for f in self.schema.fields]
         if not keys:
             return self.read().limit(0)
@@ -557,11 +574,7 @@ class HashLakeTable:
         )
         buckets = sorted(
             r["b"]
-            for r in kdf.select(
-                F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.num_buckets))
-                .cast("int")
-                .alias("b")
-            )
+            for r in kdf.select(self._bucket_col().cast("int").alias("b"))
             .distinct()
             .collect()
         )
@@ -570,15 +583,9 @@ class HashLakeTable:
             self._manifest.get("file_stats", {}),
             list(keys),
         )
-        merged = lww_dedup(
-            self._scan(files, self.schema),
-            self.key,
-            "_seq",
-            extra_keys=("_commit",),
-            winners_strategy="auto",
-        )
         return (
-            merged.filter(~F.col("_deleted"))
+            self._lww(self._scan(files, self.schema))
+            .filter(~F.col("_deleted"))
             .filter(F.col(self.key).isin(list(keys)))
             .select(*cols)
         )
@@ -629,14 +636,10 @@ class HashLakeTable:
             v = e["version"]
             if not (from_version < v <= to_version):
                 continue
-            d = self.root / "data" / f"c{v:06d}"
-            got = sorted(str(p) for p in d.glob("_bucket=*/*.parquet"))
-            seen = {
-                int(p.split("_bucket=", 1)[1].split("/", 1)[0]) for p in got
-            }
-            if seen != set(e.get("touched_buckets", [])):
+            got = self._bucket_outputs(self.root / "data" / f"c{v:06d}")
+            if {int(b) for b in got} != set(e.get("touched_buckets", [])):
                 return None
-            files += got
+            files += sorted(f for fl in got.values() for f in fl)
         return files
 
     def read_changes(
@@ -694,8 +697,6 @@ class HashLakeTable:
         manifests retained (same retention contract as :meth:`vacuum`
         / time travel).
         """
-        from investigraph_etl_spark.operators.lww import lww_dedup
-
         to_version = self.version if to_version is None else to_version
         if from_version > to_version:
             raise ValueError(
@@ -739,10 +740,7 @@ class HashLakeTable:
                 & (F.col("_commit") <= F.lit(to_version))
             )
         )
-        w = lww_dedup(
-            range_rows, self.key, "_seq",
-            extra_keys=("_commit",), winners_strategy="auto",
-        )
+        w = self._lww(range_rows)
         # touched buckets for the from-state scan — bounded by
         # num_buckets either way.  Fast path: a pure-delta file set
         # (no compaction outputs) is per-commit-per-bucket by
@@ -760,12 +758,11 @@ class HashLakeTable:
         if all(m is not None and m.group(1) is None for m in marks):
             touched = sorted({int(m.group(2)) for m in marks})
         else:
-            bucket_expr = F.pmod(
-                F.xxhash64(F.col(self.key)), F.lit(self.num_buckets)
-            ).cast("int")
             touched = sorted(
                 r["b"]
-                for r in w.select(bucket_expr.alias("b")).distinct().collect()
+                for r in w.select(self._bucket_col().cast("int").alias("b"))
+                .distinct()
+                .collect()
             )
         man_from = self._manifest_at(from_version)
         pay_from = StructType.fromJson(man_from["schema"])
@@ -792,13 +789,7 @@ class HashLakeTable:
             self._bucket_files(touched, man_from), pay_from
         ).select(self.key, *pre_cols if include_preimage else [],
                  "_seq", "_deleted", "_commit")
-        j = lww_dedup(
-            s_scan,
-            self.key,
-            "_seq",
-            extra_keys=("_commit",),
-            winners_strategy="auto",
-        ).select(*s_sel)
+        j = self._lww(s_scan).select(*s_sel)
         j = w.join(j, w[self.key] == F.col("_s_key"), "left")
         w_wins = F.col("_s_key").isNull() | (
             F.struct(F.col("_seq"), F.col("_commit"))
@@ -853,12 +844,7 @@ class HashLakeTable:
         if not added:
             return
         schema = StructType(list(self.schema.fields) + added)
-        self._manifest = {
-            **self._manifest,
-            "version": self.version + 1,
-            "schema": json.loads(schema.json()),
-        }
-        self._commit_manifest()
+        self._commit_version(schema=json.loads(schema.json()))
 
     def promote_columns(self, promotions: list[tuple[str, "DataType"]]) -> None:
         """Widen stored column TYPES along the lossless chains
@@ -884,15 +870,9 @@ class HashLakeTable:
                 )
             by_name[name] = StructField(name, new_t, f.nullable, f.metadata)
             changed = True
-        if not changed:
-            return
-        schema = StructType([by_name[f.name] for f in self.schema.fields])
-        self._manifest = {
-            **self._manifest,
-            "version": self.version + 1,
-            "schema": json.loads(schema.json()),
-        }
-        self._commit_manifest()
+        if changed:
+            schema = StructType([by_name[f.name] for f in self.schema.fields])
+            self._commit_version(schema=json.loads(schema.json()))
 
     # ----------------------------------------------------------- merge
     def merge(
@@ -934,12 +914,15 @@ class HashLakeTable:
         LWW(LWW(batch) ∪ target)``); what changes is economics.  The
         reduce is a winners hash-agg + broadcast semi-join that costs
         ~0.8s per micro-batch at local[32] regardless of how few
-        duplicates it removes (measured, tools/profile_write.py), while
-        unreduced deltas only cost bytes ∝ the duplicate fraction.
-        Policy: skip for micro-batches (low in-batch dup ratio — the
-        streaming tailer's case), keep for bulk replays whose dup
-        ratio is high (events/doc ≫ 1) where the reduce pays for
-        itself in write volume.
+        duplicates it removes (measured; the traced benchmark run,
+        ``perfbench/run.py --trace 1``, reports the same slice as
+        ``lake.merge.plan_s``/``write_s``), while unreduced deltas only
+        cost bytes ∝ the duplicate fraction.  Policy: skip for
+        micro-batches (low in-batch dup ratio — the streaming tailer's
+        case), keep for bulk replays whose dup ratio is high
+        (events/doc ≫ 1) where the reduce pays for itself in write
+        volume.  ``salt_buckets`` salts that reduce, so it needs
+        ``reduce_batch=True``; the combination with ``False`` raises.
 
         ``compact_mode`` — ``"sync"`` folds threshold buckets inline
         (bounded latency spike), ``"async"`` runs the same fold on a
@@ -957,6 +940,11 @@ class HashLakeTable:
         """
         import time as _time
 
+        if salt_buckets > 0 and not reduce_batch:
+            raise ValueError(
+                f"salt_buckets={salt_buckets} has no effect with "
+                "reduce_batch=False (it salts the in-batch reduce)"
+            )
         if batch_id <= self.last_committed(stream_id):
             return {"skipped": True, "version": self.version}
         _t0 = _time.monotonic()
@@ -1063,8 +1051,7 @@ class HashLakeTable:
             )
         else:
             reduced = changes
-        bucket_expr = F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.num_buckets))
-        reduced = reduced.withColumn("_bucket", bucket_expr).withColumn(
+        reduced = reduced.withColumn("_bucket", self._bucket_col()).withColumn(
             "_commit", F.lit(out_version).cast("long")
         )
 
@@ -1084,10 +1071,7 @@ class HashLakeTable:
         _t_plan = _time.monotonic()
         reduced.write.partitionBy("_bucket").mode("overwrite").parquet(str(out_dir))
         _t_write = _time.monotonic()
-        new_files: dict[str, list[str]] = {}
-        for bdir in out_dir.glob("_bucket=*"):
-            b = bdir.name.split("=", 1)[1]
-            new_files[b] = sorted(str(p) for p in bdir.glob("*.parquet"))
+        new_files = self._bucket_outputs(out_dir)
         touched = sorted(int(b) for b in new_files)
         file_stats = dict(self._manifest.get("file_stats", {}))
         file_stats.update(
@@ -1129,14 +1113,10 @@ class HashLakeTable:
         per_commit = max(1, self.num_buckets // max(auto_compact_deltas, 1))
         compacted = 0
         _t_pre_compact = _time.monotonic()
-        if full and compact_mode == "sync":
-            # mode-switch guard: a still-inflight async fold snapshotted
-            # delta prefixes that a sync fold would also consume — land
-            # it first or the harvest would drop the wrong delta sets
-            self._harvest_compaction(block=True)
-            compacted = self._compact_into_manifest(full[:per_commit], out_version)
-        elif full and compact_mode == "async":
-            compacted = self._schedule_compaction(full[:per_commit], out_version)
+        if full and compact_mode in ("sync", "async"):
+            compacted = self._compact(
+                full[:per_commit], out_version, background=compact_mode == "async"
+            )
         _t_compact = _time.monotonic()
 
         self._commit_manifest()
@@ -1156,128 +1136,84 @@ class HashLakeTable:
         }
 
     # ------------------------------------------------------- compaction
-    def _compact_into_manifest(self, buckets: list[int], version: int) -> int:
-        """Fold base ∪ deltas into a new base for ``buckets``, updating
-        ``self._manifest`` in place (caller writes the manifest).
+    def _compact(
+        self, buckets: list[int], version: int, *, background: bool = False
+    ) -> int:
+        """Fold ``buckets``' base ∪ deltas into new bases written at
+        ``version`` — the one compaction path behind sync merges,
+        :meth:`compact` and async merges.  Returns the number of buckets
+        folded (with ``background``: scheduled).
 
-        The rewrite sorts each bucket by key *within* its write task
-        (``sortWithinPartitions`` — a local sort, no exchange) and, when
-        :attr:`compact_target_file_rows` is set, rolls output files at
-        that row count: a bucket's base becomes key-range-DISJOINT
-        files, whose footer min/max (harvested into the bucket
-        manifest) let :meth:`read_keys` prune to O(1) base files per
-        bucket.  Delta files stay unsorted (the hot write path never
-        sorts, see merge step 4) — at 100 TB the compacted base is
-        ~everything, so skipping lives where the bytes are."""
-        from investigraph_etl_spark.operators.lww import lww_dedup
+        Snapshots the buckets on the committer thread — their files, the
+        payload schema, and per bucket the number of delta sets the fold
+        consumes — then runs :meth:`_fold` (pure compute) and
+        :meth:`_apply_fold` (the only manifest mutation) back to back.
+        ``background`` instead submits :meth:`_fold` to a one-slot pool
+        so it overlaps the next commits' write jobs (the Iceberg
+        maintenance-process analog); a busy pool skips scheduling (the
+        buckets stay over threshold and retry next commit), and
+        :meth:`_harvest_compaction` applies the result.  Only a fold
+        removes files from the manifest and only one runs at a time
+        (single writer), so the snapshot stays valid; delta sets
+        appended after it survive because the apply drops exactly the
+        consumed prefix.
 
+        Crash safety: if the process dies mid-fold the manifest never
+        references the new files; :meth:`vacuum` removes the orphans.
+        Do not run :meth:`vacuum` while a compaction is inflight (it
+        would delete the fold's not-yet-referenced output)."""
+        if background and self._compact_future is not None:
+            return 0
+        # single-compactor rule (also the sync/async mode-switch guard):
+        # an inflight fold snapshotted delta prefixes this one would
+        # also consume — land it first or its apply drops the wrong sets
+        self._harvest_compaction(block=True)
         files = self._bucket_files(buckets)
         if not files:
             return 0
-        bucket_expr = F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.num_buckets))
-        merged = lww_dedup(
-            self._scan(files, self.schema),
-            self.key,
-            "_seq",
-            extra_keys=("_commit",),
-            winners_strategy="auto",
-        ).withColumn("_bucket", bucket_expr)
-        merged = merged.repartition(max(len(buckets), 1), "_bucket")
-        merged = merged.sortWithinPartitions("_bucket", self.key)
+        deltas = self._manifest.get("deltas", {})
+        consumed = {str(b): len(deltas.get(str(b), [])) for b in buckets}
         out_dir = self.root / "data" / f"c{version:06d}x"
-        writer = merged.write
-        if self.compact_target_file_rows:
-            writer = writer.option(
-                "maxRecordsPerFile", self.compact_target_file_rows
-            )
-        writer.partitionBy("_bucket").mode("overwrite").parquet(str(out_dir))
-        new_base: dict[str, list[str]] = {}
-        for bdir in out_dir.glob("_bucket=*"):
-            b = bdir.name.split("=", 1)[1]
-            new_base[b] = sorted(str(p) for p in bdir.glob("*.parquet"))
-        bases = dict(self._manifest["buckets"])
-        deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
-        file_stats = dict(self._manifest.get("file_stats", {}))
-        for f in files:
-            file_stats.pop(f, None)  # superseded by the new base
-        file_stats.update(
-            self._harvest_file_stats(
-                [f for fl in new_base.values() for f in fl]
-            )
-        )
-        for b in buckets:
-            bases[str(b)] = new_base.get(str(b), [])
-            deltas.pop(str(b), None)
-        self._manifest = {
-            **self._manifest,
-            "buckets": bases,
-            "deltas": deltas,
-            "file_stats": file_stats,
-        }
-        return len(buckets)
-
-    # ------------------------------------------------- async compaction
-    def _schedule_compaction(self, buckets: list[int], version: int) -> int:
-        """Start a background fold of ``buckets``' base ∪ deltas (at
-        most ONE inflight job; a busy pool skips scheduling — the
-        buckets stay over threshold and are retried next commit).
-
-        The job is pure compute: it snapshots the bucket→files mapping
-        NOW (single-writer: only compaction removes files from the
-        manifest, and only one compaction runs at a time, so the
-        snapshot stays valid), writes new bases to a fresh directory,
-        and returns them.  Manifest mutation happens exclusively on the
-        committer thread in :meth:`_harvest_compaction` — concurrent
-        delta appends to the same buckets are safe because harvest
-        drops exactly the per-bucket delta-set *prefix* the job
-        consumed, keeping anything appended after the snapshot.
-
-        Crash safety: if the process dies mid-job the manifest never
-        references the new files; :meth:`vacuum` removes the orphans.
-        Do not run :meth:`vacuum` while a compaction is inflight (it
-        would delete the job's not-yet-referenced output).
-        """
-        if self._compact_future is not None:
-            return 0
-        import concurrent.futures
-
+        snapshot = (files, len(consumed), self.schema, out_dir)
+        if not background:
+            return self._apply_fold(consumed, *self._fold(*snapshot))
         if self._compact_pool is None:
+            import concurrent.futures
+
             self._compact_pool = concurrent.futures.ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="lake-compact"
             )
-        bases = self._manifest["buckets"]
-        deltas = self._manifest.get("deltas", {})
-        snapshot = {
-            str(b): list(bases.get(str(b), []))
-            + [f for dset in deltas.get(str(b), []) for f in dset]
-            for b in buckets
-        }
-        consumed = {str(b): len(deltas.get(str(b), [])) for b in buckets}
-        out_dir = self.root / "data" / f"c{version:06d}a"
-        stored = StructType(list(self.full_schema.fields) + [_COMMIT])
-        fut = self._compact_pool.submit(
-            self._compute_compacted, snapshot, out_dir, stored
+        self._compact_future = (
+            self._compact_pool.submit(self._fold, *snapshot),
+            consumed,
         )
-        self._compact_future = (fut, consumed)
-        return len(snapshot)
+        return len(consumed)
 
-    def _compute_compacted(
-        self, snapshot: dict[str, list[str]], out_dir, stored: StructType
+    def _fold(
+        self,
+        files: list[str],
+        n_folded: int,
+        payload: StructType,
+        out_dir: pathlib.Path,
     ) -> tuple[dict[str, list[str]], dict[str, list]]:
-        """Background-thread body: LWW-fold the snapshotted files into
-        new per-bucket bases (key-sorted within each bucket, see
-        :meth:`_compact_into_manifest`).  Touches no table state;
-        returns (bucket → new base files, file → [min,max] key stats)."""
-        from investigraph_etl_spark.operators.lww import lww_dedup
+        """LWW-fold the snapshotted ``files`` of ``n_folded`` buckets (read
+        with the snapshot's ``payload`` schema) into new per-bucket bases
+        under ``out_dir``.  Touches no table state; returns (bucket → new
+        base files, file → [min,max] key stats).
 
-        files = [f for fl in snapshot.values() for f in fl]
-        bucket_expr = F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.num_buckets))
-        scan = self.spark.read.schema(stored).parquet(*files)
-        merged = lww_dedup(
-            scan, self.key, "_seq", extra_keys=("_commit",),
-            winners_strategy="auto",
-        ).withColumn("_bucket", bucket_expr)
-        merged = merged.repartition(max(len(snapshot), 1) * 4, "_bucket")
+        The rewrite uses the delta write's 4×-buckets fan (merge step 4)
+        and sorts each bucket by key *within* its write task
+        (``sortWithinPartitions`` — a local sort, no exchange); when
+        :attr:`compact_target_file_rows` is set it rolls output files at
+        that row count.  A bucket's base thus becomes key-range-DISJOINT
+        files whose footer min/max let :meth:`read_keys` prune to O(1)
+        base files per bucket.  Delta files stay unsorted (the hot write
+        path never sorts) — at 100 TB the compacted base is ~everything,
+        so skipping lives where the bytes are."""
+        merged = self._lww(self._scan(files, payload)).withColumn(
+            "_bucket", self._bucket_col()
+        )
+        merged = merged.repartition(n_folded * 4, "_bucket")
         merged = merged.sortWithinPartitions("_bucket", self.key)
         writer = merged.write
         if self.compact_target_file_rows:
@@ -1285,41 +1221,33 @@ class HashLakeTable:
                 "maxRecordsPerFile", self.compact_target_file_rows
             )
         writer.partitionBy("_bucket").mode("overwrite").parquet(str(out_dir))
-        new_base: dict[str, list[str]] = {b: [] for b in snapshot}
-        for bdir in pathlib.Path(out_dir).glob("_bucket=*"):
-            b = bdir.name.split("=", 1)[1]
-            new_base[b] = sorted(str(p) for p in bdir.glob("*.parquet"))
-        new_stats = self._harvest_file_stats(
+        new_base = self._bucket_outputs(out_dir)
+        return new_base, self._harvest_file_stats(
             [f for fl in new_base.values() for f in fl]
         )
-        return new_base, new_stats
 
-    def _harvest_compaction(self, *, block: bool) -> int:
-        """Fold a finished background compaction into the in-memory
-        manifest (persisted by the caller's next manifest write).
-        Returns the number of buckets folded."""
-        if self._compact_future is None:
-            return 0
-        fut, consumed = self._compact_future
-        if not block and not fut.done():
-            return 0
-        new_base, new_stats = fut.result()  # re-raises background failures
-        self._compact_future = None
+    def _apply_fold(
+        self,
+        consumed: dict[str, int],
+        new_base: dict[str, list[str]],
+        new_stats: dict[str, list],
+    ) -> int:
+        """Land a fold in the in-memory manifest (persisted by the
+        caller's next manifest write): each folded bucket's base becomes
+        the fold's output, and its first ``consumed[b]`` delta sets —
+        the ones the fold read — are dropped with their stats.  Delta
+        sets appended after the snapshot stay.  Returns the number of
+        buckets folded."""
         bases = dict(self._manifest["buckets"])
         deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
         file_stats = dict(self._manifest.get("file_stats", {}))
-        for b, files in new_base.items():
-            consumed_files = bases.get(b, []) + [
-                f for ds in deltas.get(b, [])[: consumed[b]] for f in ds
-            ]
-            for f in consumed_files:
+        for b, n in consumed.items():
+            dsets = deltas.pop(b, [])
+            for f in bases.get(b, []) + [f for ds in dsets[:n] for f in ds]:
                 file_stats.pop(f, None)
-            bases[b] = files
-            remaining = deltas.get(b, [])[consumed[b]:]
-            if remaining:
-                deltas[b] = remaining
-            else:
-                deltas.pop(b, None)
+            bases[b] = new_base.get(b, [])
+            if dsets[n:]:
+                deltas[b] = dsets[n:]
         file_stats.update(new_stats)
         self._manifest = {
             **self._manifest,
@@ -1327,7 +1255,19 @@ class HashLakeTable:
             "deltas": deltas,
             "file_stats": file_stats,
         }
-        return len(new_base)
+        return len(consumed)
+
+    def _harvest_compaction(self, *, block: bool) -> int:
+        """Apply a finished background fold (see :meth:`_compact`).
+        Returns the number of buckets folded."""
+        if self._compact_future is None:
+            return 0
+        fut, consumed = self._compact_future
+        if not block and not fut.done():
+            return 0
+        result = fut.result()  # re-raises background failures
+        self._compact_future = None
+        return self._apply_fold(consumed, *result)
 
     def wait_for_compaction(self) -> int:
         """Block until any inflight background compaction lands, fold
@@ -1335,8 +1275,7 @@ class HashLakeTable:
         shutting down a ``compact_mode="async"`` writer."""
         n = self._harvest_compaction(block=True)
         if n:
-            self._manifest = {**self._manifest, "version": self.version + 1}
-            self._commit_manifest()
+            self._commit_version()
         return n
 
     def compact(self, buckets: list[int] | None = None) -> dict:
@@ -1353,12 +1292,9 @@ class HashLakeTable:
         )
         if not targets:
             return {"compacted_buckets": 0, "version": self.version}
-        version = self.version + 1
-        self._manifest = {**self._manifest, "version": version}
-        n = self._compact_into_manifest(targets, version)
-        self._commit_manifest()
-        return {"compacted_buckets": n, "version": version}
-
+        n = self._compact(targets, self.version + 1)
+        self._commit_version()
+        return {"compacted_buckets": n, "version": self.version}
 
     # ----------------------------------------------------- maintenance
     def vacuum(self, *, keep_manifests: int = 10) -> dict:
@@ -1389,12 +1325,10 @@ class HashLakeTable:
         for m in retained:
             doc = json.loads(m.read_text())
             live_refs.update(doc.get("bucket_refs", {}).values())
-            doc = self._materialize(mdir, doc)
-            for files in doc.get("buckets", {}).values():
-                referenced.update(str(pathlib.Path(f).resolve()) for f in files)
-            for dsets in doc.get("deltas", {}).values():
-                for files in dsets:
-                    referenced.update(str(pathlib.Path(f).resolve()) for f in files)
+            referenced.update(
+                str(pathlib.Path(f).resolve())
+                for f in self._bucket_files(None, self._materialize(mdir, doc))
+            )
         removed = 0
         data = self.root / "data"
         for p in sorted(data.rglob("*"), reverse=True):

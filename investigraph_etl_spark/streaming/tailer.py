@@ -67,7 +67,7 @@ def target_schema(with_lang: bool = False) -> StructType:
     return StructType(fields)
 
 
-def prepare_batch(events: DataFrame, *, salt_buckets: int = 0) -> DataFrame:
+def prepare_batch(events: DataFrame) -> DataFrame:
     """Normalize one (micro)batch for merge (narrow, no shuffle).
 
     In-batch LWW dedup happens inside ``lake.merge`` — folded with the
@@ -77,8 +77,6 @@ def prepare_batch(events: DataFrame, *, salt_buckets: int = 0) -> DataFrame:
     standalone reduced batch is needed (e.g. feeding a real Iceberg
     MERGE, whose cardinality check requires ≤1 source row per key).
     ``event_time`` is stream metadata (lag metrics), not table payload.
-    ``salt_buckets`` is accepted for signature stability and forwarded
-    by :func:`replay_batch`.
     """
     return normalize_events(events).drop("event_time")
 

@@ -115,8 +115,14 @@ def test_bucket_pruning_touches_only_needed_buckets(spark, lake):
 
 def test_salted_lww_same_result(spark, lake):
     events = gen_events_pandas(0, 3000, seed=6, n_docs=50, skew_frac=0.6, n_hot=1)
-    lake.merge(prepare_batch(_spark_events(spark, events), salt_buckets=8), 0)
+    lake.merge(prepare_batch(_spark_events(spark, events)), 0, salt_buckets=8)
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
+
+
+def test_salt_without_batch_reduce_raises(spark, lake):
+    batch = prepare_batch(_spark_events(spark, gen_events_pandas(0, 10, seed=6)))
+    with pytest.raises(ValueError, match="salt_buckets.*reduce_batch=False"):
+        lake.merge(batch, 0, salt_buckets=8, reduce_batch=False)
 
 
 def _data_bytes(lake) -> int:
@@ -163,21 +169,34 @@ def test_compact_folds_deltas_preserves_state(spark, lake):
     )
 
 
-def test_auto_compact_triggers_at_threshold(spark, lake):
+@pytest.mark.parametrize("compact_mode", ["sync", "async"])
+def test_auto_compact_triggers_at_threshold(spark, lake, compact_mode):
+    """Both entry points of the one fold — inline (sync) and the
+    background pool (async) — fold threshold buckets into bases that
+    carry harvested key stats."""
     events = gen_events_pandas(0, 1200, seed=15, n_docs=20)  # few docs → few buckets
     compactions = 0
     for bid, start in enumerate(range(0, 1200, 200)):
         chunk = events.iloc[start : start + 200]
         r = lake.merge(
-            prepare_batch(_spark_events(spark, chunk)), bid, auto_compact_deltas=3
+            prepare_batch(_spark_events(spark, chunk)), bid,
+            auto_compact_deltas=3, compact_mode=compact_mode,
         )
         compactions += r.get("compacted_buckets", 0)
+    if compact_mode == "async":
+        lake.wait_for_compaction()
     assert compactions > 0
     deltas = lake.snapshot()["deltas"]
     # smoothed compaction folds a bounded bucket set per commit, so
     # delta counts stay bounded by ~2× the threshold, not threshold+1
     assert all(len(d) <= 2 * 3 for d in deltas.values())
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
+    # every base file carries harvested [min, max] key stats
+    stats = lake._manifest["file_stats"]
+    bases = [f for fl in lake._manifest["buckets"].values() for f in fl]
+    assert bases
+    for f in bases:
+        assert f in stats and stats[f][0] <= stats[f][1]
 
 
 def test_lww_auto_count_strategy(spark, lake):

@@ -165,10 +165,15 @@ def test_repetition_stats_randomized_vs_python_oracle(spark):
     Python Counter oracle computing the same rounded ratios and keep
     rule.  One Spark job for all cases."""
     import random
+    import re
     from collections import Counter
 
     from investigraph_etl_spark.operators.textstats import repetition_stats
 
+    # the production token rule: ASCII whitespace only (Java \s), so
+    # e.g. NBSP is NOT a boundary — str.split() would split on it
+    ws_re = re.compile(r"[ \t\n\x0b\f\r]+")
+    nbsp = "a\u00a0b a\u00a0b c"  # two "a\u00a0b" tokens + "c"
     rng = random.Random(42)
     texts: list[str] = [
         "",               # no words -> no row
@@ -176,6 +181,7 @@ def test_repetition_stats_randomized_vs_python_oracle(spark):
         "word",           # singleton, no bigrams
         "A a\ta",          # case-fold + tab whitespace
         "x Y x y X y",    # interleaved
+        nbsp,
     ]
     for _ in range(200):
         n = rng.randint(0, 40)
@@ -189,8 +195,9 @@ def test_repetition_stats_randomized_vs_python_oracle(spark):
     )
     got = {r["doc_id"]: r.asDict() for r in repetition_stats(df).collect()}
 
+    assert got[texts.index(nbsp)]["n_words"] == 3
     for i, t in enumerate(texts):
-        ws = t.lower().split()
+        ws = [w for w in ws_re.split(t.lower()) if w]
         if not ws:
             assert i not in got, (i, t)
             continue

@@ -5,13 +5,14 @@ values.  Usage: python tools/compare.py [sf_dir] [query ...]"""
 
 from __future__ import annotations
 
+import pathlib
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

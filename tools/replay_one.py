@@ -28,11 +28,12 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from investigraph_etl_spark.changelog import write_changelog  # noqa: E402
 from investigraph_etl_spark.session import get_spark  # noqa: E402
@@ -99,8 +100,6 @@ def main() -> None:
     warm_lake.merge(
         prepare_batch(spark.read.schema(change_schema()).parquet(warm_log)), 0
     )
-
-    import pathlib
 
     chunk_files = sorted(str(p) for p in pathlib.Path(log_dir).glob("*.parquet"))
     groups: list[list[str]]
