@@ -32,12 +32,14 @@ _ENGINE_CONF: dict[str, str] = {
     "spark.driver.extraJavaOptions": "-Djava.net.preferIPv4Stack=true -XX:+UseParallelGC",
     # output-commit algorithm 2: task-side renames instead of a serial
     # driver-side rename loop at job commit — measured ~0.5s/commit on
-    # the 128-partition delta write (A/B, tools: v1 [8.15, 7.81, 7.60]
-    # vs v2 [7.50, 7.08, 7.46] on the 8M bulk merge), pure serial-path
-    # saving.  v2's weaker job-commit atomicity (a failed job can leave
-    # partial files in the output dir) is already covered one level up:
-    # the lake's manifest commit is what makes data files visible, so
-    # un-manifested partials are unreadable and vacuum() removes them.
+    # the 8M bulk merge while its delta write ran 128 tasks (A/B: v1
+    # [8.15, 7.81, 7.60] vs v2 [7.50, 7.08, 7.46]); the loop is per
+    # task, so with the batch-sized write the saving is smaller but
+    # still serial-path.  v2's weaker job-commit atomicity (a failed
+    # job can leave partial files in the output dir) is already covered
+    # one level up: the lake's manifest commit is what makes data files
+    # visible, so un-manifested partials are unreadable and vacuum()
+    # removes them.
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
 }
 

@@ -552,8 +552,8 @@ class HashLakeTable:
 
         1. **bucket pruning** — scan only the buckets the keys hash
            into (the same ``xxhash64`` expression the merge path
-           clusters by, evaluated in ONE tiny driver-side job over the
-           key list, bounded by ``len(keys)`` never table size);
+           clusters by, evaluated in ONE single-task job over the key
+           literals, bounded by ``len(keys)`` never table size);
         2. **file skipping** — within those buckets, drop every file
            whose manifest ``[min,max]`` key range excludes all
            requested keys (footer stats harvested at write time, see
@@ -569,15 +569,15 @@ class HashLakeTable:
         if not keys:
             return self.read().limit(0)
         key_type = self.schema[self.key].dataType
-        kdf = self.spark.createDataFrame(
-            [(k,) for k in keys], StructType([StructField(self.key, key_type)])
+        # the keys ride the plan as literals cast to the stored key type
+        # (the hash depends on it): no Python worker round trip, no shuffle
+        kdf = self.spark.range(1, numPartitions=1).select(
+            F.explode(
+                F.array(*[F.lit(k).cast(key_type) for k in dict.fromkeys(keys)])
+            ).alias(self.key)
         )
-        buckets = sorted(
-            r["b"]
-            for r in kdf.select(self._bucket_col().cast("int").alias("b"))
-            .distinct()
-            .collect()
-        )
+        bucket = self._bucket_col().cast("int").alias("b")
+        buckets = sorted({r["b"] for r in kdf.select(bucket).collect()})
         files = self._files_for_keys(
             self._bucket_files(buckets),
             self._manifest.get("file_stats", {}),
@@ -908,6 +908,14 @@ class HashLakeTable:
         :meth:`compact`) — read amplification stays bounded while
         amortized compaction cost per commit is table/auto_compact.
 
+        The delta write is a bucket rebalance that AQE sizes to the
+        batch (one task for a micro-batch, about one per core for a bulk
+        replay), normally one delta file per touched bucket.  AQE also
+        splits any shuffle partition larger than
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so a very
+        large batch may write several delta files for one bucket;
+        readers take each delta set as a file list, so that is safe.
+
         ``reduce_batch=False`` skips the in-batch LWW reduce entirely —
         correctness is unaffected because read/compact-time LWW over
         ``(_seq, _commit)`` subsumes it (``LWW(batch ∪ target) ≡
@@ -1063,10 +1071,13 @@ class HashLakeTable:
         # slots leaves ~1/e of them empty and the fullest with 2-3
         # buckets (2-3× task imbalance on the write stage, measured
         # ~+20%); 4× slots spread the same 32 buckets nearly 1:1 while
-        # each bucket still lands wholly in ONE task → still ≤1 delta
-        # file per bucket per commit.  Explicit-N repartition is exempt
-        # from AQE coalescing, so the fan survives.
-        reduced = reduced.repartition(self.num_buckets * 4, "_bucket")
+        # each bucket still lands wholly in ONE hash slot.  A rebalance
+        # (not a repartition) lets AQE coalesce adjacent slots to the
+        # batch's size: a micro-batch writes in one task instead of
+        # paying a fixed ~44 ms of task set-up on each of 4×buckets
+        # mostly-empty tasks, a bulk batch in about one task per core
+        # (an oversized slot may be split — see the docstring).
+        reduced = reduced.hint("rebalance", self.num_buckets * 4, "_bucket")
         out_dir = self.root / "data" / f"c{out_version:06d}"
         _t_plan = _time.monotonic()
         reduced.write.partitionBy("_bucket").mode("overwrite").parquet(str(out_dir))
@@ -1201,8 +1212,11 @@ class HashLakeTable:
         under ``out_dir``.  Touches no table state; returns (bucket → new
         base files, file → [min,max] key stats).
 
-        The rewrite uses the delta write's 4×-buckets fan (merge step 4)
-        and sorts each bucket by key *within* its write task
+        The rewrite hashes into the delta write's 4×-buckets fan (merge
+        step 4) with an explicit repartition, not a rebalance: AQE's
+        skew split of a rebalance would cut one bucket's key range
+        across tasks and break the disjoint rolled files below.  It
+        sorts each bucket by key *within* its write task
         (``sortWithinPartitions`` — a local sort, no exchange); when
         :attr:`compact_target_file_rows` is set it rolls output files at
         that row count.  A bucket's base thus becomes key-range-DISJOINT

@@ -105,32 +105,6 @@ class MetricsLog:
                 fh.write(json.dumps(record) + "\n")
 
 
-def tune_ingest_scan(
-    spark: SparkSession,
-    *,
-    max_partition_bytes: str = "8m",
-    open_cost: str = "1m",
-) -> None:
-    """Size parquet scan splits for micro-batch ingest.
-
-    A micro-batch is a handful of small binlog chunk files; at the
-    default 128 MB ``maxPartitionBytes`` + 4 MB open cost the whole
-    batch packs into 1-2 scan tasks, so scan + normalization run on a
-    sliver of the cluster while the bucket-exchange reduce side waits.
-    8 MB splits (with row-group-bounded chunk files — see
-    ``changelog.write_changelog``) fan the map side out to ~2 row
-    groups per task.  NOT applied by default: an interleaved A/B on
-    this host (8M events, 16 commits) measured the tuned config ~8%
-    SLOWER — when the batch fits the page cache, split scheduling
-    costs more than map-side parallelism buys.  The knob exists for
-    deployments where per-row map-side work dominates (remote object
-    storage, heavier normalization).  Runtime-settable conf — safe to
-    flip on a live session before starting the tailer.
-    """
-    spark.conf.set("spark.sql.files.maxPartitionBytes", max_partition_bytes)
-    spark.conf.set("spark.sql.files.openCostInBytes", open_cost)
-
-
 def tail_changelog(
     spark: SparkSession,
     changelog_dir: str,
@@ -255,6 +229,9 @@ def tail_changelog(
                 "lake_version": result.get("version"),
                 "skipped": result.get("skipped", False),
                 "touched_buckets": result.get("touched_buckets"),
+                "compacted_buckets": result.get("compacted_buckets"),
+                # the merge's phase seconds (plan/write/compact)
+                "timings": result.get("timings"),
                 "wall_time": time.time(),
             }
         )

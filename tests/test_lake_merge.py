@@ -125,6 +125,56 @@ def test_salt_without_batch_reduce_raises(spark, lake):
         lake.merge(batch, 0, salt_buckets=8, reduce_batch=False)
 
 
+def test_delta_write_rebalance_sized_to_batch(spark, lake, monkeypatch):
+    """The delta write is a bucket rebalance on the 4×-buckets fan that
+    AQE coalesces to the batch: a 2k-row commit writes in at most
+    shuffle-partitions tasks, and each touched bucket still lands whole
+    in one task — exactly one delta file per bucket."""
+    import pathlib
+    import re
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    events = gen_events_pandas(0, 2000, seed=29, n_docs=1500)
+    batch = prepare_batch(_spark_events(spark, events))
+    sc = spark.sparkContext
+    sc.setJobGroup("delta-write-shape", "one 2k-row merge commit")
+    try:
+        r = lake.merge(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    (plan,) = plans
+    fan = re.search(
+        r"Exchange hashpartitioning\(_bucket#\d+L?, (\d+)\), REBALANCE_PARTITIONS_BY_COL",
+        plan,
+    )
+    assert fan, plan
+    assert int(fan.group(1)) == 4 * lake.num_buckets
+
+    # the status store is fed by the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    write_job = st.getJobInfo(max(st.getJobIdsForGroup("delta-write-shape")))
+    write_stage = st.getStageInfo(max(write_job.stageIds))
+    assert write_stage.numTasks <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    out = pathlib.Path(lake.root) / "data" / f"c{r['version']:06d}"
+    per_bucket = [len(list(d.glob("*.parquet"))) for d in out.glob("_bucket=*")]
+    assert len(per_bucket) == r["touched_buckets"] > 1
+    assert set(per_bucket) == {1}
+    assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
+
+
 def _data_bytes(lake) -> int:
     import pathlib
 
@@ -368,6 +418,80 @@ def test_read_keys_prunes_to_key_buckets(spark, lake):
     touched = set(lake.read_keys(live + dead).inputFiles())
     every = set(lake.read_raw().inputFiles())
     assert touched and touched < every
+
+
+def test_read_keys_integer_key_lake(spark, tmp_path):
+    """``read_keys`` on a long-keyed lake (the ``_events_lake`` shape of
+    the driver queries) with duplicate, tombstoned and absent keys:
+    rows equal a pandas LWW oracle, and the scan stays inside the
+    ``_bucket=`` directories ``_bucket_col`` assigns to the keys — the
+    literal-key bucket job agrees with the write path for non-string
+    keys."""
+    import re
+
+    import numpy as np
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    schema = StructType(
+        [
+            StructField("user_id", LongType()),
+            StructField("event_type", StringType()),
+            StructField("value", DoubleType()),
+        ]
+    )
+    lake = HashLakeTable.create(
+        spark, str(tmp_path / "events_lake"), schema, key="user_id", num_buckets=8
+    )
+    rng = np.random.default_rng(13)
+    n = 600
+    events = pd.DataFrame(
+        {
+            "user_id": rng.integers(0, 80, n),
+            "_evseq": np.arange(n),
+            "event_type": rng.choice(["click", "view", "error"], n),
+            "value": rng.random(n),
+        }
+    )
+    # user 3's last event is an error → tombstoned
+    tomb = {"user_id": [3], "_evseq": [n], "event_type": ["error"], "value": [0.0]}
+    events = pd.concat([events, pd.DataFrame(tomb)], ignore_index=True)
+    events["op"] = np.where(events["event_type"] == "error", "delete", "upsert")
+    first = events._evseq <= n // 2
+    for bid, part in enumerate((events[first], events[~first])):
+        lake.merge(spark.createDataFrame(part), bid, seq="_evseq", op="op")
+
+    last = events.sort_values("_evseq").groupby("user_id").tail(1)
+    live = last[last.op != "delete"]
+    present = [int(k) for k in live["user_id"].iloc[:4]]
+    keys = present + [present[0], 3, 10_000, 3]
+    got = lake.read_keys(keys).toPandas()
+    want = live[live.user_id.isin(keys)][["user_id", "event_type", "value"]]
+    assert_pdf_equal(got, want, key="user_id")
+
+    key_df = spark.createDataFrame([(k,) for k in keys], StructType([schema["user_id"]]))
+    assigned = {r[0] for r in key_df.select(lake._bucket_col()).collect()}
+    scanned = {
+        int(re.search(r"_bucket=(\d+)/", f).group(1))
+        for f in lake.read_keys(keys).inputFiles()
+    }
+    # where the write path put the requested keys' rows
+    written = {
+        r["_bucket"]
+        for c in (tmp_path / "events_lake" / "data").glob("c*")
+        for r in spark.read.parquet(str(c))
+        .filter(F.col("user_id").isin(keys))
+        .select("_bucket")
+        .collect()
+    }
+    assert written <= scanned <= assigned
+    assert len(assigned) < lake.num_buckets
 
 
 def test_read_keys_empty_list(spark, lake):

@@ -42,7 +42,20 @@ def test_stream_replay_equals_oracle(spark, tmp_path, lake):
     # metrics: one line per microbatch with throughput + lineage
     lines = [json.loads(l) for l in (tmp_path / "metrics.jsonl").read_text().splitlines()]
     assert len(lines) >= 3
-    assert all("events_per_sec" in l and "lake_version" in l for l in lines)
+    assert {frozenset(l) for l in lines} == {
+        frozenset(
+            {
+                "batch_id", "rows_in", "min_seq", "max_seq", "lag_sec",
+                "events_per_sec", "seconds", "lake_version", "skipped",
+                "touched_buckets", "compacted_buckets", "timings", "wall_time",
+            }
+        )
+    }
+    assert all(
+        set(l["timings"]) == {"plan_sec", "write_sec", "compact_sec"}
+        and l["compacted_buckets"] >= 0
+        for l in lines
+    )
     assert sum(l["rows_in"] for l in lines) == 3000
 
 

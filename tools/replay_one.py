@@ -42,7 +42,6 @@ from investigraph_etl_spark.streaming.tailer import (  # noqa: E402
     change_schema,
     prepare_batch,
     target_schema,
-    tune_ingest_scan,
 )
 
 
@@ -65,10 +64,9 @@ def main() -> None:
     # table bucket count.  The executor-scaling experiment sets this to
     # 32/K per slice: a K-executor cluster keeps ONE 32-bucket table
     # and each executor owns the bucket subset its keys hash into, so
-    # the K slice lakes together have exactly the baseline's layout
-    # (and the write fan per executor shrinks with the cluster, as it
-    # does for real — 128 write tasks for a quarter-size slice was a
-    # measured ~2.6s fixed floor that no cluster would pay).
+    # the K slice lakes together have exactly the baseline's layout.
+    # The delta write's task count follows the batch, not the bucket
+    # count: AQE coalesces its 4×-buckets rebalance to the slice's size.
     num_buckets = int(os.environ.get("SPARK_GRAFT_NUM_BUCKETS", "32"))
     spark = get_spark(
         f"replay{cores}",
@@ -82,14 +80,6 @@ def main() -> None:
             ),
         },
     )
-
-    # ingest-path scan splits: OFF by default — measured ~8% SLOWER on
-    # this host (8M events / 16 commits, interleaved A/B: 40.0-41.1s
-    # tuned vs 37.1-38.4s default); split scheduling costs more than
-    # the map-side parallelism buys when the batch fits the page cache.
-    # SPARK_GRAFT_INGEST_SPLITS=1 opts in (see tune_ingest_scan).
-    if os.environ.get("SPARK_GRAFT_INGEST_SPLITS", "0") == "1":
-        tune_ingest_scan(spark)
 
     # --- warmup: full code path, small log
     warm_log = f"{work}/warm_log"
