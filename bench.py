@@ -2,7 +2,8 @@
 """Benchmark harness (driver contract + north-rule scaling evidence).
 
 Phase 1 — headline queries from ``__spark_entry__.queries()`` at
-``$SPARK_GRAFT_SF_DIR`` (default sf0.1) on ``local[$SPARK_GRAFT_CPUS]``.
+``$SPARK_GRAFT_SF_DIR`` (default sf0.1) on ``local[$SPARK_GRAFT_CPUS]``
+(default: the cores this process may run on).
 
 Phase 2 — CDC merge-apply throughput: a deterministic synthetic
 changelog replayed through normalize → LWW → lake MERGE at TWO
@@ -739,7 +740,7 @@ def measure_scaling_pair(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 

@@ -41,7 +41,23 @@ _ENGINE_CONF: dict[str, str] = {
     # visible, so un-manifested partials are unreadable and vacuum()
     # removes them.
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
+    # the lake hands spark.read.parquet the exact data files its manifest
+    # names; above this many paths (default 32) Spark lists them in a
+    # distributed job with one task per path, which in local[N] runs in
+    # the same JVM anyway.  Traced perfbench cdc run (seed 1, 32 buckets,
+    # 3 change feeds whose from ∪ range scans name 64/96/128 files): the
+    # feeds ran 318 Spark tasks at the default, 288 of them listing, and
+    # 30 at 1024.  The listing job also broke the feed's "building
+    # launches no job" shape.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
 }
+
+
+def default_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]``, or ``local[<cores this process may
+    run on>]`` when the variable is unset or empty."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
 
 
 def get_spark(
@@ -52,13 +68,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to :func:`default_master`.
     ``shuffle_partitions`` defaults to the local core count — on a real
     cluster pass ~2-3× total executor cores instead.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = default_master()
     if shuffle_partitions is None:
         # local[N] → N; local[*] → cpu count
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"

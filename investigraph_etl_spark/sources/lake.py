@@ -55,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import re
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -74,6 +75,14 @@ _INTERNAL = [
 # stored per row but not part of the public read_raw contract: the
 # version of the commit that wrote the row (LWW tie-break across files)
 _COMMIT = StructField("_commit", LongType(), True)
+
+# a data file's writing commit, from its ``c%06d`` (delta) or
+# ``c%06dx``/``c%06da`` (compaction) directory.  \d{6,}: versions are
+# zero-padded to six digits but NOT capped at six — past commit 999,999
+# f"c{v:06d}" emits 7+ digits and a fixed-width match would miss it.
+_COMMIT_DIR = re.compile(r"c(\d{6,})[xa]?(?=/|$)")
+# a data file's bucket; group 1 is set for compaction outputs
+_FILE_BUCKET = re.compile(r"c\d{6,}(x|a)?/_bucket=(\d+)/")
 
 
 class SchemaCompatibilityError(ValueError):
@@ -597,12 +606,7 @@ class HashLakeTable:
         compaction).  Every row in a file has ``_commit`` ≤ this
         version, so files at version ≤ v cannot contain rows committed
         after v — the file-level pruning :meth:`read_changes` uses."""
-        import re
-
-        # \d{6,} — versions are zero-padded to six digits but NOT capped
-        # at six: past commit 999,999 f"c{v:06d}" emits 7+ digits and a
-        # fixed-width match would miss it (change feed would hard-break).
-        m = re.findall(r"c(\d{6,})[xa]?(?=/|$)", path)
+        m = _COMMIT_DIR.findall(path)
         if not m:
             raise ValueError(f"not a lake data file path: {path}")
         return int(m[-1])
@@ -678,24 +682,28 @@ class HashLakeTable:
 
         ``columns`` restricts the payload to the listed columns (the
         key is always included) — pass exactly what the consumer
-        aggregates so BOTH scans prune to narrow columns.  A derived
+        aggregates so every scan prunes to narrow columns.  A derived
         view over two small columns then never touches the token
         arrays, which is the difference between a metadata-weight and
         a full-table-weight refresh when uniform batches touch every
         bucket.
 
-        Scale shape.  (1) Range side ∝ changes: only files whose
-        writing commit is > ``from_version`` can hold range rows
-        (delta dirs are per-commit; compaction outputs preserve each
-        row's original ``_commit``), with the row-level ``_commit``
-        range filter on top for compacted files that mix old rows in.
-        (2) From-state side ∝ touched buckets' row count over the
-        NARROW requested columns only — point-update workloads prune
-        to few buckets; uniform batches touch all of them, but the
-        scan stays metadata-weight because the heavy payload columns
-        are never read (measured in BENCH.md).  Requires both
-        manifests retained (same retention contract as :meth:`vacuum`
-        / time travel).
+        Scale shape: the feed reads only the range files (those whose
+        writing commit is > ``from_version``: per-commit delta dirs, or
+        compaction outputs, which keep each row's original ``_commit``)
+        and the from-state files of the buckets they touch.  ONE narrow
+        aggregate over ``from ∪ range`` — key and the internal columns
+        only — yields each key's range winner and from-state winner;
+        ONE join fetches the winners' payload from the range files, and
+        preimage feeds add one join for the from-state payload.  The
+        range side is ∝ changes; the from-state side is ∝ the touched
+        buckets' row count, and a net feed reads only the key and the
+        internal columns there (metadata-weight), while a preimage feed
+        also reads the requested payload columns.  Building the feed
+        runs no Spark job when the range is pure delta files (the
+        touched buckets read off the ``_bucket=N`` paths).  Requires
+        both manifests retained (same retention contract as
+        :meth:`vacuum` / time travel).
         """
         to_version = self.version if to_version is None else to_version
         if from_version > to_version:
@@ -729,100 +737,99 @@ class HashLakeTable:
             ]
         if not files:
             return empty
-        # explicit early projection: everything downstream (LWW, join,
-        # output) needs only the requested payload + internals, and the
-        # explicit select guarantees the parquet scan prunes to them
-        range_rows = (
-            self._scan(files, pay_to)
-            .select(*pay_cols, "_seq", "_deleted", "_commit")
-            .filter(
-                (F.col("_commit") > F.lit(from_version))
-                & (F.col("_commit") <= F.lit(to_version))
-            )
+        key = self.key
+        in_range = (F.col("_commit") > F.lit(from_version)) & (
+            F.col("_commit") <= F.lit(to_version)
         )
-        w = self._lww(range_rows)
-        # touched buckets for the from-state scan — bounded by
-        # num_buckets either way.  Fast path: a pure-delta file set
-        # (no compaction outputs) is per-commit-per-bucket by
-        # construction, so the bucket set reads straight off the
-        # ``_bucket=N`` path components — zero Spark jobs, which is
-        # what keeps a per-micro-batch derived-view refresh at one
-        # aggregation job.  Compacted files mix buckets' history, so
-        # there the precise narrow distinct job runs instead (a
+        # touched buckets, bounded by num_buckets either way.  A pure
+        # delta file set is per-commit-per-bucket by construction, so
+        # the set reads straight off the ``_bucket=N`` paths with no
+        # Spark job.  Compacted files mix a bucket's history, so there
+        # a narrow distinct job over the range rows runs instead (a
         # path-derived set would degrade to all buckets after a full
         # compact and void the pruning).
-        import re
-
-        delta_pat = re.compile(r"c\d{6,}(x|a)?/_bucket=(\d+)/")
-        marks = [delta_pat.search(f) for f in files]
+        marks = [_FILE_BUCKET.search(f) for f in files]
         if all(m is not None and m.group(1) is None for m in marks):
             touched = sorted({int(m.group(2)) for m in marks})
         else:
             touched = sorted(
                 r["b"]
-                for r in w.select(self._bucket_col().cast("int").alias("b"))
+                for r in self._scan(files, pay_to)
+                .filter(in_range)
+                .select(self._bucket_col().cast("int").alias("b"))
                 .distinct()
                 .collect()
             )
-        man_from = self._manifest_at(from_version)
-        pay_from = StructType.fromJson(man_from["schema"])
-        pre_cols = [
-            f.name
-            for f in pay_from.fields
-            if f.name != self.key and f.name in pay_cols
-        ]
-        s_sel = [
-            F.col(self.key).alias("_s_key"),
-            F.col("_seq").alias("_s_seq"),
-            F.col("_commit").alias("_s_commit"),
-            F.col("_deleted").alias("_s_deleted"),
-        ]
-        if include_preimage:
-            # the preimage shape needs the from-state payload; columns
-            # added after from_version read as null in the preimage
-            s_sel += [F.col(c).alias(f"_s_{c}") for c in pre_cols]
-        # explicit early projection (same guarantee as the range side):
-        # without preimages the from state is metadata-narrow; with
-        # them it adds only the REQUESTED payload columns — never the
-        # rest of the row
-        s_scan = self._scan(
-            self._bucket_files(touched, man_from), pay_from
-        ).select(self.key, *pre_cols if include_preimage else [],
-                 "_seq", "_deleted", "_commit")
-        j = self._lww(s_scan).select(*s_sel)
-        j = w.join(j, w[self.key] == F.col("_s_key"), "left")
-        w_wins = F.col("_s_key").isNull() | (
-            F.struct(F.col("_seq"), F.col("_commit"))
-            > F.struct(F.col("_s_seq"), F.col("_s_commit"))
+        # every scan reads with the to-version schema: columns added
+        # after from_version read back as null from the old files
+        # (additive evolution), so preimages of them are null
+        old_files = self._bucket_files(touched, self._manifest_at(from_version))
+        # one aggregate over from ∪ range picks both winners per key.  A
+        # range file may hold rows with _commit <= from (compaction
+        # outputs written after from, fallback path only); each is a
+        # copy of the key's from-state winner, so _s is unchanged.
+        # _commit splits the two sides, so (_seq, _commit) never ties
+        # between _w and _s.
+        order = F.struct("_seq", "_commit", "_deleted")
+        state = (
+            self._scan(old_files + files, pay_to)
+            .select(key, "_seq", "_commit", "_deleted")
+            .groupBy(key)
+            .agg(
+                F.max(F.when(in_range, order)).alias("_w"),
+                F.max(
+                    F.when(F.col("_commit") <= F.lit(from_version), order)
+                ).alias("_s"),
+            )
         )
-        s_live = F.col("_s_key").isNotNull() & ~F.col("_s_deleted")
-        filtered = (
-            j.filter(w_wins)
+        s_live = F.col("_s").isNotNull() & ~F.col("_s._deleted")
+        changed = state.filter(
+            F.col("_w").isNotNull()
+            & (F.col("_s").isNull() | (F.col("_w") > F.col("_s")))
             # a delete of a key that was not live at from_version is a
             # no-op for net-diff consumers
-            .filter(~(F.col("_deleted") & ~s_live))
+            & ~(F.col("_w._deleted") & ~s_live)
+        ).select(key, "_w.*", "_s")
+        # the winners' payload, from the range files only; the join
+        # strategy is left to Catalyst/AQE, as in _lww
+        post = (
+            self._scan(files, pay_to)
+            .select(*pay_cols, "_seq", "_commit")
+            .filter(in_range)
         )
+        j = changed.join(post, on=[key, "_seq", "_commit"])
         if not include_preimage:
             change = (
                 F.when(~s_live, F.lit("insert"))
                 .when(F.col("_deleted"), F.lit("delete"))
                 .otherwise(F.lit("update"))
             )
-            return filtered.select(*pay_cols, change.alias("_change_type"))
+            return j.select(*pay_cols, change.alias("_change_type"))
+
+        # the preimage shape: the from-state winner's payload, from the
+        # old files, over the REQUESTED payload columns only
+        pre_cols = [c for c in pay_cols if c != key]
+        s_rows = self._scan(old_files, pay_to).select(
+            F.col(key).alias("_s_key"),
+            F.col("_seq").alias("_s_seq"),
+            F.col("_commit").alias("_s_commit"),
+            *[F.col(c).alias(f"_s_{c}") for c in pre_cols],
+        )
+        j = j.join(
+            s_rows,
+            (F.col(key) == F.col("_s_key"))
+            & (F.col("_s._seq") == F.col("_s_seq"))
+            & (F.col("_s._commit") == F.col("_s_commit")),
+            "left",
+        )
 
         def _mk(change_type: str, pre: bool):
             """One feed row as a struct: key + payload (from- or
-            to-state) + change type, cast to the to-version schema so
-            every ``when`` branch agrees on the struct type."""
-            vals = []
-            for c in pay_cols:
-                if c == self.key:
-                    src = F.col(self.key)
-                elif pre:
-                    src = F.col(f"_s_{c}") if c in pre_cols else F.lit(None)
-                else:
-                    src = F.col(c)
-                vals.append(src.cast(pay_to[c].dataType).alias(c))
+            to-state) + change type."""
+            vals = [
+                F.col(f"_s_{c}" if pre and c != key else c).alias(c)
+                for c in pay_cols
+            ]
             vals.append(F.lit(change_type).alias("_change_type"))
             return F.struct(*vals)
 
@@ -835,7 +842,7 @@ class HashLakeTable:
                 )
             )
         )
-        return filtered.select(F.explode(rows).alias("_r")).select("_r.*")
+        return j.select(F.explode(rows).alias("_r")).select("_r.*")
 
     # --------------------------------------------------------- evolve
     def add_columns(self, new_fields: list[StructField]) -> None:

@@ -578,3 +578,144 @@ def test_changes_column_projection_prunes_and_matches(spark, lake):
     assert_rows_equal(feed.toPandas(), exp)
     with pytest.raises(ValueError, match="unknown"):
         lake.read_changes(v1, columns=["nope"])
+
+
+def test_changes_build_runs_no_job_and_plans_one_aggregate(spark, lake):
+    """The feed's plan shape.  Building it launches no Spark job — the
+    touched buckets of a pure-delta range come off the file paths, and
+    a from-state of more than 32 files is not listed by a distributed
+    job.  The net feed scans parquet twice (from ∪ range, narrow; the
+    range payload) under one aggregate (partial + final) and one join;
+    the preimage feed adds one scan and one join for the from-state
+    payload."""
+    import re
+
+    events = gen_events_pandas(0, 3000, seed=73, n_docs=400)
+    chunks = [events.iloc[i::6] for i in range(6)]
+    versions = [
+        lake.merge(prepare_batch(_spark_events(spark, c)), b)["version"]
+        for b, c in enumerate(chunks)
+    ]
+    vf = versions[-2]
+    assert len(lake._bucket_files(None, lake._manifest_at(vf))) > 32
+    sc = spark.sparkContext
+    sc.setJobGroup("feed-build", "build the change feeds")
+    try:
+        net = lake.read_changes(vf)
+        pre = lake.read_changes(vf, include_preimage=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("feed-build")) == []
+
+    def shape(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return (
+            plan.count("FileScan parquet"),
+            len(re.findall(r"\w+Aggregate\(", plan)),
+            len(re.findall(r"partial_max\(", plan)),
+            len(re.findall(r"\w+Join ", plan)),
+        )
+
+    # 2 partial_max: the range winner and the from-state winner
+    assert shape(net) == (2, 2, 2, 1)
+    assert shape(pre) == (3, 2, 2, 2)
+    ev_from = pd.concat(chunks[:-1])
+    assert_pdf_equal(net.toPandas(), oracle_changes(ev_from, events))
+    assert_rows_equal(pre.toPandas(), oracle_changes_preimage(ev_from, events))
+
+
+def _truncate_lineage(lake: HashLakeTable) -> None:
+    """Empty every persisted manifest's lineage, so read_changes takes
+    its manifest-file fallback for any range."""
+    import json
+    import pathlib
+
+    for mp in (pathlib.Path(lake.root) / "manifests").glob("v*.json"):
+        doc = json.loads(mp.read_text())
+        doc["lineage"] = []
+        mp.write_text(json.dumps(doc))
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("seed", [81, 82, 83, 84])
+def test_changes_property_vs_oracle(spark, tmp_path, seed):
+    """Seeded random histories against the pandas oracles.  Each event
+    lands in a random commit, so later commits carry late losers
+    against earlier winners; the generator's deletes leave tombstones.
+    Commits fold their buckets sync or async at a delta depth of 2,
+    some are followed by a full compact, and the history ends in one.
+    Feeds for random (from, to) pairs — net, preimage and a projected
+    preimage feed — must equal the oracles, first on the
+    commit-addressed delta path and then, with the lineage truncated,
+    on the manifest-file fallback.  The fallback scans compaction
+    outputs written after ``from`` that hold copies of from-state
+    winners (rows with ``_commit <= from``); the feed's one aggregate
+    over from ∪ range must still pick the same winners."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    events = gen_events_pandas(
+        0, 900, seed=seed, n_docs=90, dirty_frac=0.1
+    ).reset_index(drop=True)
+    n_commits = int(rng.integers(4, 7))
+    assign = rng.permutation(np.arange(len(events)) % n_commits)
+    mode = str(rng.choice(["sync", "async"]))
+    lake = HashLakeTable.create(
+        spark, str(tmp_path / "lake"), target_schema(), num_buckets=4
+    )
+    merged = {0: 0}  # version -> number of commits its state holds
+    for c in range(n_commits):
+        r = lake.merge(
+            prepare_batch(_spark_events(spark, events[assign == c])), c,
+            compact_mode=mode, auto_compact_deltas=2,
+            reduce_batch=bool(rng.integers(2)),
+        )
+        merged[r["version"]] = c + 1
+        if c < n_commits - 1 and rng.random() < 0.3:
+            merged[lake.compact()["version"]] = c + 1
+    lake.wait_for_compaction()
+    merged[lake.compact()["version"]] = n_commits
+
+    versions = sorted(merged)
+    pairs = {(int(rng.choice(versions[:-1])), versions[-1])}
+    while len(pairs) < 3:
+        a, b = sorted(rng.choice(versions, 2, replace=False))
+        pairs.add((int(a), int(b)))
+
+    def upto(v):
+        return events[assign < merged[v]]
+
+    proj = ["doc_id", "source", "_change_type"]
+
+    def check(vf, vt):
+        ev_from, ev_to = upto(vf), upto(vt)
+        assert_pdf_equal(
+            lake.read_changes(vf, vt).toPandas(), oracle_changes(ev_from, ev_to)
+        )
+        expected = oracle_changes_preimage(ev_from, ev_to)
+        assert_rows_equal(
+            lake.read_changes(vf, vt, include_preimage=True).toPandas(), expected
+        )
+        assert_rows_equal(
+            lake.read_changes(
+                vf, vt, include_preimage=True, columns=["source"]
+            ).toPandas(),
+            [{c: r[c] for c in proj} for r in expected],
+        )
+
+    for vf, vt in sorted(pairs):
+        check(vf, vt)
+    _truncate_lineage(lake)
+    for vf, vt in sorted(pairs):
+        check(vf, vt)
+    # the fallback range of the last pair-to-final includes the final
+    # full compact's outputs, whose rows mostly predate ``from``
+    vf = min(vf for vf, vt in pairs if vt == versions[-1])
+    scanned = lake.read_changes(vf).inputFiles()
+    assert any(
+        HashLakeTable._file_commit_version(f) > vf and "x/_bucket=" in f
+        for f in scanned
+    )
