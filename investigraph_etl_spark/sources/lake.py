@@ -25,14 +25,18 @@ was copy-on-write, whose per-commit write amplification O(table size /
 batch) was the top 100 TB killer flagged in VERDICT.md):
 * the table is bucketed by ``xxhash64(key) % num_buckets``; each
   bucket holds a *base* file set plus a list of *delta* file sets;
-* a MERGE writes the LWW-reduced batch as bucket-partitioned delta
-  files — **per-commit bytes written ∝ batch size**, never the table;
+* a MERGE writes the LWW-reduced batch as delta files, one per write
+  task (a micro-batch is one file per commit), each storing its rows'
+  ``_bucket`` and listed in the manifest under every bucket it holds —
+  **per-commit bytes written ∝ batch size**, never the table;
 * reads apply LWW over base ∪ deltas on ``(key, max(_seq, _commit))``
   — ``_commit`` (the writing commit's version, stored per row) breaks
   equal-``_seq`` ties in arrival order, exactly as the old COW union's
   ``_pref`` column did;
 * :meth:`compact` folds a bucket's deltas back into its base (the
-  Iceberg merge-on-read + ``rewrite_data_files`` analog); ``merge``
+  Iceberg merge-on-read + ``rewrite_data_files`` analog; a shared delta
+  file stays listed under its unfolded buckets, and reads drop its
+  folded buckets' rows, see :meth:`HashLakeTable._live`); ``merge``
   auto-compacts any touched bucket whose delta count reaches
   ``auto_compact_deltas``, so read amplification is bounded and
   compaction cost is amortized 1/``auto_compact_deltas`` per commit;
@@ -81,8 +85,9 @@ _COMMIT = StructField("_commit", LongType(), True)
 # zero-padded to six digits but NOT capped at six — past commit 999,999
 # f"c{v:06d}" emits 7+ digits and a fixed-width match would miss it.
 _COMMIT_DIR = re.compile(r"c(\d{6,})[xa]?(?=/|$)")
-# a data file's bucket; group 1 is set for compaction outputs
-_FILE_BUCKET = re.compile(r"c\d{6,}(x|a)?/_bucket=(\d+)/")
+# stored per row in delta files (a delta file may hold several
+# buckets); base files keep it in their directory name and read it as null
+_BUCKET = StructField("_bucket", LongType(), True)
 
 
 class SchemaCompatibilityError(ValueError):
@@ -218,8 +223,14 @@ class HashLakeTable:
 
         <root>/_latest                  # version pointer (atomic rename)
         <root>/manifests/v<NNNNNN>.json # schema, bucket→base/deltas, commits
-        <root>/data/c<version>/…        # delta files written by commit v
-        <root>/data/c<version>x/…       # compacted bases written at v
+        <root>/data/c<version>/*.parquet        # commit v's delta files
+        <root>/data/c<version>x/_bucket=<b>/…   # bucket b's base, folded at v
+
+    A delta file holds the rows of a whole write task, one or more
+    buckets, and stores each row's ``_bucket``; bucket b's manifest
+    lists it in b's delta sets for as long as b has not folded it.
+    A base file holds one bucket (its ``_bucket`` is the directory,
+    so it reads back as null).
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -371,7 +382,9 @@ class HashLakeTable:
         mdir = self.root / "manifests"
         return self._materialize(mdir, json.loads((mdir / f"v{v:06d}.json").read_text()))
 
-    def _harvest_file_stats(self, files: list[str]) -> dict[str, list]:
+    def _harvest_file_stats(
+        self, files: list[str], *, buckets: bool = False
+    ) -> tuple[dict[str, list], dict[str, list[int]]]:
         """Per-file ``[min, max]`` of the table key, read from parquet
         FOOTERS (no data scan — the Iceberg write-time column-stats
         analog, harvested instead of computed because the files were
@@ -384,6 +397,10 @@ class HashLakeTable:
         truncated min is still a valid lower bound and a truncated max
         a valid upper bound, so range pruning stays conservative.
 
+        With ``buckets``, also each file's sorted set of stored
+        ``_bucket`` values (one column read per file): the buckets whose
+        manifests list a new delta file.  Returns (stats, bucket sets).
+
         Footer reads are driver-SERIAL time on the commit path (a
         128-file delta write adds ~0.5s single-threaded — a pure
         serial-fraction tax the scaling pair pays at every core
@@ -391,9 +408,10 @@ class HashLakeTable:
         the GIL on I/O."""
         import concurrent.futures
 
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        def _one(f: str) -> tuple[str, list] | None:
+        def _key_range(f: str) -> list | None:
             try:
                 md = pq.ParquetFile(f).metadata
                 idx = md.schema.names.index(self.key)
@@ -411,12 +429,23 @@ class HashLakeTable:
                     gmax = gmax.decode("utf-8", "surrogateescape")
                 lo = gmin if lo is None else min(lo, gmin)
                 hi = gmax if hi is None else max(hi, gmax)
-            return None if lo is None else (f, [lo, hi])
+            return None if lo is None else [lo, hi]
+
+        def _one(f: str) -> tuple[str, list | None, list[int] | None]:
+            held = None
+            if buckets:
+                col = pq.read_table(f, columns=["_bucket"]).column(0)
+                held = sorted(pc.unique(col).to_pylist())
+            return f, _key_range(f), held
 
         if not files:
-            return {}
+            return {}, {}
         with concurrent.futures.ThreadPoolExecutor(max_workers=8) as pool:
-            return dict(r for r in pool.map(_one, files) if r is not None)
+            out = list(pool.map(_one, files))
+        return (
+            {f: st for f, st, _ in out if st is not None},
+            {f: held for f, _, held in out if held is not None},
+        )
 
     @staticmethod
     def _files_for_keys(
@@ -476,7 +505,8 @@ class HashLakeTable:
     def _bucket_files(
         self, buckets: list[int] | None = None, manifest: dict | None = None
     ) -> list[str]:
-        """Base + delta files for the given buckets (None = all)."""
+        """Base + delta files for the given buckets (None = all), each
+        once (a delta file may be listed under several buckets)."""
         manifest = manifest if manifest is not None else self._manifest
         bases = manifest["buckets"]
         deltas = manifest.get("deltas", {})
@@ -489,18 +519,63 @@ class HashLakeTable:
             out.extend(bases.get(k, []))
             for dset in deltas.get(k, []):
                 out.extend(dset)
-        return out
+        return list(dict.fromkeys(out))
 
-    def _scan(self, files: list[str], payload: StructType) -> DataFrame:
-        """Raw file scan (no LWW), stored schema incl. ``_commit``.
-        Explicit schema ⇒ files written before a column was added read
-        it back as null (additive evolution, SURVEY.md §2.9 T6)."""
+    def _scan(
+        self, files: list[str], payload: StructType, live: Column | None = None
+    ) -> DataFrame:
+        """Raw file scan (no LWW), stored schema incl. ``_commit`` and
+        ``_bucket``, keeping the rows ``live`` admits (see :meth:`_live`;
+        None keeps all).  Explicit schema ⇒ files written before a column
+        was added read it back as null (additive evolution, SURVEY.md
+        §2.9 T6)."""
         stored = StructType(
-            list(payload.fields) + list(_INTERNAL) + [_COMMIT]
+            list(payload.fields) + list(_INTERNAL) + [_COMMIT, _BUCKET]
         )
         if not files:
             return self.spark.createDataFrame([], stored)
-        return self.spark.read.schema(stored).parquet(*files)
+        rows = self.spark.read.schema(stored).parquet(*files)
+        return rows if live is None else rows.filter(live)
+
+    def _live(self, manifest: dict, buckets: list[int] | None) -> Column | None:
+        """The rows of ``manifest``'s files that a read of ``buckets``
+        (None = all) may see.  A delta file is shared by the buckets it
+        holds, and a fold of bucket b consumes b's delta sets while the
+        file stays listed under b's unfolded neighbours, so its b rows
+        go stale.  A fold writes b's base at a version x(b) such that
+        every delta set it consumed is ≤ x(b) and every one still listed
+        or appended later is > x(b) (sync merges, async merges and
+        :meth:`compact` alike).  Hence a row with a stored ``_bucket`` b
+        is live iff b is requested and ``_commit`` > x(b) (−1 when b has
+        no base).  Base rows read ``_bucket`` as null and are live;
+        delta files written before ``_bucket`` was stored also read
+        null, and each holds one bucket, so the rule stays right.
+
+        Returns None (no filter) for a full read when no listed delta
+        file is as old as the newest base, so it holds no stale row."""
+        bases = manifest["buckets"]
+        want = range(manifest["num_buckets"]) if buckets is None else buckets
+        folded_at = {
+            int(b): self._file_commit_version(bases[str(b)][0])
+            if bases.get(str(b)) else -1
+            for b in want
+        }
+        if buckets is None:
+            newest = max(folded_at.values(), default=-1)
+            if all(
+                self._file_commit_version(f) > newest
+                for dsets in manifest.get("deltas", {}).values()
+                for ds in dsets
+                for f in ds
+            ):
+                return None
+        by_version: dict[int, list[int]] = {}
+        for b, x in folded_at.items():
+            by_version.setdefault(x, []).append(b)
+        live = F.col("_bucket").isNull()
+        for x, bs in sorted(by_version.items()):
+            live = live | (F.col("_bucket").isin(bs) & (F.col("_commit") > x))
+        return live
 
     def _lww(self, rows: DataFrame) -> DataFrame:
         """The read-time LWW rule: per key, the row with the max
@@ -519,15 +594,6 @@ class HashLakeTable:
         agree on."""
         return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.num_buckets))
 
-    @staticmethod
-    def _bucket_outputs(out_dir: pathlib.Path) -> dict[str, list[str]]:
-        """Bucket → sorted parquet files of a ``partitionBy("_bucket")``
-        write (its directory listing — no Spark job)."""
-        return {
-            bdir.name.split("=", 1)[1]: sorted(str(p) for p in bdir.glob("*.parquet"))
-            for bdir in out_dir.glob("_bucket=*")
-        }
-
     def read_raw(
         self,
         buckets: list[int] | None = None,
@@ -541,7 +607,8 @@ class HashLakeTable:
         snapshot's file set AND its schema as of that version)."""
         manifest = self._manifest if version is None else self._manifest_at(version)
         payload = StructType.fromJson(manifest["schema"])
-        merged = self._lww(self._scan(self._bucket_files(buckets, manifest), payload))
+        files = self._bucket_files(buckets, manifest)
+        merged = self._lww(self._scan(files, payload, self._live(manifest, buckets)))
         return merged.select(
             *[f.name for f in payload.fields], *[f.name for f in _INTERNAL]
         )
@@ -559,17 +626,23 @@ class HashLakeTable:
     def read_keys(self, keys: list[str]) -> DataFrame:
         """Point / multi-key lookup with two pruning layers:
 
-        1. **bucket pruning** — scan only the buckets the keys hash
-           into (the same ``xxhash64`` expression the merge path
-           clusters by, evaluated in ONE single-task job over the key
-           literals, bounded by ``len(keys)`` never table size);
-        2. **file skipping** — within those buckets, drop every file
+        1. **bucket pruning** — scan only the files the manifest lists
+           under the buckets the keys hash into (the same ``xxhash64``
+           expression the merge path clusters by, evaluated in ONE
+           single-task job over the key literals, bounded by
+           ``len(keys)`` never table size).  Bases are per bucket, so
+           they prune per bucket; delta files are per write task, so
+           they prune at that granularity — a micro-batch's one file
+           is read whole and :meth:`_live` drops its other buckets'
+           rows;
+        2. **file skipping** — within those files, drop every file
            whose manifest ``[min,max]`` key range excludes all
            requested keys (footer stats harvested at write time, see
            :meth:`_harvest_file_stats`).  Compacted bases are
            key-sorted and optionally range-rolled, so after compaction
            a single-key fetch reads O(1) base files of ONE bucket —
-           at 100 TB that is megabytes, not the lake.
+           at 100 TB the bases hold the bytes, so that is megabytes,
+           not the lake.
 
         Pruning never changes LWW winners: a skipped file contains no
         version of any requested key.  Tombstoned keys return no row,
@@ -592,8 +665,9 @@ class HashLakeTable:
             self._manifest.get("file_stats", {}),
             list(keys),
         )
+        live = self._live(self._manifest, buckets)
         return (
-            self._lww(self._scan(files, self.schema))
+            self._lww(self._scan(files, self.schema, live))
             .filter(~F.col("_deleted"))
             .filter(F.col(self.key).isin(list(keys)))
             .select(*cols)
@@ -613,38 +687,41 @@ class HashLakeTable:
 
     def _range_delta_files(
         self, man_to: dict, from_version: int, to_version: int
-    ) -> list[str] | None:
-        """Commit-addressed range file list: each merge commit in
-        ``(from, to]`` contributed exactly the files in its own delta
-        dir (``c%06d``, named by the manifest lineage), so scanning
-        those dirs yields the range rows WITHOUT touching compaction
-        outputs — whose row-level ``_commit`` filter would otherwise
-        degrade to a narrow full-table scan (compaction writes rows
-        unsorted, so parquet row-group stats cannot skip on
-        ``_commit``; measured as 2-3× refresh spikes after every fold,
-        BENCH.md).  Vacuum's contiguous last-K retention means the
-        feed's existing contract (the FROM manifest is retained)
-        already keeps every range commit's delta files alive: each is
-        referenced by its own, newer, also-retained manifest.
+    ) -> tuple[list[str], list[int]] | None:
+        """Commit-addressed range: the delta files each merge commit in
+        ``(from, to]`` wrote and the buckets they hold, both recorded
+        in the manifest lineage (``files``, ``touched_buckets``).
+        Scanning those files yields the range rows, each once, WITHOUT
+        touching compaction outputs — whose row-level ``_commit``
+        filter would otherwise degrade to a narrow full-table scan
+        (compaction writes rows unsorted, so parquet row-group stats
+        cannot skip on ``_commit``; measured as 2-3× refresh spikes
+        after every fold, BENCH.md).  Vacuum's contiguous last-K
+        retention means the feed's existing contract (the FROM manifest
+        is retained) already keeps every range commit's delta files
+        alive: each is referenced by its own, newer, also-retained
+        manifest.
 
         Returns ``None`` — caller falls back to the manifest file set
         + ``_commit`` row filter — when the lineage window (last 200
-        commits) doesn't reach back to ``from_version``, or when a
-        dir's files don't match its recorded touched buckets
-        (defensive: unexpected vacuum)."""
+        commits) doesn't reach back to ``from_version``, when an entry
+        has no ``files`` (written before they were recorded), or when a
+        recorded file is gone (defensive: unexpected vacuum)."""
         lin = man_to.get("lineage", [])
         if not lin or min(e["version"] for e in lin) > from_version + 1:
             return None
         files: list[str] = []
+        touched: set[int] = set()
         for e in lin:
-            v = e["version"]
-            if not (from_version < v <= to_version):
+            if not (from_version < e["version"] <= to_version):
                 continue
-            got = self._bucket_outputs(self.root / "data" / f"c{v:06d}")
-            if {int(b) for b in got} != set(e.get("touched_buckets", [])):
+            if "files" not in e:
                 return None
-            files += sorted(f for fl in got.values() for f in fl)
-        return files
+            files += e["files"]
+            touched.update(e["touched_buckets"])
+        if not all(os.path.exists(f) for f in files):
+            return None
+        return files, sorted(touched)
 
     def read_changes(
         self,
@@ -689,21 +766,25 @@ class HashLakeTable:
         bucket.
 
         Scale shape: the feed reads only the range files (those whose
-        writing commit is > ``from_version``: per-commit delta dirs, or
-        compaction outputs, which keep each row's original ``_commit``)
-        and the from-state files of the buckets they touch.  ONE narrow
-        aggregate over ``from ∪ range`` — key and the internal columns
-        only — yields each key's range winner and from-state winner;
-        ONE join fetches the winners' payload from the range files, and
-        preimage feeds add one join for the from-state payload.  The
+        writing commit is > ``from_version``: the range commits' delta
+        files, or compaction outputs, which keep each row's original
+        ``_commit``) and the from-state files of the buckets they
+        touch.  ONE narrow aggregate over ``from ∪ range`` — key and the
+        internal columns only — yields each key's range winner and
+        from-state winner; ONE join fetches the winners' payload from
+        the range files, and preimage feeds add one join for the
+        from-state payload.  The
         range side is ∝ changes; the from-state side is ∝ the touched
         buckets' row count, and a net feed reads only the key and the
         internal columns there (metadata-weight), while a preimage feed
-        also reads the requested payload columns.  Building the feed
+        also reads the requested payload columns.  A from-state delta
+        file is shared by the buckets it holds, so that side also reads
+        the untouched buckets' rows of the files it names; they have no
+        range winner and drop out of the aggregate.  Building the feed
         runs no Spark job when the range is pure delta files (the
-        touched buckets read off the ``_bucket=N`` paths).  Requires
-        both manifests retained (same retention contract as
-        :meth:`vacuum` / time travel).
+        touched buckets come from the lineage).  Requires both
+        manifests retained (same retention contract as :meth:`vacuum` /
+        time travel).
         """
         to_version = self.version if to_version is None else to_version
         if from_version > to_version:
@@ -728,30 +809,35 @@ class HashLakeTable:
         )
         if from_version == to_version:
             return empty
-        files = self._range_delta_files(man_to, from_version, to_version)
-        if files is None:
+        # the range side: the range commits' delta files with their
+        # touched buckets off the lineage (no Spark job), or else the
+        # to-manifest's files written after from
+        delta = self._range_delta_files(man_to, from_version, to_version)
+        if delta is not None:
+            files, touched = delta
+        else:
             files = [
                 f
                 for f in self._bucket_files(None, man_to)
                 if self._file_commit_version(f) > from_version
             ]
+            touched = None
         if not files:
             return empty
         key = self.key
         in_range = (F.col("_commit") > F.lit(from_version)) & (
             F.col("_commit") <= F.lit(to_version)
         )
-        # touched buckets, bounded by num_buckets either way.  A pure
-        # delta file set is per-commit-per-bucket by construction, so
-        # the set reads straight off the ``_bucket=N`` paths with no
-        # Spark job.  Compacted files mix a bucket's history, so there
-        # a narrow distinct job over the range rows runs instead (a
-        # path-derived set would degrade to all buckets after a full
-        # compact and void the pruning).
-        marks = [_FILE_BUCKET.search(f) for f in files]
-        if all(m is not None and m.group(1) is None for m in marks):
-            touched = sorted({int(m.group(2)) for m in marks})
-        else:
+        # on the delta path each range file is read once and all its
+        # rows are range changes, so the payload scan needs no stale-row
+        # filter; the fallback may list a shared delta file beside the
+        # base that folded part of it
+        live_to = None
+        if touched is None:
+            live_to = self._live(man_to, None)
+            # compacted files mix a bucket's history, so a narrow
+            # distinct job over the range rows names the touched
+            # buckets (bounded by num_buckets)
             touched = sorted(
                 r["b"]
                 for r in self._scan(files, pay_to)
@@ -763,13 +849,16 @@ class HashLakeTable:
         # every scan reads with the to-version schema: columns added
         # after from_version read back as null from the old files
         # (additive evolution), so preimages of them are null
-        old_files = self._bucket_files(touched, self._manifest_at(from_version))
+        man_from = self._manifest_at(from_version)
+        old_files = self._bucket_files(touched, man_from)
         # one aggregate over from ∪ range picks both winners per key.  A
         # range file may hold rows with _commit <= from (compaction
         # outputs written after from, fallback path only); each is a
-        # copy of the key's from-state winner, so _s is unchanged.
-        # _commit splits the two sides, so (_seq, _commit) never ties
-        # between _w and _s.
+        # copy of the key's from-state winner, so _s is unchanged.  A
+        # stale row of a shared delta file (see _live) is a copy of, or
+        # loses to, its bucket's base winner, so neither max moves and
+        # the aggregate needs no filter.  _commit splits the two sides,
+        # so (_seq, _commit) never ties between _w and _s.
         order = F.struct("_seq", "_commit", "_deleted")
         state = (
             self._scan(old_files + files, pay_to)
@@ -793,7 +882,7 @@ class HashLakeTable:
         # the winners' payload, from the range files only; the join
         # strategy is left to Catalyst/AQE, as in _lww
         post = (
-            self._scan(files, pay_to)
+            self._scan(files, pay_to, live_to)
             .select(*pay_cols, "_seq", "_commit")
             .filter(in_range)
         )
@@ -807,9 +896,12 @@ class HashLakeTable:
             return j.select(*pay_cols, change.alias("_change_type"))
 
         # the preimage shape: the from-state winner's payload, from the
-        # old files, over the REQUESTED payload columns only
+        # old files' live rows (a stale copy would join twice), over the
+        # REQUESTED payload columns only
         pre_cols = [c for c in pay_cols if c != key]
-        s_rows = self._scan(old_files, pay_to).select(
+        s_rows = self._scan(
+            old_files, pay_to, self._live(man_from, touched)
+        ).select(
             F.col(key).alias("_s_key"),
             F.col("_seq").alias("_s_seq"),
             F.col("_commit").alias("_s_commit"),
@@ -917,11 +1009,12 @@ class HashLakeTable:
 
         The delta write is a bucket rebalance that AQE sizes to the
         batch (one task for a micro-batch, about one per core for a bulk
-        replay), normally one delta file per touched bucket.  AQE also
-        splits any shuffle partition larger than
+        replay), one delta file per write task holding whole buckets;
+        the manifest lists each file under every bucket it holds.  AQE
+        also splits any shuffle partition larger than
         ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so a very
-        large batch may write several delta files for one bucket;
-        readers take each delta set as a file list, so that is safe.
+        large batch may spread one bucket over several files; readers
+        take each delta set as a file list, so that is safe.
 
         ``reduce_batch=False`` skips the in-batch LWW reduce entirely —
         correctness is unaffected because read/compact-time LWW over
@@ -1070,40 +1163,45 @@ class HashLakeTable:
             "_commit", F.lit(out_version).cast("long")
         )
 
-        # 4. append delta files clustered by bucket.  The write's own
-        # directory listing yields the touched-bucket set — no separate
-        # distinct() job.  NO global sort — sorting rows that carry
-        # token arrays measurably inverse-scales (BENCH.md).
-        # Fan = 4× buckets: hashing 32 bucket values into exactly 32
-        # slots leaves ~1/e of them empty and the fullest with 2-3
-        # buckets (2-3× task imbalance on the write stage, measured
-        # ~+20%); 4× slots spread the same 32 buckets nearly 1:1 while
-        # each bucket still lands wholly in ONE hash slot.  A rebalance
-        # (not a repartition) lets AQE coalesce adjacent slots to the
-        # batch's size: a micro-batch writes in one task instead of
-        # paying a fixed ~44 ms of task set-up on each of 4×buckets
-        # mostly-empty tasks, a bulk batch in about one task per core
+        # 4. append the batch as one delta file per write task.  The
+        # rows keep ``_bucket`` as a stored column, and each file's
+        # bucket set, read back from that column, yields the touched
+        # buckets — no separate distinct() job.  NO global sort —
+        # sorting rows that carry token arrays measurably
+        # inverse-scales (BENCH.md).  The rebalance hashes ``_bucket``
+        # into a 4×-buckets fan, so each bucket lands wholly in ONE
+        # slot (32 values in 32 slots would leave ~1/e empty and the
+        # fullest with 2-3 buckets), and AQE coalesces adjacent slots
+        # to the batch's size: a micro-batch writes in one task, so ONE
+        # file per commit that every later read opens once, where a
+        # file per bucket made each read open ~touched-buckets small
+        # files; a bulk batch writes about one file per AQE partition
         # (an oversized slot may be split — see the docstring).
         reduced = reduced.hint("rebalance", self.num_buckets * 4, "_bucket")
         out_dir = self.root / "data" / f"c{out_version:06d}"
         _t_plan = _time.monotonic()
-        reduced.write.partitionBy("_bucket").mode("overwrite").parquet(str(out_dir))
+        reduced.write.mode("overwrite").parquet(str(out_dir))
         _t_write = _time.monotonic()
-        new_files = self._bucket_outputs(out_dir)
-        touched = sorted(int(b) for b in new_files)
-        file_stats = dict(self._manifest.get("file_stats", {}))
-        file_stats.update(
-            self._harvest_file_stats([f for fl in new_files.values() for f in fl])
+        new_stats, held = self._harvest_file_stats(
+            sorted(str(p) for p in out_dir.glob("*.parquet")), buckets=True
         )
+        new_files = [f for f, bs in held.items() if bs]  # skip empty files
+        by_bucket: dict[str, list[str]] = {}
+        for f in new_files:
+            for b in held[f]:
+                by_bucket.setdefault(str(b), []).append(f)
+        touched = sorted(int(b) for b in by_bucket)
+        file_stats = {**self._manifest.get("file_stats", {}), **new_stats}
 
-        # 5. commit: append deltas, swap pointer
+        # 5. commit: append deltas (a file under every bucket it
+        # holds), swap pointer
         deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
-        for b in touched:
-            deltas.setdefault(str(b), []).append(new_files[str(b)])
+        for b, fl in by_bucket.items():
+            deltas.setdefault(b, []).append(fl)
         commits = {**self._manifest["commits"], stream_id: batch_id}
         lineage = self._manifest.get("lineage", [])[-200:] + [
             {"batch_id": batch_id, "stream_id": stream_id, "version": out_version,
-             "touched_buckets": touched}
+             "touched_buckets": touched, "files": new_files}
         ]
         self._manifest = {
             **self._manifest,
@@ -1163,9 +1261,10 @@ class HashLakeTable:
         folded (with ``background``: scheduled).
 
         Snapshots the buckets on the committer thread — their files, the
-        payload schema, and per bucket the number of delta sets the fold
-        consumes — then runs :meth:`_fold` (pure compute) and
-        :meth:`_apply_fold` (the only manifest mutation) back to back.
+        :meth:`_live` filter over them, the payload schema, and per
+        bucket the number of delta sets the fold consumes — then runs
+        :meth:`_fold` (pure compute) and :meth:`_apply_fold` (the only
+        manifest mutation) back to back.
         ``background`` instead submits :meth:`_fold` to a one-slot pool
         so it overlaps the next commits' write jobs (the Iceberg
         maintenance-process analog); a busy pool skips scheduling (the
@@ -1192,7 +1291,8 @@ class HashLakeTable:
         deltas = self._manifest.get("deltas", {})
         consumed = {str(b): len(deltas.get(str(b), [])) for b in buckets}
         out_dir = self.root / "data" / f"c{version:06d}x"
-        snapshot = (files, len(consumed), self.schema, out_dir)
+        live = self._live(self._manifest, buckets)
+        snapshot = (files, live, len(consumed), self.schema, out_dir)
         if not background:
             return self._apply_fold(consumed, *self._fold(*snapshot))
         if self._compact_pool is None:
@@ -1210,6 +1310,7 @@ class HashLakeTable:
     def _fold(
         self,
         files: list[str],
+        live: Column,
         n_folded: int,
         payload: StructType,
         out_dir: pathlib.Path,
@@ -1218,6 +1319,12 @@ class HashLakeTable:
         with the snapshot's ``payload`` schema) into new per-bucket bases
         under ``out_dir``.  Touches no table state; returns (bucket → new
         base files, file → [min,max] key stats).
+
+        The folded buckets' delta files are shared with other buckets,
+        so the scan keeps only the rows ``live`` admits — the
+        :meth:`_live` rule restricted to the folded buckets: other
+        buckets' rows, and rows an earlier fold already put in a base,
+        stay out of the new bases.
 
         The rewrite hashes into the delta write's 4×-buckets fan (merge
         step 4) with an explicit repartition, not a rebalance: AQE's
@@ -1231,7 +1338,7 @@ class HashLakeTable:
         base files per bucket.  Delta files stay unsorted (the hot write
         path never sorts) — at 100 TB the compacted base is ~everything,
         so skipping lives where the bytes are."""
-        merged = self._lww(self._scan(files, payload)).withColumn(
+        merged = self._lww(self._scan(files, payload, live)).withColumn(
             "_bucket", self._bucket_col()
         )
         merged = merged.repartition(n_folded * 4, "_bucket")
@@ -1242,10 +1349,14 @@ class HashLakeTable:
                 "maxRecordsPerFile", self.compact_target_file_rows
             )
         writer.partitionBy("_bucket").mode("overwrite").parquet(str(out_dir))
-        new_base = self._bucket_outputs(out_dir)
-        return new_base, self._harvest_file_stats(
+        new_base = {  # the write's directory listing — no Spark job
+            d.name.split("=", 1)[1]: sorted(str(p) for p in d.glob("*.parquet"))
+            for d in out_dir.glob("_bucket=*")
+        }
+        stats, _ = self._harvest_file_stats(
             [f for fl in new_base.values() for f in fl]
         )
+        return new_base, stats
 
     def _apply_fold(
         self,
@@ -1256,19 +1367,23 @@ class HashLakeTable:
         """Land a fold in the in-memory manifest (persisted by the
         caller's next manifest write): each folded bucket's base becomes
         the fold's output, and its first ``consumed[b]`` delta sets —
-        the ones the fold read — are dropped with their stats.  Delta
-        sets appended after the snapshot stay.  Returns the number of
-        buckets folded."""
+        the ones the fold read — are dropped.  Delta sets appended after
+        the snapshot stay.  A dropped file's stats go with it unless an
+        unfolded bucket still lists the (shared) file.  Returns the
+        number of buckets folded."""
         bases = dict(self._manifest["buckets"])
         deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
         file_stats = dict(self._manifest.get("file_stats", {}))
+        dropped: set[str] = set()
         for b, n in consumed.items():
             dsets = deltas.pop(b, [])
-            for f in bases.get(b, []) + [f for ds in dsets[:n] for f in ds]:
-                file_stats.pop(f, None)
+            dropped.update(bases.get(b, []), (f for ds in dsets[:n] for f in ds))
             bases[b] = new_base.get(b, [])
             if dsets[n:]:
                 deltas[b] = dsets[n:]
+        dropped -= {f for dsets in deltas.values() for ds in dsets for f in ds}
+        for f in dropped:
+            file_stats.pop(f, None)
         file_stats.update(new_stats)
         self._manifest = {
             **self._manifest,

@@ -250,11 +250,16 @@ def test_changes_schema_evolution(spark, lake):
 
 def test_changes_file_pruning(spark, lake):
     """Scale shape: feed cost ∝ changes, not table size.  After a big
-    commit and a 1-key commit, the feed's scan reads (a) only files
-    written after ``from`` for the range side and (b) only the touched
-    key's bucket from the from-state side — never the whole table."""
+    commit, a compact and a 1-key commit, the feed's scan reads (a) for
+    the range side exactly the 1-key commit's one delta file and (b)
+    for the from-state side only the touched key's bucket — never the
+    whole table.  Bucket pruning of the from-state is per bucket where
+    the bases hold the bytes; delta files prune at write-task
+    granularity (a micro-batch's file holds all the buckets it
+    touched)."""
     events = gen_events_pandas(0, 2000, seed=37, n_docs=300)
-    v1 = lake.merge(prepare_batch(_spark_events(spark, events)), 0)["version"]
+    lake.merge(prepare_batch(_spark_events(spark, events)), 0)
+    v1 = lake.compact()["version"]
     one = pd.DataFrame(
         [[99_999, "update", "doc-00000007", [7], 1, "web", T0]], columns=COLS
     )
@@ -262,19 +267,16 @@ def test_changes_file_pruning(spark, lake):
     feed = lake.read_changes(v1)
     got = feed.toPandas()
     assert list(got["doc_id"]) == ["doc-00000007"]
-    scanned = set(feed.inputFiles())
-    every = set(lake.read_raw().inputFiles())
+    scanned = {f.removeprefix("file://") for f in feed.inputFiles()}
+    every = {f.removeprefix("file://") for f in lake.read_raw().inputFiles()}
     assert scanned and scanned < every
-    # every scanned pre-``from`` file belongs to the ONE touched bucket
-    def bucket_of(path: str) -> str:
-        part = [p for p in path.split("/") if p.startswith("_bucket=")]
-        return part[0] if part else "?"
-
-    old_files = [
-        f for f in scanned
-        if HashLakeTable._file_commit_version(f) <= v1
-    ]
-    assert old_files and len({bucket_of(f) for f in old_files}) == 1
+    (range_file,) = lake.snapshot()["lineage"][-1]["files"]
+    assert range_file in scanned
+    old_files = scanned - {range_file}
+    assert all(HashLakeTable._file_commit_version(f) <= v1 for f in old_files)
+    # every scanned pre-``from`` file is a base of the ONE touched bucket
+    (touched,) = lake.snapshot()["lineage"][-1]["touched_buckets"]
+    assert old_files == set(lake._manifest_at(v1)["buckets"][str(touched)])
 
 
 def oracle_changes_preimage(
@@ -582,22 +584,28 @@ def test_changes_column_projection_prunes_and_matches(spark, lake):
 
 def test_changes_build_runs_no_job_and_plans_one_aggregate(spark, lake):
     """The feed's plan shape.  Building it launches no Spark job — the
-    touched buckets of a pure-delta range come off the file paths, and
-    a from-state of more than 32 files is not listed by a distributed
+    touched buckets of a pure-delta range come off the lineage, and a
+    from-state of more than 32 files (per-bucket bases, each rolled
+    into several files by a compact) is not listed by a distributed
     job.  The net feed scans parquet twice (from ∪ range, narrow; the
     range payload) under one aggregate (partial + final) and one join;
     the preimage feed adds one scan and one join for the from-state
     payload."""
     import re
 
+    lake.compact_target_file_rows = 10
     events = gen_events_pandas(0, 3000, seed=73, n_docs=400)
     chunks = [events.iloc[i::6] for i in range(6)]
+    for b, c in enumerate(chunks[:4]):
+        lake.merge(prepare_batch(_spark_events(spark, c)), b)
+    lake.compact()
     versions = [
         lake.merge(prepare_batch(_spark_events(spark, c)), b)["version"]
-        for b, c in enumerate(chunks)
+        for b, c in enumerate(chunks[4:], start=4)
     ]
     vf = versions[-2]
-    assert len(lake._bucket_files(None, lake._manifest_at(vf))) > 32
+    touched = lake.snapshot()["lineage"][-1]["touched_buckets"]
+    assert len(lake._bucket_files(touched, lake._manifest_at(vf))) > 32
     sc = spark.sparkContext
     sc.setJobGroup("feed-build", "build the change feeds")
     try:
@@ -719,3 +727,173 @@ def test_changes_property_vs_oracle(spark, tmp_path, seed):
         HashLakeTable._file_commit_version(f) > vf and "x/_bucket=" in f
         for f in scanned
     )
+
+
+def _strip_lineage_files(lake: HashLakeTable) -> None:
+    """Drop ``files`` from every persisted lineage entry — the shape of
+    a lineage written before commits recorded their delta files."""
+    import json
+    import pathlib
+
+    for mp in (pathlib.Path(lake.root) / "manifests").glob("v*.json"):
+        doc = json.loads(mp.read_text())
+        for e in doc["lineage"]:
+            e.pop("files", None)
+        mp.write_text(json.dumps(doc))
+
+
+def test_changes_lineage_without_files_takes_fallback(spark, lake):
+    """A range whose lineage entries carry no ``files`` cannot name its
+    delta files, so the feed takes the manifest-file fallback (a
+    distinct job finds the touched buckets) with unchanged values."""
+    events = gen_events_pandas(0, 2400, seed=74, n_docs=160, dirty_frac=0.1)
+    chunks = [events.iloc[i::4] for i in range(4)]
+    versions = [
+        lake.merge(
+            prepare_batch(_spark_events(spark, c)), b, auto_compact_deltas=2
+        )["version"]
+        for b, c in enumerate(chunks)
+    ]
+    vf = versions[1]
+    want = lake.read_changes(vf).toPandas()
+    want_pre = lake.read_changes(vf, include_preimage=True).toPandas()
+    assert_pdf_equal(want, oracle_changes(pd.concat(chunks[:2]), events))
+    _strip_lineage_files(lake)
+    lake = HashLakeTable(spark, lake.root)
+    assert lake._range_delta_files(lake._manifest, vf, lake.version) is None
+    sc = spark.sparkContext
+    sc.setJobGroup("feed-fallback", "build the fallback feed")
+    try:
+        net = lake.read_changes(vf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("feed-fallback"))
+    assert_pdf_equal(net.toPandas(), want)
+    assert_rows_equal(
+        lake.read_changes(vf, include_preimage=True).toPandas(),
+        [dict(r) for _, r in want_pre.iterrows()],
+    )
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("seed,mode", [(91, "sync"), (92, "async"), (93, "async")])
+def test_partial_folds_of_shared_delta_files(spark, tmp_path, seed, mode):
+    """Seeded histories on 4 buckets whose commits each touch 2-3
+    buckets, folded sync or async at a delta depth of 2.  A commit
+    writes one delta file listed under every bucket it holds, so a
+    fold of some of them leaves the file listed under the others with
+    stale rows of the folded ones.  Every read must drop those rows:
+    ``read()``, ``read(version=)``, ``read_raw(buckets=subset)``,
+    ``read_keys`` and the net, preimage and fallback feeds equal the
+    pandas oracles and return no key twice, and the key stats of every
+    file a bucket still lists survive the folds."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    events = gen_events_pandas(
+        0, 900, seed=seed, n_docs=90, dirty_frac=0.1
+    ).reset_index(drop=True)
+    lake = HashLakeTable.create(
+        spark, str(tmp_path / "lake"), target_schema(), num_buckets=4
+    )
+    ids = sorted(set(events["doc_id"]))
+    bucket_of = {
+        r["doc_id"]: r["b"]
+        for r in spark.createDataFrame([(k,) for k in ids], "doc_id string")
+        .select("doc_id", lake._bucket_col().cast("int").alias("b"))
+        .collect()
+    }
+    n_commits = int(rng.integers(6, 9))
+    while True:  # each commit's bucket set; together they cover all 4
+        sets = [
+            set(rng.choice(4, int(rng.integers(2, 4)), replace=False).tolist())
+            for _ in range(n_commits)
+        ]
+        if set().union(*sets) == {0, 1, 2, 3}:
+            break
+    assign = np.array(
+        [
+            rng.choice([c for c in range(n_commits) if bucket_of[k] in sets[c]])
+            for k in events["doc_id"]
+        ]
+    )
+
+    def upto(v):
+        return events[assign < merged[v]]
+
+    def state(v, buckets=None):
+        s = oracle_reduce(upto(v), with_tombstones=True)
+        if buckets is not None:
+            s = s[s["doc_id"].map(bucket_of).isin(buckets)]
+        return s[["doc_id", "tokens", "n_tok", "source", "_seq", "_deleted"]]
+
+    def unique_keys(pdf):
+        assert not pdf["doc_id"].duplicated().any()
+        return pdf
+
+    absent = "doc-absent"
+    merged = {0: 0}  # version -> number of commits its state holds
+    partial = False  # a listed delta file lost some, not all, buckets
+    for c in range(n_commits):
+        r = lake.merge(
+            prepare_batch(_spark_events(spark, events[assign == c])), c,
+            compact_mode=mode, auto_compact_deltas=2,
+        )
+        merged[r["version"]] = c + 1
+        man = lake.snapshot()
+        listing = {}
+        for b, dsets in man["deltas"].items():
+            for f in (f for ds in dsets for f in ds):
+                listing.setdefault(f, set()).add(int(b))
+        for e in man["lineage"]:
+            held = set(e["touched_buckets"])
+            partial |= any(
+                0 < len(listing.get(f, held)) < len(held) for f in e["files"]
+            )
+        # stats are kept for exactly the files some bucket lists
+        assert set(man["file_stats"]) == set(lake._bucket_files())
+        keys = [str(k) for k in rng.choice(ids, 6, replace=False)] + [absent]
+        cur = state(r["version"])
+        live = cur[~cur["_deleted"] & cur["doc_id"].isin(keys)]
+        assert_pdf_equal(
+            unique_keys(lake.read_keys(keys).toPandas()),
+            live.drop(columns=["_seq", "_deleted"]),
+        )
+    if lake.wait_for_compaction():
+        merged[lake.version] = n_commits
+    assert partial, "no fold left a shared delta file partly listed"
+
+    versions = sorted(merged)
+    for v in versions:
+        want = state(v)
+        want = want[~want["_deleted"].astype(bool)].drop(columns=["_seq", "_deleted"])
+        assert_pdf_equal(unique_keys(lake.read(version=v).toPandas()), want)
+        sub = sorted(rng.choice(4, int(rng.integers(1, 3)), replace=False).tolist())
+        assert_pdf_equal(
+            unique_keys(lake.read_raw(sub, version=v).toPandas()), state(v, sub)
+        )
+    assert_pdf_equal(unique_keys(lake.read().toPandas()), want)
+
+    pairs = {(int(rng.choice(versions[:-1])), versions[-1])}
+    while len(pairs) < 4:
+        a, b = sorted(rng.choice(versions, 2, replace=False))
+        pairs.add((int(a), int(b)))
+
+    def check(vf, vt):
+        ev_from, ev_to = upto(vf), upto(vt)
+        assert_pdf_equal(
+            unique_keys(lake.read_changes(vf, vt).toPandas()),
+            oracle_changes(ev_from, ev_to),
+        )
+        assert_rows_equal(
+            lake.read_changes(vf, vt, include_preimage=True).toPandas(),
+            oracle_changes_preimage(ev_from, ev_to),
+        )
+
+    for vf, vt in sorted(pairs):
+        check(vf, vt)
+    _truncate_lineage(lake)
+    for vf, vt in sorted(pairs):
+        check(vf, vt)

@@ -128,11 +128,13 @@ def test_salt_without_batch_reduce_raises(spark, lake):
 def test_delta_write_rebalance_sized_to_batch(spark, lake, monkeypatch):
     """The delta write is a bucket rebalance on the 4×-buckets fan that
     AQE coalesces to the batch: a 2k-row commit writes in at most
-    shuffle-partitions tasks, and each touched bucket still lands whole
-    in one task — exactly one delta file per bucket."""
+    shuffle-partitions tasks, as exactly ONE delta file (one write
+    task) whose stored ``_bucket`` values are the touched buckets, and
+    every touched bucket's new delta set is exactly that file."""
     import pathlib
     import re
 
+    import pyarrow.parquet as pq
     from pyspark.sql.readwriter import DataFrameWriter
 
     plans = []
@@ -169,9 +171,15 @@ def test_delta_write_rebalance_sized_to_batch(spark, lake, monkeypatch):
     assert write_stage.numTasks <= int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     out = pathlib.Path(lake.root) / "data" / f"c{r['version']:06d}"
-    per_bucket = [len(list(d.glob("*.parquet"))) for d in out.glob("_bucket=*")]
-    assert len(per_bucket) == r["touched_buckets"] > 1
-    assert set(per_bucket) == {1}
+    (only,) = [str(f) for f in out.glob("*.parquet")]
+    stored = set(pq.read_table(only, columns=["_bucket"]).column(0).to_pylist())
+    (entry,) = lake.snapshot()["lineage"]
+    assert stored == set(entry["touched_buckets"])
+    assert len(stored) == r["touched_buckets"] > 1
+    assert entry["files"] == [only]
+    deltas = lake.snapshot()["deltas"]
+    assert {int(b) for b in deltas} == stored
+    assert all(dsets == [[only]] for dsets in deltas.values())
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
 
 
@@ -403,32 +411,50 @@ def test_vacuum_lands_inflight_fold_before_collecting(spark, lake):
 
 def test_read_keys_prunes_to_key_buckets(spark, lake):
     """Point lookup: result equals a filtered full read, tombstoned
-    keys return nothing, and the scan touches ONLY the files of the
-    buckets the keys hash into (the 100 TB point-lookup story)."""
+    keys return nothing, and the scan prunes at two granularities (the
+    100 TB point-lookup story).  Compacted bases are per bucket, so
+    the scan reads ONLY the bases of the buckets the keys hash into;
+    delta files are per write task, so after one more commit the scan
+    adds exactly that commit's one file, read whole."""
     events = gen_events_pandas(0, 2000, seed=23, n_docs=150)
     replay_batch(_spark_events(spark, events), lake)
+    lake.compact()
     oracle = oracle_reduce(events)
     live = list(oracle["doc_id"].iloc[:3])
     all_ids = {f"doc-{n:08d}" for n in range(150)}
     dead = sorted(all_ids - set(oracle["doc_id"]))[:1]  # tombstoned
-    got = lake.read_keys(live + dead).toPandas()
+    keys = live + dead
+    got = lake.read_keys(keys).toPandas()
     assert_pdf_equal(got, oracle[oracle["doc_id"].isin(live)])
-    # pruning: inputFiles ⊆ the keys' buckets' files, a strict subset
-    # of the full table's files
-    touched = set(lake.read_keys(live + dead).inputFiles())
-    every = set(lake.read_raw().inputFiles())
-    assert touched and touched < every
+
+    def scanned(df):
+        return {f.removeprefix("file://") for f in df.inputFiles()}
+
+    bases = lake._manifest["buckets"]
+    want = {f for k in keys for f in bases[str(_bucket_of(lake, k))]}
+    every = scanned(lake.read_raw())
+    assert scanned(lake.read_keys(keys)) == want and want < every
+    # the delta path: an update of one key lands as one delta file
+    cols = ["event_sequence", "op", "doc_id", "tokens", "n_tok", "source", "event_time"]
+    t = pd.to_datetime(0, unit="s")
+    up = pd.DataFrame([[99_999, "update", live[0], [7], 1, "web", t]], columns=cols)
+    lake.merge(prepare_batch(_spark_events(spark, up)), 1)
+    (new_file,) = lake.snapshot()["lineage"][-1]["files"]
+    assert scanned(lake.read_keys(keys)) == want | {new_file}
+    final = oracle_reduce(pd.concat([events, up], ignore_index=True))
+    assert_pdf_equal(
+        lake.read_keys(keys).toPandas(), final[final["doc_id"].isin(live)]
+    )
 
 
 def test_read_keys_integer_key_lake(spark, tmp_path):
     """``read_keys`` on a long-keyed lake (the ``_events_lake`` shape of
     the driver queries) with duplicate, tombstoned and absent keys:
-    rows equal a pandas LWW oracle, and the scan stays inside the
-    ``_bucket=`` directories ``_bucket_col`` assigns to the keys — the
-    literal-key bucket job agrees with the write path for non-string
-    keys."""
-    import re
-
+    rows equal a pandas LWW oracle, the buckets the write path stored
+    for the keys' rows are among the ``_bucket_col`` assignments of
+    the keys, and the scanned files' stored ``_bucket`` values cover
+    them — the literal-key bucket job agrees with the write path for
+    non-string keys."""
     import numpy as np
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
@@ -478,8 +504,11 @@ def test_read_keys_integer_key_lake(spark, tmp_path):
     key_df = spark.createDataFrame([(k,) for k in keys], StructType([schema["user_id"]]))
     assigned = {r[0] for r in key_df.select(lake._bucket_col()).collect()}
     scanned = {
-        int(re.search(r"_bucket=(\d+)/", f).group(1))
-        for f in lake.read_keys(keys).inputFiles()
+        r["_bucket"]
+        for r in spark.read.parquet(*lake.read_keys(keys).inputFiles())
+        .select("_bucket")
+        .distinct()
+        .collect()
     }
     # where the write path put the requested keys' rows
     written = {
@@ -490,7 +519,7 @@ def test_read_keys_integer_key_lake(spark, tmp_path):
         .select("_bucket")
         .collect()
     }
-    assert written <= scanned <= assigned
+    assert written <= scanned and written <= assigned
     assert len(assigned) < lake.num_buckets
 
 
