@@ -328,7 +328,16 @@ class HashLakeTable:
             else:
                 refs[b] = f"bm-v{v:06d}-b{b}.json"
                 bfiles = list(base) + [f for ds in dsets for f in ds]
-                bstats = {f: stats[f] for f in bfiles if f in stats}
+                # a shared delta file's per-bucket ranges are split
+                # across the manifests of its buckets, so metadata
+                # stays ∝ the bucket's files, not files × buckets
+                bstats = {}
+                for f in bfiles:
+                    st = stats.get(f)
+                    if isinstance(st, dict):
+                        st = {b: st[b]} if b in st else None
+                    if st is not None:
+                        bstats[f] = st
                 (mdir / refs[b]).write_text(
                     json.dumps({"base": base, "deltas": dsets, "stats": bstats})
                 )
@@ -366,14 +375,18 @@ class HashLakeTable:
             return doc
         buckets: dict[str, list] = {}
         deltas: dict[str, list] = {}
-        file_stats: dict[str, list] = {}
+        file_stats: dict[str, list | dict] = {}
         for b, ref in doc["bucket_refs"].items():
             bm = json.loads((mdir / ref).read_text())
             if bm["base"]:
                 buckets[b] = bm["base"]
             if bm["deltas"]:
                 deltas[b] = bm["deltas"]
-            file_stats.update(bm.get("stats", {}))
+            for f, st in bm.get("stats", {}).items():
+                if isinstance(st, dict):
+                    file_stats.setdefault(f, {}).update(st)
+                else:
+                    file_stats[f] = st
         return {**doc, "buckets": buckets, "deltas": deltas,
                 "file_stats": file_stats}
 
@@ -384,7 +397,7 @@ class HashLakeTable:
 
     def _harvest_file_stats(
         self, files: list[str], *, buckets: bool = False
-    ) -> tuple[dict[str, list], dict[str, list[int]]]:
+    ) -> tuple[dict[str, list | dict], dict[str, list[int]]]:
         """Per-file ``[min, max]`` of the table key, read from parquet
         FOOTERS (no data scan — the Iceberg write-time column-stats
         analog, harvested instead of computed because the files were
@@ -397,9 +410,15 @@ class HashLakeTable:
         truncated min is still a valid lower bound and a truncated max
         a valid upper bound, so range pruning stays conservative.
 
-        With ``buckets``, also each file's sorted set of stored
-        ``_bucket`` values (one column read per file): the buckets whose
-        manifests list a new delta file.  Returns (stats, bucket sets).
+        With ``buckets`` (delta files, shared by the buckets they hold)
+        the stats come from reading each file's key and ``_bucket``
+        columns instead: ``{bucket: [min, max]}`` over the file's rows of
+        each bucket, so a lookup checks a key only against its own
+        bucket's range (a whole-file range of a commit's shared file
+        spans nearly the whole key space); this reads the two columns,
+        so its cost is ∝ the batch's rows.  The file's sorted bucket
+        set — the buckets whose manifests list it — comes with them.
+        Returns (stats, bucket sets).
 
         Footer reads are driver-SERIAL time on the commit path (a
         128-file delta write adds ~0.5s single-threaded — a pure
@@ -408,7 +427,6 @@ class HashLakeTable:
         the GIL on I/O."""
         import concurrent.futures
 
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         def _key_range(f: str) -> list | None:
@@ -431,12 +449,20 @@ class HashLakeTable:
                 hi = gmax if hi is None else max(hi, gmax)
             return None if lo is None else [lo, hi]
 
-        def _one(f: str) -> tuple[str, list | None, list[int] | None]:
-            held = None
-            if buckets:
-                col = pq.read_table(f, columns=["_bucket"]).column(0)
-                held = sorted(pc.unique(col).to_pylist())
-            return f, _key_range(f), held
+        def _one(f: str) -> tuple[str, list | dict | None, list[int] | None]:
+            if not buckets:
+                return f, _key_range(f), None
+            t = pq.read_table(f, columns=[self.key, "_bucket"])
+            g = t.group_by("_bucket").aggregate([(self.key, "min"), (self.key, "max")])
+            ranges = {
+                str(b): [lo, hi]
+                for b, lo, hi in zip(
+                    g["_bucket"].to_pylist(),
+                    g[f"{self.key}_min"].to_pylist(),
+                    g[f"{self.key}_max"].to_pylist(),
+                )
+            }
+            return f, ranges, sorted(int(b) for b in ranges)
 
         if not files:
             return {}, {}
@@ -449,18 +475,28 @@ class HashLakeTable:
 
     @staticmethod
     def _files_for_keys(
-        files: list[str], stats: dict[str, list], keys: list
+        files: list[str], stats: dict[str, list | dict], keys: list[tuple]
     ) -> list[str]:
         """Drop files whose key range provably excludes every requested
-        key (missing stats ⇒ keep).  Sound for LWW reads: a pruned file
+        ``(key, bucket)`` pair (missing stats ⇒ keep).  A base file's
+        stats are one ``[min, max]``; a delta file's are
+        ``{bucket: [min, max]}`` over the buckets it holds (see
+        :meth:`_harvest_file_stats`), so each key is checked against its
+        own bucket's rows only.  Sound for LWW reads: a pruned file
         contributes no row for any requested key, so winners per key are
         unchanged."""
-        kept = []
-        for f in files:
-            s = stats.get(f)
-            if s is None or any(s[0] <= k <= s[1] for k in keys):
-                kept.append(f)
-        return kept
+
+        def may_hold(s: list | dict, k, b: int) -> bool:
+            if isinstance(s, dict):
+                if str(b) not in s:
+                    return False
+                s = s[str(b)]
+            return s[0] is None or s[0] <= k <= s[1]
+
+        return [
+            f for f in files
+            if f not in stats or any(may_hold(stats[f], k, b) for k, b in keys)
+        ]
 
     # ------------------------------------------------------ properties
     @property
@@ -537,7 +573,7 @@ class HashLakeTable:
         rows = self.spark.read.schema(stored).parquet(*files)
         return rows if live is None else rows.filter(live)
 
-    def _live(self, manifest: dict, buckets: list[int] | None) -> Column | None:
+    def _live(self, manifest: dict, buckets: list[int] | None) -> Column:
         """The rows of ``manifest``'s files that a read of ``buckets``
         (None = all) may see.  A delta file is shared by the buckets it
         holds, and a fold of bucket b consumes b's delta sets while the
@@ -549,10 +585,7 @@ class HashLakeTable:
         is live iff b is requested and ``_commit`` > x(b) (−1 when b has
         no base).  Base rows read ``_bucket`` as null and are live;
         delta files written before ``_bucket`` was stored also read
-        null, and each holds one bucket, so the rule stays right.
-
-        Returns None (no filter) for a full read when no listed delta
-        file is as old as the newest base, so it holds no stale row."""
+        null, and each holds one bucket, so the rule stays right."""
         bases = manifest["buckets"]
         want = range(manifest["num_buckets"]) if buckets is None else buckets
         folded_at = {
@@ -560,22 +593,15 @@ class HashLakeTable:
             if bases.get(str(b)) else -1
             for b in want
         }
-        if buckets is None:
-            newest = max(folded_at.values(), default=-1)
-            if all(
-                self._file_commit_version(f) > newest
-                for dsets in manifest.get("deltas", {}).values()
-                for ds in dsets
-                for f in ds
-            ):
-                return None
         by_version: dict[int, list[int]] = {}
         for b, x in folded_at.items():
             by_version.setdefault(x, []).append(b)
-        live = F.col("_bucket").isNull()
-        for x, bs in sorted(by_version.items()):
-            live = live | (F.col("_bucket").isin(bs) & (F.col("_commit") > x))
-        return live
+        # one SQL string: built from Column operators, the predicate
+        # cost ~20 ms of py4j round trips per read (4-core host)
+        return F.expr(" OR ".join(["_bucket IS NULL"] + [
+            f"(_bucket IN ({', '.join(map(str, bs))}) AND _commit > {x})"
+            for x, bs in sorted(by_version.items())
+        ]))
 
     def _lww(self, rows: DataFrame) -> DataFrame:
         """The read-time LWW rule: per key, the row with the max
@@ -637,8 +663,10 @@ class HashLakeTable:
            rows;
         2. **file skipping** — within those files, drop every file
            whose manifest ``[min,max]`` key range excludes all
-           requested keys (footer stats harvested at write time, see
-           :meth:`_harvest_file_stats`).  Compacted bases are
+           requested keys (harvested at write time, see
+           :meth:`_harvest_file_stats`; a delta file keeps one range
+           per bucket it holds, checked against the keys of that
+           bucket).  Compacted bases are
            key-sorted and optionally range-rolled, so after compaction
            a single-key fetch reads O(1) base files of ONE bucket —
            at 100 TB the bases hold the bytes, so that is megabytes,
@@ -659,11 +687,12 @@ class HashLakeTable:
             ).alias(self.key)
         )
         bucket = self._bucket_col().cast("int").alias("b")
-        buckets = sorted({r["b"] for r in kdf.select(bucket).collect()})
+        pairs = [(r[0], r[1]) for r in kdf.select(self.key, bucket).collect()]
+        buckets = sorted({b for _, b in pairs})
         files = self._files_for_keys(
             self._bucket_files(buckets),
             self._manifest.get("file_stats", {}),
-            list(keys),
+            pairs,
         )
         live = self._live(self._manifest, buckets)
         return (
@@ -1164,9 +1193,10 @@ class HashLakeTable:
         )
 
         # 4. append the batch as one delta file per write task.  The
-        # rows keep ``_bucket`` as a stored column, and each file's
-        # bucket set, read back from that column, yields the touched
-        # buckets — no separate distinct() job.  NO global sort —
+        # rows keep ``_bucket`` as a stored column; read back with the
+        # key, it yields each file's bucket set (the touched buckets —
+        # no separate distinct() job) and per-bucket key ranges for
+        # lookup file skipping.  NO global sort —
         # sorting rows that carry token arrays measurably
         # inverse-scales (BENCH.md).  The rebalance hashes ``_bucket``
         # into a 4×-buckets fan, so each bucket lands wholly in ONE

@@ -447,12 +447,54 @@ def test_read_keys_prunes_to_key_buckets(spark, lake):
     )
 
 
+def test_read_keys_skips_shared_delta_file_by_bucket_range(spark, lake):
+    """A delta file shared by several buckets keeps one key range per
+    bucket: a lookup skips it when the key's own bucket's rows in it
+    exclude the key, even though the file's whole range covers it.
+    The ranges survive the per-bucket manifest split."""
+    cands = [f"doc-{n:08d}" for n in range(64)]
+    bucket_of = dict(
+        spark.createDataFrame([(k,) for k in cands], "doc_id string")
+        .select("doc_id", lake._bucket_col().cast("int"))
+        .collect()
+    )
+    key = cands[20]
+    other = [k for k in cands if bucket_of[k] != bucket_of[key]]
+    below = next(k for k in other if k < key)
+    above = next(k for k in other if k > key)
+    same = next(k for k in cands if k > above and bucket_of[k] == bucket_of[key])
+    cols = ["event_sequence", "op", "doc_id", "tokens", "n_tok", "source", "event_time"]
+    t = pd.to_datetime(0, unit="s")
+    first = pd.DataFrame(
+        [[i, "insert", k, [i], 1, "web", t] for i, k in enumerate((below, above, same))],
+        columns=cols,
+    )
+    second = pd.DataFrame([[9, "insert", key, [9], 1, "web", t]], columns=cols)
+    for bid, part in enumerate((first, second)):
+        lake.merge(prepare_batch(_spark_events(spark, part)), bid)
+    (shared,), (mine,) = (e["files"] for e in lake.snapshot()["lineage"][-2:])
+    assert shared in lake._bucket_files([bucket_of[key]])
+    stats = lake._manifest["file_stats"][shared]
+    assert stats[str(bucket_of[key])] == [same, same]
+    got = lake.read_keys([key])
+    assert {f.removeprefix("file://") for f in got.inputFiles()} == {mine}
+    want = oracle_reduce(pd.concat([first, second], ignore_index=True))
+    assert_pdf_equal(got.toPandas(), want[want["doc_id"] == key])
+    # each bucket manifest stores its own range; a reader reassembles them
+    reopened = HashLakeTable(spark, str(lake.root))
+    assert reopened._manifest["file_stats"] == lake._manifest["file_stats"]
+    assert {
+        f.removeprefix("file://") for f in reopened.read_keys([key]).inputFiles()
+    } == {mine}
+
+
 def test_read_keys_integer_key_lake(spark, tmp_path):
     """``read_keys`` on a long-keyed lake (the ``_events_lake`` shape of
     the driver queries) with duplicate, tombstoned and absent keys:
     rows equal a pandas LWW oracle, the buckets the write path stored
     for the keys' rows are among the ``_bucket_col`` assignments of
-    the keys, and the scanned files' stored ``_bucket`` values cover
+    the keys, the scanned files are among those the manifest lists
+    under the keys' buckets, and their stored ``_bucket`` values cover
     them — the literal-key bucket job agrees with the write path for
     non-string keys."""
     import numpy as np
@@ -503,9 +545,14 @@ def test_read_keys_integer_key_lake(spark, tmp_path):
 
     key_df = spark.createDataFrame([(k,) for k in keys], StructType([schema["user_id"]]))
     assigned = {r[0] for r in key_df.select(lake._bucket_col()).collect()}
+    scanned_files = lake.read_keys(keys).inputFiles()
+    # the lookup reads only files the manifest lists under the keys' buckets
+    assert {f.removeprefix("file://") for f in scanned_files} <= set(
+        lake._bucket_files(sorted(assigned))
+    )
     scanned = {
         r["_bucket"]
-        for r in spark.read.parquet(*lake.read_keys(keys).inputFiles())
+        for r in spark.read.parquet(*scanned_files)
         .select("_bucket")
         .distinct()
         .collect()
