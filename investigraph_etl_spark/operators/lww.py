@@ -17,18 +17,14 @@ Physical strategy — measured, not guessed (see BENCH.md):
     1. ``winners = groupBy(key).agg(max(seq))`` — fixed-width buffer →
        whole-stage-codegen HashAggregate with map-side partial agg;
        column pruning means this branch never reads the payload.
-    2. ``events ⋉ winners on (key, seq)`` — a semi join that AQE
-       converts to **broadcast** when the winner set is small (the
-       common micro-batch case): the payload then has ZERO shuffles
-       and ZERO sorts end-to-end.
-  At 10^10-event scale the winner set of a micro-batch is bounded by
-  its distinct keys; if it outgrows the broadcast threshold AQE falls
-  back to a shuffled hash join — still sort-free.
+    2. ``events ⋉ winners on (key, seq)`` — a semi join; with the
+       winners broadcast (``winners_strategy``, below) the payload has
+       ZERO shuffles and ZERO sorts end-to-end.
 
 ``seq`` must be unique per key within ``df`` (changelog contract:
-``event_sequence`` is globally unique) or duplicates survive; the lake
-merge adds an explicit tiebreak column for its target∪batch union
-(sources/lake.py).
+``event_sequence`` is globally unique) or duplicates survive; the
+lake's read/fold-time LWW adds the writing commit as an explicit
+tiebreak column (``extra_keys=("_commit",)``, sources/lake.py).
 """
 
 from __future__ import annotations
@@ -44,7 +40,7 @@ def lww_dedup(
     *,
     salt_buckets: int = 0,
     extra_keys: tuple[str, ...] = (),
-    winners_strategy: str = "broadcast",
+    winners_strategy: str = "auto_count",
     auto_count_max_keys: int = 2_000_000,
 ) -> DataFrame:
     """Keep, per ``key``, only the row with the max ``(seq, *extra_keys)``.
@@ -56,23 +52,23 @@ def lww_dedup(
 
     ``winners_strategy`` picks the semi-join physical form:
 
-    * ``"broadcast"`` (default) — the winner set of a micro-batch is its
-      distinct-key count × ~24B; even a 10M-key batch broadcasts in
-      ~0.25GB.  The payload side then has ZERO shuffle and ZERO sort.
-      Left to AQE, a winner set past ``autoBroadcastJoinThreshold``
-      (10MB) silently degrades to a sort-merge join that shuffles AND
-      SORTS the full payload — measured 10× slower with 30× the GC
-      (BENCH.md) — so the strategy is explicit, not inferred.
-    * ``"shuffle_hash"`` — for batches whose key set genuinely cannot
-      broadcast: one payload shuffle, hash probe, still no sort.
-    * ``"auto"`` — defer to Catalyst/AQE.
-    * ``"auto_count"`` — size-based pick (round-2, VERDICT item 7): one
-      extra *narrow* job counts the winner set (scan of key+order
-      columns only — the payload is never touched), then broadcast if
-      it fits ``auto_count_max_keys``, else shuffle_hash.  Removes the
-      "caller must remember the knob" failure mode for bulk replays
-      with 10⁷⁺ distinct keys, at the cost of one cheap count per call.
+    * ``"auto_count"`` (default; bulk replay) — one extra *narrow* job
+      counts the winner set (key and order columns only), then
+      broadcasts it up to ``auto_count_max_keys`` (the payload side
+      then has ZERO shuffle and ZERO sort) and past that hints a
+      shuffled hash join (one payload shuffle, still no sort).  Left to
+      AQE, a winner set past ``autoBroadcastJoinThreshold`` degrades to
+      a sort-merge join that SORTS the full payload (measured 10×
+      slower with 30× the GC, BENCH.md).
+    * ``"auto"`` (read/fold-time LWW) — defer to Catalyst/AQE.
+
+    Any other value raises ``ValueError``.
     """
+    if winners_strategy not in ("auto", "auto_count"):
+        raise ValueError(
+            f"winners_strategy={winners_strategy!r}: expected 'auto' or "
+            "'auto_count'"
+        )
     order_cols = [seq, *extra_keys]
     # scalar max for the single-order-key hot path: max over a STRUCT
     # forces SortAggregate (struct comparisons aren't hash-aggregable),
@@ -101,12 +97,8 @@ def lww_dedup(
         winners = unpack(narrow.groupBy(key).agg(pick))
 
     if winners_strategy == "auto_count":
-        n_keys = winners.count()
-        winners_strategy = (
-            "broadcast" if n_keys <= auto_count_max_keys else "shuffle_hash"
-        )
-    if winners_strategy == "broadcast":
-        winners = F.broadcast(winners)
-    elif winners_strategy == "shuffle_hash":
-        winners = winners.hint("shuffle_hash")
+        if winners.count() <= auto_count_max_keys:
+            winners = F.broadcast(winners)
+        else:
+            winners = winners.hint("shuffle_hash")
     return df.join(winners, on=[key, *order_cols], how="left_semi")

@@ -175,9 +175,7 @@ class MinHashIndex:
             .unionByName(deletes.withColumn("op", F.lit("delete")))
             .withColumn("event_sequence", F.lit(v1).cast("long"))
         )
-        return self.table.merge(
-            batch, v1, stream_id=self.STREAM, reduce_batch=False
-        )
+        return self.table.merge(batch, v1, stream_id=self.STREAM)
 
     # ------------------------------------------------------------ probe
     def probe(

@@ -19,7 +19,7 @@ union of values across fragments with the same id).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -28,6 +28,15 @@ from investigraph_etl_spark.functions.ids import make_slug
 from investigraph_etl_spark.functions.text import clean_url, str_or_none
 
 _TEMPLATE_RE = re.compile(r"\{\{\s*([^}]+?)\s*\}\}")
+# FtM property-mapping fields this compiler does not implement
+_FTM_UNSUPPORTED = ("entity", "format", "fuzzy")
+
+
+class UnsupportedMappingFieldError(ValueError):
+    """A property mapping uses a field the compiler does not support —
+    an FtM field it does not implement (``entity:``, ``format:``,
+    ``fuzzy:``) or a misspelt one.  Raised at parse time instead of
+    dropping the field."""
 
 
 @dataclass
@@ -139,7 +148,8 @@ class QueryMapping:
         ents = {}
         for name, e in spec.get("entities", {}).items():
             props = {
-                p: PropertyMapping(**pm) for p, pm in e.get("properties", {}).items()
+                p: _property_mapping(name, p, pm)
+                for p, pm in e.get("properties", {}).items()
             }
             schema = e["schema"]
             if validate:
@@ -159,6 +169,20 @@ class QueryMapping:
             filters=dict(spec.get("filters", {})),
             filters_not=dict(spec.get("filters_not", {})),
         )
+
+
+def _property_mapping(entity: str, prop: str, spec: dict) -> PropertyMapping:
+    known = {f.name for f in fields(PropertyMapping)}
+    for name in sorted(set(spec) - known):
+        what = (
+            "an FtM field this compiler does not implement"
+            if name in _FTM_UNSUPPORTED
+            else f"unknown; supported: {', '.join(sorted(known))}"
+        )
+        raise UnsupportedMappingFieldError(
+            f"entity {entity!r}, property {prop!r}: mapping field {name!r} is {what}"
+        )
+    return PropertyMapping(**spec)
 
 
 def compile_statements(

@@ -13,8 +13,8 @@ engine ships a thin lake abstraction with two backends behind one API
   the SQL path is kept ready and asserted for shape only.
 
 Merge semantics (the core invariant, SURVEY.md §1.3): the batch is a
-set of LWW-reduced change rows ``(key, op, event_sequence, payload…)``;
-merging = last-writer-wins over ``target ∪ batch`` on
+set of change rows ``(key, op, event_sequence, payload…)``, raw or
+LWW-reduced; merging = last-writer-wins over ``target ∪ batch`` on
 ``(key, _seq)`` with delete-as-tombstone.  Tombstones are retained so
 a *late* event older than a delete cannot resurrect a row — the
 ``WHEN MATCHED AND s.event_sequence > t._seq`` guard from SURVEY.md
@@ -25,7 +25,7 @@ was copy-on-write, whose per-commit write amplification O(table size /
 batch) was the top 100 TB killer flagged in VERDICT.md):
 * the table is bucketed by ``xxhash64(key) % num_buckets``; each
   bucket holds a *base* file set plus a list of *delta* file sets;
-* a MERGE writes the LWW-reduced batch as delta files, one per write
+* a MERGE appends the batch as delta files, one per write
   task (a micro-batch is one file per commit), each storing its rows'
   ``_bucket`` and listed in the manifest under every bucket it holds —
   **per-commit bytes written ∝ batch size**, never the table;
@@ -57,6 +57,7 @@ reference's warning that parallel loads need a parallel-safe store
 from __future__ import annotations
 
 import json
+import logging
 import os
 import pathlib
 import re
@@ -71,6 +72,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+_log = logging.getLogger(__name__)
 
 _INTERNAL = [
     StructField("_seq", LongType(), True),
@@ -247,6 +250,8 @@ class HashLakeTable:
         # that prefix per bucket)
         self._compact_pool = None
         self._compact_future = None
+        # background folds discarded after a failure (_harvest_compaction)
+        self.failed_folds = 0
         # compaction rewrites sort each bucket by key and roll files at
         # this row count, giving the bucket a set of key-range-disjoint
         # base files whose footer min/max land in the bucket manifest —
@@ -1011,62 +1016,31 @@ class HashLakeTable:
         stream_id: str = "default",
         seq: str = "event_sequence",
         op: str = "op",
-        salt_buckets: int = 0,
-        winners_strategy: str = "broadcast",
         auto_compact_deltas: int = 8,
-        reduce_batch: bool = True,
         compact_mode: str = "sync",
         schema_policy: str = "evolve",
     ) -> dict:
-        """Apply one change batch (raw or pre-reduced — in-batch LWW
-        runs here) as a merge-on-read delta commit.
+        """Append one change batch as a merge-on-read delta commit:
+        gate → shape → bucket → append → fold.
 
-        The batch is LWW-reduced to ≤1 row per key, bucketed, and
-        *appended* as delta files — the target is never read or
-        rewritten, so per-commit bytes written ∝ batch size (the
-        round-1 COW design rewrote every touched bucket; at uniform
-        key distribution that was a full-table rewrite per commit).
-        The target-vs-batch LWW guard (late events lose, tombstones
-        cannot be resurrected) moves to read/compact time: winners are
-        picked by ``max(_seq, _commit)`` over base ∪ deltas, where
-        ``_commit`` reproduces the old union's arrival-order tiebreak.
+        The batch's rows, duplicate keys included, are appended as delta
+        files; the target is never read or rewritten, so per-commit bytes
+        written ∝ batch size.  Last-writer-wins, within the batch and
+        against the target (late events lose, tombstones cannot be
+        resurrected), is the read/fold-time rule: ``max(_seq, _commit)``
+        over base ∪ deltas, ``_commit`` ordering equal ``_seq`` by
+        arrival.  A bulk replay pre-reduces its batch
+        (:func:`~investigraph_etl_spark.streaming.tailer.replay_batch`).
 
         Any touched bucket accumulating ``auto_compact_deltas`` delta
-        sets is folded into its base within the same commit (see
-        :meth:`compact`) — read amplification stays bounded while
-        amortized compaction cost per commit is table/auto_compact.
-
-        The delta write is a bucket rebalance that AQE sizes to the
-        batch (one task for a micro-batch, about one per core for a bulk
-        replay), one delta file per write task holding whole buckets;
-        the manifest lists each file under every bucket it holds.  AQE
-        also splits any shuffle partition larger than
-        ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so a very
-        large batch may spread one bucket over several files; readers
-        take each delta set as a file list, so that is safe.
-
-        ``reduce_batch=False`` skips the in-batch LWW reduce entirely —
-        correctness is unaffected because read/compact-time LWW over
-        ``(_seq, _commit)`` subsumes it (``LWW(batch ∪ target) ≡
-        LWW(LWW(batch) ∪ target)``); what changes is economics.  The
-        reduce is a winners hash-agg + broadcast semi-join that costs
-        ~0.8s per micro-batch at local[32] regardless of how few
-        duplicates it removes (measured; the traced benchmark run,
-        ``perfbench/run.py --trace 1``, reports the same slice as
-        ``lake.merge.plan_s``/``write_s``), while unreduced deltas only
-        cost bytes ∝ the duplicate fraction.  Policy: skip for
-        micro-batches (low in-batch dup ratio — the streaming tailer's
-        case), keep for bulk replays whose dup ratio is high
-        (events/doc ≫ 1) where the reduce pays for itself in write
-        volume.  ``salt_buckets`` salts that reduce, so it needs
-        ``reduce_batch=True``; the combination with ``False`` raises.
-
-        ``compact_mode`` — ``"sync"`` folds threshold buckets inline
-        (bounded latency spike), ``"async"`` runs the same fold on a
-        background thread so it overlaps the next commits' write jobs
-        (the Iceberg maintenance-process analog; harvested into the
-        manifest at the next commit), ``"off"`` leaves compaction to
-        an explicit :meth:`compact` call.
+        sets is folded into its base (see :meth:`compact`) — read
+        amplification stays bounded while amortized compaction cost per
+        commit is table/auto_compact.  ``compact_mode`` — ``"sync"``
+        folds inline (bounded latency spike), ``"async"`` runs the same
+        fold on a background thread so it overlaps the next commits'
+        write jobs (the Iceberg maintenance-process analog; harvested
+        into the manifest at the next commit), ``"off"`` leaves
+        compaction to an explicit :meth:`compact` call.
 
         Exactly-once: Structured Streaming batch ids are monotonic and a
         retried batch re-runs with the same id, so a batch with
@@ -1077,26 +1051,118 @@ class HashLakeTable:
         """
         import time as _time
 
-        if salt_buckets > 0 and not reduce_batch:
-            raise ValueError(
-                f"salt_buckets={salt_buckets} has no effect with "
-                "reduce_batch=False (it salts the in-batch reduce)"
-            )
         if batch_id <= self.last_committed(stream_id):
             return {"skipped": True, "version": self.version}
         _t0 = _time.monotonic()
         # fold any finished background compaction into this commit
         self._harvest_compaction(block=False)
+        self._gate_schema(batch, seq, op, schema_policy)
 
-        # 1. schema gate + evolution (driver-side, before any job):
-        #    additive columns promote, absent columns null-fill,
-        #    lossless widenings (int→long, float→double, recursively
-        #    through array/map/struct) cast up — anything else raises
-        #    HERE with the column named, instead of an executor-side
-        #    ANSI cast error (or, ANSI off, silent null corruption)
-        #    after shuffle work is already spent.
-        #    ``schema_policy="strict"`` additionally rejects ANY drift
-        #    (additive or absent) — the locked-schema production mode.
+        # shape: change rows → target row shape (+ internal columns)
+        pay_cols = [f.name for f in self.schema.fields]
+        changes = batch.select(
+            *[
+                F.col(c).cast(self.schema[c].dataType)
+                if c in batch.columns
+                else F.lit(None).cast(self.schema[c].dataType).alias(c)
+                for c in pay_cols
+            ],
+            F.col(seq).cast("long").alias("_seq"),
+            (F.col(op) == F.lit("delete")).alias("_deleted"),
+        )
+        # deletes keep the key but null payload
+        changes = changes.select(
+            F.col(self.key),
+            *[
+                F.when(F.col("_deleted"), F.lit(None).cast(self.schema[c].dataType))
+                .otherwise(F.col(c))
+                .alias(c)
+                for c in pay_cols
+                if c != self.key
+            ],
+            "_seq",
+            "_deleted",
+        )
+        # bucket: each row's bucket and the writing commit
+        out_version = self.version + 1
+        rows = changes.withColumn("_bucket", self._bucket_col()).withColumn(
+            "_commit", F.lit(out_version).cast("long")
+        )
+
+        _t_plan = _time.monotonic()
+        new_files, by_bucket, new_stats = self._write_delta(rows, out_version)
+        _t_write = _time.monotonic()
+        touched = sorted(int(b) for b in by_bucket)
+
+        # commit: append deltas (a file under every bucket it holds)
+        deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
+        for b, fl in by_bucket.items():
+            deltas.setdefault(b, []).append(fl)
+        commits = {**self._manifest["commits"], stream_id: batch_id}
+        lineage = self._manifest.get("lineage", [])[-200:] + [
+            {"batch_id": batch_id, "stream_id": stream_id, "version": out_version,
+             "touched_buckets": touched, "files": new_files}
+        ]
+        self._manifest = {
+            **self._manifest,
+            "version": out_version,
+            "deltas": deltas,
+            "commits": commits,
+            "lineage": lineage,
+            "file_stats": {**self._manifest.get("file_stats", {}), **new_stats},
+        }
+
+        # fold: bounded read amplification — fold buckets at the delta
+        # threshold back into their bases (same manifest commit).
+        # Smoothed (round 2): uniform-key batches make every bucket hit
+        # the threshold on the SAME commit — compacting all of them at
+        # once is a stop-the-world full-table rewrite.  Instead compact
+        # at most num_buckets/auto_compact_deltas buckets per commit,
+        # most-behind first: steady state folds each bucket every
+        # ``auto_compact_deltas`` commits with the same amortized cost
+        # but no latency spike, and delta counts stay bounded by
+        # ~2× the threshold.
+        full = sorted(
+            (int(b) for b, dsets in deltas.items() if len(dsets) >= auto_compact_deltas),
+            key=lambda b: -len(deltas[str(b)]),
+        )
+        per_commit = max(1, self.num_buckets // max(auto_compact_deltas, 1))
+        compacted = 0
+        _t_pre_compact = _time.monotonic()
+        if full and compact_mode in ("sync", "async"):
+            compacted = self._compact(
+                full[:per_commit], out_version, background=compact_mode == "async"
+            )
+        _t_compact = _time.monotonic()
+
+        self._commit_manifest()
+        return {
+            "skipped": False,
+            "version": out_version,
+            "touched_buckets": len(touched),
+            "compacted_buckets": compacted,
+            # per-commit phase timings (microbatch metrics surface):
+            # plan = gate and shaping up to the write action, write =
+            # the delta-write Spark job and its footer-stat harvest,
+            # compact = amortized folding
+            "timings": {
+                "plan_sec": round(_t_plan - _t0, 3),
+                "write_sec": round(_t_write - _t_plan, 3),
+                "compact_sec": round(_t_compact - _t_pre_compact, 3),
+            },
+        }
+
+    def _gate_schema(
+        self, batch: DataFrame, seq: str, op: str, schema_policy: str
+    ) -> None:
+        """Schema gate + evolution for a merge batch (driver-side, before
+        any job): additive columns promote, absent columns null-fill,
+        lossless widenings (int→long, float→double, recursively through
+        array/map/struct) cast up — anything else raises HERE with the
+        column named, instead of an executor-side ANSI cast error (or,
+        ANSI off, silent null corruption) after shuffle work is already
+        spent.  ``schema_policy="strict"`` additionally rejects ANY
+        drift (additive or absent) — the locked-schema production mode."""
         for required in (self.key, seq, op):
             if required not in batch.columns:
                 raise SchemaCompatibilityError(
@@ -1146,72 +1212,32 @@ class HashLakeTable:
         self.promote_columns(
             [(n, batch.schema[n].dataType) for n, _bt, _tt in compat["promote"]]
         )
-        pay_cols = [f.name for f in self.schema.fields]
 
-        # 2. change rows → target row shape (+ internal columns)
-        changes = batch.select(
-            *[
-                F.col(c).cast(self.schema[c].dataType)
-                if c in batch.columns
-                else F.lit(None).cast(self.schema[c].dataType).alias(c)
-                for c in pay_cols
-            ],
-            F.col(seq).cast("long").alias("_seq"),
-            (F.col(op) == F.lit("delete")).alias("_deleted"),
-        )
-        # deletes keep the key but null payload
-        changes = changes.select(
-            F.col(self.key),
-            *[
-                F.when(F.col("_deleted"), F.lit(None).cast(self.schema[c].dataType))
-                .otherwise(F.col(c))
-                .alias(c)
-                for c in pay_cols
-                if c != self.key
-            ],
-            "_seq",
-            "_deleted",
-        )
+    def _write_delta(
+        self, rows: DataFrame, version: int
+    ) -> tuple[list[str], dict[str, list[str]], dict[str, dict]]:
+        """Write commit ``version``'s bucketed ``rows`` as delta files,
+        one per write task, and harvest them.  Returns (new files, bucket
+        → the new files holding it, file → per-bucket key ranges).
 
-        # 3. in-batch LWW (≤1 row per key) — optional under
-        # merge-on-read; see the reduce_batch docstring note.
-        from investigraph_etl_spark.operators.lww import lww_dedup
-
-        out_version = self.version + 1
-        if reduce_batch:
-            reduced = lww_dedup(
-                changes,
-                self.key,
-                "_seq",
-                salt_buckets=salt_buckets,
-                winners_strategy=winners_strategy,
-            )
-        else:
-            reduced = changes
-        reduced = reduced.withColumn("_bucket", self._bucket_col()).withColumn(
-            "_commit", F.lit(out_version).cast("long")
-        )
-
-        # 4. append the batch as one delta file per write task.  The
-        # rows keep ``_bucket`` as a stored column; read back with the
-        # key, it yields each file's bucket set (the touched buckets —
-        # no separate distinct() job) and per-bucket key ranges for
-        # lookup file skipping.  NO global sort —
-        # sorting rows that carry token arrays measurably
-        # inverse-scales (BENCH.md).  The rebalance hashes ``_bucket``
-        # into a 4×-buckets fan, so each bucket lands wholly in ONE
-        # slot (32 values in 32 slots would leave ~1/e empty and the
-        # fullest with 2-3 buckets), and AQE coalesces adjacent slots
-        # to the batch's size: a micro-batch writes in one task, so ONE
-        # file per commit that every later read opens once, where a
-        # file per bucket made each read open ~touched-buckets small
-        # files; a bulk batch writes about one file per AQE partition
-        # (an oversized slot may be split — see the docstring).
-        reduced = reduced.hint("rebalance", self.num_buckets * 4, "_bucket")
-        out_dir = self.root / "data" / f"c{out_version:06d}"
-        _t_plan = _time.monotonic()
-        reduced.write.mode("overwrite").parquet(str(out_dir))
-        _t_write = _time.monotonic()
+        The rebalance hashes ``_bucket`` into a 4×-buckets fan, so each
+        bucket lands wholly in ONE slot (32 values in 32 slots would
+        leave ~1/e empty and the fullest with 2-3 buckets), and AQE
+        coalesces adjacent slots to the batch's size: a micro-batch
+        writes in one task, so ONE file per commit that every later read
+        opens once; a bulk batch about one file per core.  AQE also
+        splits a slot larger than ``advisoryPartitionSizeInBytes``, so a
+        very large batch may spread a bucket over several files; readers
+        take each delta set as a file list, so that is safe.  NO global
+        sort — sorting rows that carry token arrays measurably
+        inverse-scales (BENCH.md).  The stored ``_bucket`` column, read
+        back with the key, yields each file's bucket set (the touched
+        buckets, with no distinct() job) and per-bucket key ranges for
+        lookup file skipping."""
+        out_dir = self.root / "data" / f"c{version:06d}"
+        rows.hint("rebalance", self.num_buckets * 4, "_bucket").write.mode(
+            "overwrite"
+        ).parquet(str(out_dir))
         new_stats, held = self._harvest_file_stats(
             sorted(str(p) for p in out_dir.glob("*.parquet")), buckets=True
         )
@@ -1220,66 +1246,7 @@ class HashLakeTable:
         for f in new_files:
             for b in held[f]:
                 by_bucket.setdefault(str(b), []).append(f)
-        touched = sorted(int(b) for b in by_bucket)
-        file_stats = {**self._manifest.get("file_stats", {}), **new_stats}
-
-        # 5. commit: append deltas (a file under every bucket it
-        # holds), swap pointer
-        deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
-        for b, fl in by_bucket.items():
-            deltas.setdefault(b, []).append(fl)
-        commits = {**self._manifest["commits"], stream_id: batch_id}
-        lineage = self._manifest.get("lineage", [])[-200:] + [
-            {"batch_id": batch_id, "stream_id": stream_id, "version": out_version,
-             "touched_buckets": touched, "files": new_files}
-        ]
-        self._manifest = {
-            **self._manifest,
-            "version": out_version,
-            "deltas": deltas,
-            "commits": commits,
-            "lineage": lineage,
-            "file_stats": file_stats,
-        }
-
-        # 6. bounded read amplification: fold buckets at the delta
-        # threshold back into their bases (same manifest commit).
-        # Smoothed (round 2): uniform-key batches make every bucket hit
-        # the threshold on the SAME commit — compacting all of them at
-        # once is a stop-the-world full-table rewrite.  Instead compact
-        # at most num_buckets/auto_compact_deltas buckets per commit,
-        # most-behind first: steady state folds each bucket every
-        # ``auto_compact_deltas`` commits with the same amortized cost
-        # but no latency spike, and delta counts stay bounded by
-        # ~2× the threshold.
-        full = sorted(
-            (int(b) for b, dsets in deltas.items() if len(dsets) >= auto_compact_deltas),
-            key=lambda b: -len(deltas[str(b)]),
-        )
-        per_commit = max(1, self.num_buckets // max(auto_compact_deltas, 1))
-        compacted = 0
-        _t_pre_compact = _time.monotonic()
-        if full and compact_mode in ("sync", "async"):
-            compacted = self._compact(
-                full[:per_commit], out_version, background=compact_mode == "async"
-            )
-        _t_compact = _time.monotonic()
-
-        self._commit_manifest()
-        return {
-            "skipped": False,
-            "version": out_version,
-            "touched_buckets": len(touched),
-            "compacted_buckets": compacted,
-            # per-commit phase timings (microbatch metrics surface):
-            # plan = driver-side prep up to the write action, write =
-            # the delta-write Spark job, compact = amortized folding
-            "timings": {
-                "plan_sec": round(_t_plan - _t0, 3),
-                "write_sec": round(_t_write - _t_plan, 3),
-                "compact_sec": round(_t_compact - _t_pre_compact, 3),
-            },
-        }
+        return new_files, by_bucket, new_stats
 
     # ------------------------------------------------------- compaction
     def _compact(
@@ -1425,20 +1392,33 @@ class HashLakeTable:
 
     def _harvest_compaction(self, *, block: bool) -> int:
         """Apply a finished background fold (see :meth:`_compact`).
-        Returns the number of buckets folded."""
+        Returns the number of buckets folded.  A failed fold is discarded
+        and counted in :attr:`failed_folds`; its buckets stay over the
+        threshold, so a later commit retries them, and its partial output
+        is an orphan :meth:`vacuum` collects.  A merge's non-blocking
+        harvest logs the failure rather than fail that unrelated batch;
+        a blocking harvest re-raises it."""
         if self._compact_future is None:
             return 0
         fut, consumed = self._compact_future
         if not block and not fut.done():
             return 0
-        result = fut.result()  # re-raises background failures
         self._compact_future = None
-        return self._apply_fold(consumed, *result)
+        if (err := fut.exception()) is not None:
+            self.failed_folds += 1
+            if block:
+                raise err
+            _log.warning(
+                "discarded failed fold of buckets %s", list(consumed), exc_info=err
+            )
+            return 0
+        return self._apply_fold(consumed, *fut.result())
 
     def wait_for_compaction(self) -> int:
         """Block until any inflight background compaction lands, fold
         it in, and persist the manifest as a new version.  Call before
-        shutting down a ``compact_mode="async"`` writer."""
+        shutting down a ``compact_mode="async"`` writer.  Raises the
+        fold's exception if it failed (the fold is discarded)."""
         n = self._harvest_compaction(block=True)
         if n:
             self._commit_version()

@@ -5,7 +5,7 @@ parallelism (/root/reference/investigraph/pipeline.py:43-47,
 docs/run/parallelization.md) with Structured Streaming:
 
     readStream(parquet, maxFilesPerTrigger)
-      → foreachBatch( normalize → LWW dedup → lake.merge )
+      → foreachBatch( normalize → lake.merge )
 
 Exactly-once = Structured Streaming checkpoint (at-least-once
 redelivery) + the lake's idempotent commit log keyed by batch id
@@ -13,9 +13,9 @@ redelivery) + the lake's idempotent commit log keyed by batch id
 re-delivers the in-flight batch with the same ``batchId``; the lake
 skips already-committed ids, so the final state is replay-invariant.
 
-Late / out-of-order events need no watermark: LWW on
-``event_sequence`` is order-insensitive within a batch, and across
-batches the merge's ``_seq``-max guard ignores stale arrivals
+Late / out-of-order events need no watermark: the lake's read-time LWW
+on ``(event_sequence, commit)`` is order-insensitive within a batch,
+and across batches its ``_seq``-max guard ignores stale arrivals
 (SURVEY.md §2.9 T5).
 """
 
@@ -37,6 +37,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from investigraph_etl_spark.operators.lww import lww_dedup
 from investigraph_etl_spark.operators.normalize import normalize_events
 
 
@@ -70,10 +71,10 @@ def target_schema(with_lang: bool = False) -> StructType:
 def prepare_batch(events: DataFrame) -> DataFrame:
     """Normalize one (micro)batch for merge (narrow, no shuffle).
 
-    In-batch LWW dedup happens inside ``lake.merge`` — folded with the
-    target-vs-batch merge into a single winner-agg pass
-    (``LWW(LWW(batch) ∪ target) ≡ LWW(batch ∪ target)``).  Call
-    :func:`investigraph_etl_spark.operators.lww.lww_dedup` directly if a
+    No in-batch LWW: the lake's read/fold-time LWW resolves duplicate
+    keys (``LWW(LWW(batch) ∪ target) ≡ LWW(batch ∪ target)``).  Reduce
+    with :func:`investigraph_etl_spark.operators.lww.lww_dedup` when
+    fewer rows pay (a bulk replay, see :func:`replay_batch`) or a
     standalone reduced batch is needed (e.g. feeding a real Iceberg
     MERGE, whose cardinality check requires ≤1 source row per key).
     ``event_time`` is stream metadata (lag metrics), not table payload.
@@ -81,11 +82,20 @@ def prepare_batch(events: DataFrame) -> DataFrame:
     return normalize_events(events).drop("event_time")
 
 
-def replay_batch(events: DataFrame, lake, *, salt_buckets: int = 0, batch_id: int = 0) -> dict:
-    """Batch-mode full replay: the whole changelog as one merge."""
-    return lake.merge(
-        prepare_batch(events), batch_id, salt_buckets=salt_buckets
+def replay_batch(
+    events: DataFrame, lake, *, batch_id: int = 0, salt_buckets: int = 0
+) -> dict:
+    """Batch-mode full replay: the whole changelog, LWW-reduced to ≤1
+    row per key, as one merge.  At many events per doc the reduce pays
+    for itself in delta rows; a micro-batch removes few and is merged as
+    is (:func:`tail_changelog`).  ``salt_buckets`` salts the reduce for
+    single-key skew; ``"auto_count"`` sizes its winner join, as a replay
+    can carry 10^7+ distinct keys (see :func:`lww_dedup`)."""
+    reduced = lww_dedup(
+        prepare_batch(events), lake.key, "event_sequence",
+        salt_buckets=salt_buckets, winners_strategy="auto_count",
     )
+    return lake.merge(reduced, batch_id)
 
 
 class MetricsLog:
@@ -113,10 +123,8 @@ def tail_changelog(
     *,
     with_lang: bool = False,
     max_files_per_trigger: int = 4,
-    salt_buckets: int = 0,
     metrics_path: str | None = None,
     available_now: bool = True,
-    reduce_batch: bool = True,
     compact_mode: str = "sync",
     derived: list | None = None,
     stream: DataFrame | None = None,
@@ -133,12 +141,12 @@ def tail_changelog(
 
     ``available_now=True`` drains everything currently in the directory
     and stops (the replay/bench mode); ``False`` keeps tailing.
-    ``reduce_batch`` / ``compact_mode`` forward to ``lake.merge`` —
-    for sustained micro-batch tailing, ``reduce_batch=False`` +
-    ``compact_mode="async"`` is the measured-fastest policy (the
-    in-batch LWW reduce costs more than the duplicate bytes it saves
-    on low-dup micro-batches, and async compaction overlaps the next
-    commits; see sources/lake.py).  Defaults stay conservative.
+    Each micro-batch is merged unreduced.  ``compact_mode`` forwards to
+    ``lake.merge`` and defaults to ``"sync"``: past the fold threshold
+    ``"async"`` measured about the same cycle CPU (3.12 vs 3.10 s per
+    2k-event commit, change feed and 3-key lookup; 4-core host) and a
+    worse lookup p50 (400 vs 320 ms; +37 % vs +10 % over per-bucket
+    delta files).
     ``derived`` — change-feed consumers refreshed after every batch's
     merge: anything with ``refresh(lake)`` keyed to the lake version —
     ``DerivedAggTable`` materialized views (operators/incremental.py)
@@ -195,13 +203,8 @@ def tail_changelog(
             F.max("event_sequence").alias("max_seq"),
             F.max("event_time").alias("max_event_time"),
         )
-        reduced = prepare_batch(observed)
         result = lake.merge(
-            reduced,
-            batch_id,
-            salt_buckets=salt_buckets,
-            reduce_batch=reduce_batch,
-            compact_mode=compact_mode,
+            prepare_batch(observed), batch_id, compact_mode=compact_mode
         )
         # materialized views ride the same batch cadence; their own
         # version pointer makes a replayed batch a no-op and lets a
@@ -261,7 +264,7 @@ def tail_debezium(
 ):
     """Tail a directory of Debezium JSON-lines envelope files (the
     file-based stand-in for a Kafka topic) into the lake: decode →
-    dead-letter quarantine → normalize → LWW → MERGE, with the same
+    dead-letter quarantine → normalize → MERGE, with the same
     exactly-once checkpoint semantics as :func:`tail_changelog`.
 
     On a real cluster swap the file source for ``format("kafka")`` and

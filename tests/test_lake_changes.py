@@ -179,7 +179,7 @@ def test_changes_range_scan_avoids_compaction_outputs(spark, lake):
     versions = [
         lake.merge(
             prepare_batch(_spark_events(spark, c)), b,
-            reduce_batch=False, compact_mode="async", auto_compact_deltas=2,
+            compact_mode="async", auto_compact_deltas=2,
         )["version"]
         for b, c in enumerate(chunks)
     ]
@@ -664,6 +664,8 @@ def test_changes_property_vs_oracle(spark, tmp_path, seed):
     over from ∪ range must still pick the same winners."""
     import numpy as np
 
+    from investigraph_etl_spark.operators.lww import lww_dedup
+
     rng = np.random.default_rng(seed)
     events = gen_events_pandas(
         0, 900, seed=seed, n_docs=90, dirty_frac=0.1
@@ -676,11 +678,10 @@ def test_changes_property_vs_oracle(spark, tmp_path, seed):
     )
     merged = {0: 0}  # version -> number of commits its state holds
     for c in range(n_commits):
-        r = lake.merge(
-            prepare_batch(_spark_events(spark, events[assign == c])), c,
-            compact_mode=mode, auto_compact_deltas=2,
-            reduce_batch=bool(rng.integers(2)),
-        )
+        batch = prepare_batch(_spark_events(spark, events[assign == c]))
+        if rng.integers(2):  # reduced and unreduced commits in one lake
+            batch = lww_dedup(batch, "doc_id", "event_sequence")
+        r = lake.merge(batch, c, compact_mode=mode, auto_compact_deltas=2)
         merged[r["version"]] = c + 1
         if c < n_commits - 1 and rng.random() < 0.3:
             merged[lake.compact()["version"]] = c + 1

@@ -115,14 +115,32 @@ def test_bucket_pruning_touches_only_needed_buckets(spark, lake):
 
 def test_salted_lww_same_result(spark, lake):
     events = gen_events_pandas(0, 3000, seed=6, n_docs=50, skew_frac=0.6, n_hot=1)
-    lake.merge(prepare_batch(_spark_events(spark, events)), 0, salt_buckets=8)
+    replay_batch(_spark_events(spark, events), lake, salt_buckets=8)
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
 
 
-def test_salt_without_batch_reduce_raises(spark, lake):
-    batch = prepare_batch(_spark_events(spark, gen_events_pandas(0, 10, seed=6)))
-    with pytest.raises(ValueError, match="salt_buckets.*reduce_batch=False"):
-        lake.merge(batch, 0, salt_buckets=8, reduce_batch=False)
+def test_merge_appends_every_row_replay_reduces(spark, lake, tmp_path):
+    """``merge`` appends the batch as is — duplicate keys included — and
+    the read-time LWW resolves them; ``replay_batch`` reduces the bulk
+    batch first, so it stores at most one row per key.  Both read back
+    the oracle state."""
+    def stored(t):  # every row in the table's files (read_raw is LWW'd)
+        return spark.read.parquet(*t._bucket_files(None))
+
+    events = gen_events_pandas(0, 1200, seed=13, n_docs=40)  # heavy dups
+    assert events["doc_id"].nunique() < len(events)
+    lake.merge(prepare_batch(_spark_events(spark, events)), 0)
+    assert stored(lake).count() == len(events)
+    assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
+
+    replayed = HashLakeTable.create(
+        spark, str(tmp_path / "replayed"), target_schema(), num_buckets=8
+    )
+    replay_batch(_spark_events(spark, events), replayed)
+    per_key = stored(replayed).groupBy(replayed.key).count().toPandas()
+    assert len(per_key) == events["doc_id"].nunique()
+    assert (per_key["count"] == 1).all()
+    assert_pdf_equal(replayed.read().toPandas(), oracle_reduce(events))
 
 
 def test_delta_write_rebalance_sized_to_batch(spark, lake, monkeypatch):
@@ -264,7 +282,7 @@ def test_lww_auto_count_strategy(spark, lake):
 
     events = gen_events_pandas(0, 2000, seed=16, n_docs=300)
     df = _spark_events(spark, events)
-    small = lww_dedup(df, "doc_id", "event_sequence", winners_strategy="auto_count")
+    small = lww_dedup(df, "doc_id", "event_sequence")  # auto_count default
     forced = lww_dedup(
         df,
         "doc_id",
@@ -275,6 +293,11 @@ def test_lww_auto_count_strategy(spark, lake):
     a = {r["doc_id"]: r["event_sequence"] for r in small.collect()}
     b = {r["doc_id"]: r["event_sequence"] for r in forced.collect()}
     assert a == b and len(a) > 200
+    # the retired explicit strategies (and typos) are rejected, not
+    # silently planned as "auto"
+    for bad in ("broadcast", "shuffle_hash", "auto_cnt"):
+        with pytest.raises(ValueError, match=repr(bad)):
+            lww_dedup(df, "doc_id", "event_sequence", winners_strategy=bad)
 
 
 def test_vacuum_time_travel_to_retained_manifest(spark, lake):
@@ -331,10 +354,9 @@ def test_vacuum_reclaims_superseded_files_preserves_state(spark, lake):
 
 
 def test_fast_policy_replay_equals_oracle(spark, lake):
-    """The sustained-ingest fast policy — reduce_batch=False (read-time
-    LWW subsumes the in-batch reduce) + compact_mode="async"
-    (background folding harvested at later commits) — must reach the
-    exact same final state as the default path.  auto_compact_deltas=2
+    """The sustained-ingest policy with compact_mode="async"
+    (background folding harvested at later commits) must reach the
+    exact same final state as the oracle.  auto_compact_deltas=2
     forces several async folds to be scheduled AND harvested
     mid-replay, exercising the snapshot/consumed-prefix bookkeeping
     under concurrent delta appends to the same buckets."""
@@ -343,7 +365,7 @@ def test_fast_policy_replay_equals_oracle(spark, lake):
         chunk = events.iloc[start : start + 300]
         lake.merge(
             prepare_batch(_spark_events(spark, chunk)), bid,
-            reduce_batch=False, compact_mode="async", auto_compact_deltas=2,
+            compact_mode="async", auto_compact_deltas=2,
         )
     lake.wait_for_compaction()
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
@@ -355,13 +377,12 @@ def test_fast_policy_replay_equals_oracle(spark, lake):
 
 
 def test_unreduced_deltas_fold_at_compaction(spark, lake):
-    """reduce_batch=False writes duplicate key rows into one commit's
-    delta; read() must still LWW them away, and compact() must fold
-    them into singletons."""
+    """merge writes duplicate key rows into one commit's delta; read()
+    must still LWW them away, and compact() must fold them into
+    singletons."""
     events = gen_events_pandas(0, 1200, seed=12, n_docs=40)  # heavy dups
     lake.merge(
-        prepare_batch(_spark_events(spark, events)), 0,
-        reduce_batch=False, compact_mode="off",
+        prepare_batch(_spark_events(spark, events)), 0, compact_mode="off"
     )
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
     lake.compact()
@@ -380,12 +401,12 @@ def test_sync_compact_lands_inflight_async_fold_first(spark, lake):
     for bid, chunk in enumerate(chunks[:-1]):
         lake.merge(
             prepare_batch(_spark_events(spark, chunk)), bid,
-            reduce_batch=False, compact_mode="async", auto_compact_deltas=2,
+            compact_mode="async", auto_compact_deltas=2,
         )
     # switch to sync for the last commit while a fold may be inflight
     lake.merge(
         prepare_batch(_spark_events(spark, chunks[-1])), len(chunks) - 1,
-        reduce_batch=False, compact_mode="sync", auto_compact_deltas=2,
+        compact_mode="sync", auto_compact_deltas=2,
     )
     lake.wait_for_compaction()
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
@@ -400,13 +421,76 @@ def test_vacuum_lands_inflight_fold_before_collecting(spark, lake):
     for bid, chunk in enumerate(chunks):
         lake.merge(
             prepare_batch(_spark_events(spark, chunk)), bid,
-            reduce_batch=False, compact_mode="async", auto_compact_deltas=2,
+            compact_mode="async", auto_compact_deltas=2,
         )
     lake.vacuum(keep_manifests=1)
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
     # reopening from disk agrees — the fold was persisted, not orphaned
     reopened = HashLakeTable(spark, lake.root)
     assert_pdf_equal(reopened.read().toPandas(), oracle_reduce(events))
+
+
+def test_failed_background_fold_does_not_fail_next_batch(
+    spark, lake, monkeypatch
+):
+    """A background fold that fails is logged, counted and discarded by
+    the next merge's non-blocking harvest — that unrelated batch
+    commits.  The fold's buckets stay over the threshold, so a later
+    commit folds them, and the state equals the oracle throughout."""
+    import concurrent.futures
+
+    real_fold, calls = lake._fold, []
+
+    def fail_once(*args):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError("injected fold failure")
+        return real_fold(*args)
+
+    monkeypatch.setattr(lake, "_fold", fail_once)
+    events = gen_events_pandas(0, 1500, seed=24, n_docs=100)
+    chunks = [events.iloc[i : i + 300] for i in range(0, 1500, 300)]
+    policy = dict(compact_mode="async", auto_compact_deltas=2)
+    lake.merge(prepare_batch(_spark_events(spark, chunks[0])), 0, **policy)
+    lake.merge(prepare_batch(_spark_events(spark, chunks[1])), 1, **policy)
+    # the second commit scheduled the fold; let it fail before commit 3
+    assert len(calls) == 1 and lake._compact_future is not None
+    failed = set(lake._compact_future[1])
+    concurrent.futures.wait([lake._compact_future[0]])
+
+    r = lake.merge(prepare_batch(_spark_events(spark, chunks[2])), 2, **policy)
+    assert not r["skipped"] and lake.failed_folds == 1
+    assert not any(lake._manifest["buckets"].get(b) for b in failed)
+    assert_pdf_equal(
+        lake.read().toPandas(), oracle_reduce(pd.concat(chunks[:3]))
+    )
+    for bid, chunk in enumerate(chunks[3:], start=3):
+        lake.merge(prepare_batch(_spark_events(spark, chunk)), bid, **policy)
+    lake.wait_for_compaction()
+    assert lake.failed_folds == 1 and len(calls) > 1
+    # a later commit folded the failed fold's buckets
+    assert all(lake._manifest["buckets"].get(b) for b in failed)
+    assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
+
+
+def test_failed_fold_raises_from_wait_for_compaction(spark, lake, monkeypatch):
+    """A blocking harvest still surfaces a failed fold, and discards it."""
+
+    def boom(*args):
+        raise RuntimeError("injected fold failure")
+
+    monkeypatch.setattr(lake, "_fold", boom)
+    events = gen_events_pandas(0, 600, seed=25, n_docs=60)
+    for bid, start in enumerate((0, 300)):
+        lake.merge(
+            prepare_batch(_spark_events(spark, events.iloc[start : start + 300])),
+            bid, compact_mode="async", auto_compact_deltas=2,
+        )
+    with pytest.raises(RuntimeError, match="injected fold failure"):
+        lake.wait_for_compaction()
+    assert lake.failed_folds == 1 and lake._compact_future is None
+    assert lake.wait_for_compaction() == 0
+    assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
 
 
 def test_read_keys_prunes_to_key_buckets(spark, lake):

@@ -281,3 +281,38 @@ def test_family_typo_property_rejected(schema):
     }
     with pytest.raises(UnknownPropertyError):
         QueryMapping.from_dict(bad)
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [
+        ("entity", "owner"),  # FtM: reference another mapped entity
+        ("format", "{{name}}"),  # FtM: format string
+        ("fuzzy", True),  # FtM: fuzzy date/number parsing
+        ("colum", "a"),  # a typo of ``column``
+    ],
+)
+def test_unsupported_mapping_field_named_error(field, value):
+    """A property-mapping field the compiler does not implement fails at
+    parse time with a named error naming the entity, the property and
+    the field — not a bare TypeError, and never silently dropped."""
+    from investigraph_etl_spark.plans.mapping import UnsupportedMappingFieldError
+
+    spec = {
+        "entities": {
+            "org": {
+                "schema": "Organization",
+                "key": "a",
+                "properties": {
+                    "name": {"column": "a"},
+                    "country": {"column": "b", field: value},
+                },
+            }
+        }
+    }
+    with pytest.raises(UnsupportedMappingFieldError) as exc:
+        QueryMapping.from_dict(spec)
+    msg = str(exc.value)
+    assert "'org'" in msg and "'country'" in msg and f"'{field}'" in msg
+    with pytest.raises(UnsupportedMappingFieldError):  # vocabulary-independent
+        QueryMapping.from_dict(spec, validate=False)

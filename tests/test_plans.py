@@ -63,7 +63,7 @@ def test_lww_payload_never_sorted(spark):
 
     e = spark.read.parquet(f"{SF}/events.parquet")
     plan = explain_str(
-        lww_dedup(e, "user_id", "event_id", winners_strategy="broadcast")
+        lww_dedup(e, "user_id", "event_id", winners_strategy="auto_count")
     )
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
     # scalar-max winner agg: pure HashAggregate, zero sorts anywhere

@@ -23,7 +23,7 @@ from investigraph_etl_spark.changelog import gen_events_pandas, oracle_reduce
 from investigraph_etl_spark.sources.lake import HashLakeTable
 from investigraph_etl_spark.streaming.tailer import (
     change_schema,
-    prepare_batch,
+    replay_batch,
     target_schema,
 )
 from tests.conftest import assert_pdf_equal
@@ -72,7 +72,7 @@ def test_any_changelog_any_batching_matches_oracle(spark, tmp_path_factory, case
     for bid, ci in enumerate(order):
         chunk = events.iloc[chunks[ci]]
         df = spark.createDataFrame(chunk, schema=change_schema())
-        lake.merge(prepare_batch(df), bid, salt_buckets=salt)
+        replay_batch(df, lake, batch_id=bid, salt_buckets=salt)
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
 
 

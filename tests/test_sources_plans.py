@@ -231,7 +231,7 @@ def test_skew_heavy_replay(spark, tmp_path):
     from investigraph_etl_spark.sources.lake import HashLakeTable
     from investigraph_etl_spark.streaming.tailer import (
         change_schema,
-        prepare_batch,
+        replay_batch,
         target_schema,
     )
     from tests.conftest import assert_pdf_equal
@@ -241,8 +241,42 @@ def test_skew_heavy_replay(spark, tmp_path):
         spark, str(tmp_path / "lake"), target_schema(), num_buckets=8
     )
     sdf = spark.createDataFrame(events, schema=change_schema())
-    lake.merge(prepare_batch(sdf), 0, salt_buckets=8)
+    replay_batch(sdf, lake, salt_buckets=8)
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
+
+
+@pytest.mark.parametrize("command", ["tail", "export", "lookup", "settings"])
+def test_cli_salt_buckets_only_with_replay(command, capsys):
+    """Only the bulk replay reduces in-batch, so ``--salt-buckets`` with
+    any other command is a usage error naming the flag (before any JVM
+    starts)."""
+    from investigraph_etl_spark.run import main
+
+    with pytest.raises(SystemExit) as exc:
+        main([command, "--lake", "unused", "--salt-buckets", "8"])
+    assert exc.value.code == 2
+    # the error line itself, not argparse's usage text, names the flag
+    assert "error: --salt-buckets applies only to replay" in capsys.readouterr().err
+
+
+def test_cli_replay_salted(spark, tmp_path):
+    from investigraph_etl_spark.changelog import (
+        oracle_reduce,
+        read_changelog_pandas,
+        write_changelog,
+    )
+    from investigraph_etl_spark.run import main
+    from investigraph_etl_spark.sources.lake import HashLakeTable
+    from tests.conftest import assert_pdf_equal
+
+    log = str(tmp_path / "log")
+    write_changelog(log, 1200, chunk_size=400, seed=22, n_docs=60)
+    main(["replay", "--changelog", log, "--lake", str(tmp_path / "lake"),
+          "--num-buckets", "8", "--salt-buckets", "4"])
+    lake = HashLakeTable(spark, str(tmp_path / "lake"))
+    assert_pdf_equal(
+        lake.read().toPandas(), oracle_reduce(read_changelog_pandas(log))
+    )
 
 
 def test_cli_export_packed_training_shards(spark, tmp_path):

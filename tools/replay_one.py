@@ -41,6 +41,7 @@ from investigraph_etl_spark.sources.lake import HashLakeTable  # noqa: E402
 from investigraph_etl_spark.streaming.tailer import (  # noqa: E402
     change_schema,
     prepare_batch,
+    replay_batch,
     target_schema,
 )
 
@@ -87,9 +88,7 @@ def main() -> None:
     warm_dir = f"{work}/warm_lake_{cores}"
     shutil.rmtree(warm_dir, ignore_errors=True)
     warm_lake = HashLakeTable.create(spark, warm_dir, target_schema(), num_buckets=num_buckets)
-    warm_lake.merge(
-        prepare_batch(spark.read.schema(change_schema()).parquet(warm_log)), 0
-    )
+    replay_batch(spark.read.schema(change_schema()).parquet(warm_log), warm_lake)
 
     chunk_files = sorted(str(p) for p in pathlib.Path(log_dir).glob("*.parquet"))
     groups: list[list[str]]
@@ -145,7 +144,6 @@ def main() -> None:
                 spark, log_dir, lake, ckpt,
                 max_files_per_trigger=per_trigger,
                 available_now=True,
-                reduce_batch=False,
                 compact_mode="async",
             )
             q.awaitTermination()
@@ -157,7 +155,7 @@ def main() -> None:
         t0 = time.monotonic()
         if len(groups) == 1:
             # bulk replay: events/doc ≫ 1 → the in-batch reduce pays
-            # for itself in write volume; keep it
+            # for itself in write volume (replay_batch)
             batch = spark.read.schema(change_schema()).parquet(*groups[0])
             if slice_mod > 1:
                 from pyspark.sql import functions as F
@@ -166,10 +164,10 @@ def main() -> None:
                     F.pmod(F.xxhash64("doc_id"), F.lit(slice_mod))
                     == F.lit(slice_idx)
                 )
-            lake.merge(prepare_batch(batch), 0)
+            replay_batch(batch, lake)
         else:
             # sustained micro-batch ingest: low in-batch dup ratio →
-            # skip the reduce (read-time LWW subsumes it) and fold
+            # append unreduced (read-time LWW subsumes it) and fold
             # deltas on the background thread, overlapped with the
             # next commits' write jobs.  The final wait is inside the
             # timed region: steady state must include compaction.
@@ -187,10 +185,7 @@ def main() -> None:
                 refreshes: list[float] = []
             for bid, group in enumerate(groups):
                 batch = spark.read.schema(change_schema()).parquet(*group)
-                lake.merge(
-                    prepare_batch(batch), bid,
-                    reduce_batch=False, compact_mode="async",
-                )
+                lake.merge(prepare_batch(batch), bid, compact_mode="async")
                 if derived is not None:
                     tr = time.monotonic()
                     derived.refresh(lake)
