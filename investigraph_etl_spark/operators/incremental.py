@@ -183,7 +183,7 @@ class DerivedAggTable:
         # a view over two small columns never reads the token arrays,
         # which is what keeps refresh cost metadata-weight when uniform
         # batches touch every bucket (measured: unprojected refreshes
-        # GREW with table size; see BENCH.md)
+        # GREW with table size; see BASELINE.md, History)
         feed = lake.read_changes(
             v0,
             v1,

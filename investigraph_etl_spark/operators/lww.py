@@ -6,7 +6,7 @@ Reference semantics: in-task fragment merge keyed by entity id —
 form: reduce each (micro)batch to ≤1 row per ``doc_id``, keeping the
 row with the greatest ``event_sequence``.
 
-Physical strategy — measured, not guessed (see BENCH.md):
+Physical strategy — measured, not guessed (BASELINE.md, History):
 
 * ``max_by(struct(payload…))`` and ranking windows both force
   **SortAggregate / Sort** because the agg buffer (or sort row)
@@ -59,7 +59,7 @@ def lww_dedup(
       shuffled hash join (one payload shuffle, still no sort).  Left to
       AQE, a winner set past ``autoBroadcastJoinThreshold`` degrades to
       a sort-merge join that SORTS the full payload (measured 10×
-      slower with 30× the GC, BENCH.md).
+      slower with 30× the GC, BASELINE.md History).
     * ``"auto"`` (read/fold-time LWW) — defer to Catalyst/AQE.
 
     Any other value raises ``ValueError``.

@@ -730,10 +730,10 @@ class HashLakeTable:
         filter would otherwise degrade to a narrow full-table scan
         (compaction writes rows unsorted, so parquet row-group stats
         cannot skip on ``_commit``; measured as 2-3× refresh spikes
-        after every fold, BENCH.md).  Vacuum's contiguous last-K
-        retention means the feed's existing contract (the FROM manifest
-        is retained) already keeps every range commit's delta files
-        alive: each is referenced by its own, newer, also-retained
+        after every fold, BASELINE.md History).  Vacuum's contiguous
+        last-K retention means the feed's existing contract (the FROM
+        manifest is retained) already keeps every range commit's delta
+        files alive: each is referenced by its own, newer, also-retained
         manifest.
 
         Returns ``None`` — caller falls back to the manifest file set
@@ -1230,10 +1230,10 @@ class HashLakeTable:
         very large batch may spread a bucket over several files; readers
         take each delta set as a file list, so that is safe.  NO global
         sort — sorting rows that carry token arrays measurably
-        inverse-scales (BENCH.md).  The stored ``_bucket`` column, read
-        back with the key, yields each file's bucket set (the touched
-        buckets, with no distinct() job) and per-bucket key ranges for
-        lookup file skipping."""
+        inverse-scales (BASELINE.md History).  The stored ``_bucket``
+        column, read back with the key, yields each file's bucket set
+        (the touched buckets, with no distinct() job) and per-bucket key
+        ranges for lookup file skipping."""
         out_dir = self.root / "data" / f"c{version:06d}"
         rows.hint("rebalance", self.num_buckets * 4, "_bucket").write.mode(
             "overwrite"
@@ -1528,6 +1528,13 @@ class IcebergLakeTable:
                 "Iceberg runtime not configured; use HashLakeTable instead"
             )
         self.spark, self.table, self.key = spark, table, key
+
+    # read by replay_batch's skip check and the tailer's metrics record:
+    # this backend keeps no batch-id log and runs no background folds
+    failed_folds = 0
+
+    def last_committed(self, stream_id: str = "default") -> int:
+        return -1
 
     def merge(self, batch: DataFrame, batch_id: int, **_: object) -> dict:
         batch.createOrReplaceTempView("_merge_src")

@@ -90,7 +90,11 @@ def replay_batch(
     for itself in delta rows; a micro-batch removes few and is merged as
     is (:func:`tail_changelog`).  ``salt_buckets`` salts the reduce for
     single-key skew; ``"auto_count"`` sizes its winner join, as a replay
-    can carry 10^7+ distinct keys (see :func:`lww_dedup`)."""
+    can carry 10^7+ distinct keys (see :func:`lww_dedup`).  A batch id
+    the lake already committed returns before the reduce is built: its
+    winner count is an eager job over the whole changelog."""
+    if batch_id <= lake.last_committed():
+        return {"skipped": True, "version": lake.version}
     reduced = lww_dedup(
         prepare_batch(events), lake.key, "event_sequence",
         salt_buckets=salt_buckets, winners_strategy="auto_count",
@@ -233,6 +237,8 @@ def tail_changelog(
                 "skipped": result.get("skipped", False),
                 "touched_buckets": result.get("touched_buckets"),
                 "compacted_buckets": result.get("compacted_buckets"),
+                # cumulative over the lake's life, not per batch
+                "failed_folds": lake.failed_folds,
                 # the merge's phase seconds (plan/write/compact)
                 "timings": result.get("timings"),
                 "wall_time": time.time(),

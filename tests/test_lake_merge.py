@@ -37,6 +37,27 @@ def test_batch_replay_equals_oracle(spark, lake):
     assert_pdf_equal(got, expected)
 
 
+def test_replay_of_committed_batch_launches_no_job(spark, lake):
+    """A re-delivered bulk batch returns before its reduce is built:
+    the winner count would otherwise scan the whole changelog."""
+    events = _spark_events(spark, gen_events_pandas(0, 2000, seed=5, n_docs=300))
+    replay_batch(events, lake, batch_id=0)
+    before = lake.read().toPandas()
+    version = lake.version
+    sc = spark.sparkContext
+    sc.setJobGroup("replay-again", "re-deliver committed batch 0")
+    try:
+        r = replay_batch(events, lake, batch_id=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("replay-again")) == []
+    assert r == {"skipped": True, "version": version}
+    assert_pdf_equal(lake.read().toPandas(), before)
+
+
 def test_multi_batch_replay_equals_oracle(spark, lake):
     events = gen_events_pandas(0, 3000, seed=1, n_docs=200)
     for bid, start in enumerate(range(0, 3000, 700)):
@@ -897,6 +918,9 @@ def test_iceberg_requires_configured_runtime(spark):
 
     with pytest.raises(RuntimeError, match="Iceberg runtime not configured"):
         IcebergLakeTable(spark, "cat.db.docs")
+    # what replay_batch and the tailer read besides merge()
+    bare = object.__new__(IcebergLakeTable)
+    assert (bare.last_committed(), bare.failed_folds) == (-1, 0)
 
 
 # -------------------- async-compaction concurrency property (task 6)
