@@ -57,7 +57,6 @@ reference's warning that parallel loads need a parallel-safe store
 from __future__ import annotations
 
 import json
-import logging
 import os
 import pathlib
 import re
@@ -72,8 +71,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-_log = logging.getLogger(__name__)
 
 _INTERNAL = [
     StructField("_seq", LongType(), True),
@@ -244,14 +241,6 @@ class HashLakeTable:
         # only buckets whose file lists changed get new bucket-manifest
         # files (the Iceberg manifest-reuse analog)
         self._persisted = self._manifest
-        # async-compaction state (see _compact): _compact_future is None
-        # or (future, consumed) where consumed maps bucket -> number of
-        # delta sets the running fold snapshotted (harvest drops exactly
-        # that prefix per bucket)
-        self._compact_pool = None
-        self._compact_future = None
-        # background folds discarded after a failure (_harvest_compaction)
-        self.failed_folds = 0
         # compaction rewrites sort each bucket by key and roll files at
         # this row count, giving the bucket a set of key-range-disjoint
         # base files whose footer min/max land in the bucket manifest —
@@ -585,7 +574,7 @@ class HashLakeTable:
         file stays listed under b's unfolded neighbours, so its b rows
         go stale.  A fold writes b's base at a version x(b) such that
         every delta set it consumed is ≤ x(b) and every one still listed
-        or appended later is > x(b) (sync merges, async merges and
+        or appended later is > x(b) (folds in :meth:`merge` and
         :meth:`compact` alike).  Hence a row with a stored ``_bucket`` b
         is live iff b is requested and ``_commit`` > x(b) (−1 when b has
         no base).  Base rows read ``_bucket`` as null and are live;
@@ -1017,7 +1006,6 @@ class HashLakeTable:
         seq: str = "event_sequence",
         op: str = "op",
         auto_compact_deltas: int = 8,
-        compact_mode: str = "sync",
         schema_policy: str = "evolve",
     ) -> dict:
         """Append one change batch as a merge-on-read delta commit:
@@ -1033,14 +1021,13 @@ class HashLakeTable:
         (:func:`~investigraph_etl_spark.streaming.tailer.replay_batch`).
 
         Any touched bucket accumulating ``auto_compact_deltas`` delta
-        sets is folded into its base (see :meth:`compact`) — read
-        amplification stays bounded while amortized compaction cost per
-        commit is table/auto_compact.  ``compact_mode`` — ``"sync"``
-        folds inline (bounded latency spike), ``"async"`` runs the same
-        fold on a background thread so it overlaps the next commits'
-        write jobs (the Iceberg maintenance-process analog; harvested
-        into the manifest at the next commit), ``"off"`` leaves
-        compaction to an explicit :meth:`compact` call.
+        sets is folded into its base inline, in the same manifest commit
+        (see :meth:`compact`) — read amplification stays bounded while
+        amortized compaction cost per commit is table/auto_compact.  A
+        fold that raises rolls the in-memory manifest back to the last
+        persisted one and re-raises: the batch is not committed, so its
+        retry under the same id applies it, and its delta files are
+        orphans :meth:`vacuum` collects.
 
         Exactly-once: Structured Streaming batch ids are monotonic and a
         retried batch re-runs with the same id, so a batch with
@@ -1054,8 +1041,6 @@ class HashLakeTable:
         if batch_id <= self.last_committed(stream_id):
             return {"skipped": True, "version": self.version}
         _t0 = _time.monotonic()
-        # fold any finished background compaction into this commit
-        self._harvest_compaction(block=False)
         self._gate_schema(batch, seq, op, schema_policy)
 
         # shape: change rows → target row shape (+ internal columns)
@@ -1127,12 +1112,15 @@ class HashLakeTable:
             key=lambda b: -len(deltas[str(b)]),
         )
         per_commit = max(1, self.num_buckets // max(auto_compact_deltas, 1))
-        compacted = 0
         _t_pre_compact = _time.monotonic()
-        if full and compact_mode in ("sync", "async"):
-            compacted = self._compact(
-                full[:per_commit], out_version, background=compact_mode == "async"
-            )
+        try:
+            compacted = self._compact(full[:per_commit], out_version) if full else 0
+        except BaseException:
+            # this commit's manifest is not persisted: drop it from the
+            # handle too, or the handle would claim a batch id the disk
+            # never committed (the delta files are orphans for vacuum)
+            self._manifest = self._persisted
+            raise
         _t_compact = _time.monotonic()
 
         self._commit_manifest()
@@ -1249,79 +1237,33 @@ class HashLakeTable:
         return new_files, by_bucket, new_stats
 
     # ------------------------------------------------------- compaction
-    def _compact(
-        self, buckets: list[int], version: int, *, background: bool = False
-    ) -> int:
+    def _compact(self, buckets: list[int], version: int) -> int:
         """Fold ``buckets``' base ∪ deltas into new bases written at
-        ``version`` — the one compaction path behind sync merges,
-        :meth:`compact` and async merges.  Returns the number of buckets
-        folded (with ``background``: scheduled).
-
-        Snapshots the buckets on the committer thread — their files, the
-        :meth:`_live` filter over them, the payload schema, and per
-        bucket the number of delta sets the fold consumes — then runs
-        :meth:`_fold` (pure compute) and :meth:`_apply_fold` (the only
-        manifest mutation) back to back.
-        ``background`` instead submits :meth:`_fold` to a one-slot pool
-        so it overlaps the next commits' write jobs (the Iceberg
-        maintenance-process analog); a busy pool skips scheduling (the
-        buckets stay over threshold and retry next commit), and
-        :meth:`_harvest_compaction` applies the result.  Only a fold
-        removes files from the manifest and only one runs at a time
-        (single writer), so the snapshot stays valid; delta sets
-        appended after it survive because the apply drops exactly the
-        consumed prefix.
+        ``version`` — the one compaction path behind :meth:`merge` and
+        :meth:`compact`: :meth:`_fold` (Spark work, no table state), then
+        :meth:`_apply_fold` (the only manifest mutation; the caller
+        persists it).  Returns the number of buckets folded.
 
         Crash safety: if the process dies mid-fold the manifest never
-        references the new files; :meth:`vacuum` removes the orphans.
-        Do not run :meth:`vacuum` while a compaction is inflight (it
-        would delete the fold's not-yet-referenced output)."""
-        if background and self._compact_future is not None:
-            return 0
-        # single-compactor rule (also the sync/async mode-switch guard):
-        # an inflight fold snapshotted delta prefixes this one would
-        # also consume — land it first or its apply drops the wrong sets
-        self._harvest_compaction(block=True)
+        references the new files; :meth:`vacuum` removes the orphans."""
         files = self._bucket_files(buckets)
         if not files:
             return 0
-        deltas = self._manifest.get("deltas", {})
-        consumed = {str(b): len(deltas.get(str(b), [])) for b in buckets}
         out_dir = self.root / "data" / f"c{version:06d}x"
-        live = self._live(self._manifest, buckets)
-        snapshot = (files, live, len(consumed), self.schema, out_dir)
-        if not background:
-            return self._apply_fold(consumed, *self._fold(*snapshot))
-        if self._compact_pool is None:
-            import concurrent.futures
-
-            self._compact_pool = concurrent.futures.ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="lake-compact"
-            )
-        self._compact_future = (
-            self._compact_pool.submit(self._fold, *snapshot),
-            consumed,
-        )
-        return len(consumed)
+        return self._apply_fold(buckets, *self._fold(files, buckets, out_dir))
 
     def _fold(
-        self,
-        files: list[str],
-        live: Column,
-        n_folded: int,
-        payload: StructType,
-        out_dir: pathlib.Path,
+        self, files: list[str], buckets: list[int], out_dir: pathlib.Path
     ) -> tuple[dict[str, list[str]], dict[str, list]]:
-        """LWW-fold the snapshotted ``files`` of ``n_folded`` buckets (read
-        with the snapshot's ``payload`` schema) into new per-bucket bases
-        under ``out_dir``.  Touches no table state; returns (bucket → new
-        base files, file → [min,max] key stats).
+        """LWW-fold ``files``, the base and delta files of ``buckets``,
+        into new per-bucket bases under ``out_dir``.  Touches no table
+        state; returns (bucket → new base files, file → [min,max] key
+        stats).
 
         The folded buckets' delta files are shared with other buckets,
-        so the scan keeps only the rows ``live`` admits — the
-        :meth:`_live` rule restricted to the folded buckets: other
-        buckets' rows, and rows an earlier fold already put in a base,
-        stay out of the new bases.
+        so the scan keeps only the rows the :meth:`_live` rule,
+        restricted to ``buckets``, admits: other buckets' rows, and rows
+        an earlier fold already put in a base, stay out of the new bases.
 
         The rewrite hashes into the delta write's 4×-buckets fan (merge
         step 4) with an explicit repartition, not a rebalance: AQE's
@@ -1335,10 +1277,11 @@ class HashLakeTable:
         base files per bucket.  Delta files stay unsorted (the hot write
         path never sorts) — at 100 TB the compacted base is ~everything,
         so skipping lives where the bytes are."""
-        merged = self._lww(self._scan(files, payload, live)).withColumn(
+        live = self._live(self._manifest, buckets)
+        merged = self._lww(self._scan(files, self.schema, live)).withColumn(
             "_bucket", self._bucket_col()
         )
-        merged = merged.repartition(n_folded * 4, "_bucket")
+        merged = merged.repartition(len(buckets) * 4, "_bucket")
         merged = merged.sortWithinPartitions("_bucket", self.key)
         writer = merged.write
         if self.compact_target_file_rows:
@@ -1357,27 +1300,23 @@ class HashLakeTable:
 
     def _apply_fold(
         self,
-        consumed: dict[str, int],
+        buckets: list[int],
         new_base: dict[str, list[str]],
         new_stats: dict[str, list],
     ) -> int:
         """Land a fold in the in-memory manifest (persisted by the
         caller's next manifest write): each folded bucket's base becomes
-        the fold's output, and its first ``consumed[b]`` delta sets —
-        the ones the fold read — are dropped.  Delta sets appended after
-        the snapshot stay.  A dropped file's stats go with it unless an
-        unfolded bucket still lists the (shared) file.  Returns the
-        number of buckets folded."""
+        the fold's output and all its delta sets are dropped.  A dropped
+        file's stats go with it unless an unfolded bucket still lists
+        the (shared) file.  Returns the number of buckets folded."""
         bases = dict(self._manifest["buckets"])
-        deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
+        deltas = dict(self._manifest.get("deltas", {}))
         file_stats = dict(self._manifest.get("file_stats", {}))
         dropped: set[str] = set()
-        for b, n in consumed.items():
+        for b in map(str, buckets):
             dsets = deltas.pop(b, [])
-            dropped.update(bases.get(b, []), (f for ds in dsets[:n] for f in ds))
+            dropped.update(bases.get(b, []), (f for ds in dsets for f in ds))
             bases[b] = new_base.get(b, [])
-            if dsets[n:]:
-                deltas[b] = dsets[n:]
         dropped -= {f for dsets in deltas.values() for ds in dsets for f in ds}
         for f in dropped:
             file_stats.pop(f, None)
@@ -1388,53 +1327,23 @@ class HashLakeTable:
             "deltas": deltas,
             "file_stats": file_stats,
         }
-        return len(consumed)
-
-    def _harvest_compaction(self, *, block: bool) -> int:
-        """Apply a finished background fold (see :meth:`_compact`).
-        Returns the number of buckets folded.  A failed fold is discarded
-        and counted in :attr:`failed_folds`; its buckets stay over the
-        threshold, so a later commit retries them, and its partial output
-        is an orphan :meth:`vacuum` collects.  A merge's non-blocking
-        harvest logs the failure rather than fail that unrelated batch;
-        a blocking harvest re-raises it."""
-        if self._compact_future is None:
-            return 0
-        fut, consumed = self._compact_future
-        if not block and not fut.done():
-            return 0
-        self._compact_future = None
-        if (err := fut.exception()) is not None:
-            self.failed_folds += 1
-            if block:
-                raise err
-            _log.warning(
-                "discarded failed fold of buckets %s", list(consumed), exc_info=err
-            )
-            return 0
-        return self._apply_fold(consumed, *fut.result())
+        return len(buckets)
 
     def wait_for_compaction(self) -> int:
-        """Block until any inflight background compaction lands, fold
-        it in, and persist the manifest as a new version.  Call before
-        shutting down a ``compact_mode="async"`` writer.  Raises the
-        fold's exception if it failed (the fold is discarded)."""
-        n = self._harvest_compaction(block=True)
-        if n:
-            self._commit_version()
-        return n
+        """Folds run inline in :meth:`merge` and :meth:`compact`, so
+        none is ever pending: a no-op that returns 0 (buckets landed),
+        kept for callers that drain compaction before shutting down."""
+        return 0
 
     def compact(self, buckets: list[int] | None = None) -> dict:
         """Fold deltas into bases (Iceberg ``rewrite_data_files`` analog)
         as a new table version.  ``buckets`` defaults to every bucket
         that currently has deltas."""
-        # land any inflight async fold first — single-compactor rule
-        self._harvest_compaction(block=True)
         deltas = self._manifest.get("deltas", {})
         targets = (
             sorted(int(b) for b in deltas if deltas[b])
             if buckets is None
-            else list(buckets)
+            else sorted(set(buckets))
         )
         if not targets:
             return {"compacted_buckets": 0, "version": self.version}
@@ -1458,10 +1367,6 @@ class HashLakeTable:
         resolved, so opening the table via a relative path / symlink
         spelling cannot orphan live files (round-2 fix).  Single-writer
         discipline: do not run concurrently with a pinned reader."""
-        # an inflight async fold's output is not yet referenced by any
-        # manifest and would be deleted as an orphan — land it AND
-        # persist it (vacuum reads manifests from disk) first
-        self.wait_for_compaction()
         mdir = self.root / "manifests"
         manifests = sorted(mdir.glob("v*.json"))
         expired = manifests[:-keep_manifests] if keep_manifests > 0 else []
@@ -1529,10 +1434,7 @@ class IcebergLakeTable:
             )
         self.spark, self.table, self.key = spark, table, key
 
-    # read by replay_batch's skip check and the tailer's metrics record:
-    # this backend keeps no batch-id log and runs no background folds
-    failed_folds = 0
-
+    # read by replay_batch's skip check: this backend keeps no batch-id log
     def last_committed(self, stream_id: str = "default") -> int:
         return -1
 

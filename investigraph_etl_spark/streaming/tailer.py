@@ -129,7 +129,6 @@ def tail_changelog(
     max_files_per_trigger: int = 4,
     metrics_path: str | None = None,
     available_now: bool = True,
-    compact_mode: str = "sync",
     derived: list | None = None,
     stream: DataFrame | None = None,
     dead_letter_dir: str | None = None,
@@ -145,12 +144,8 @@ def tail_changelog(
 
     ``available_now=True`` drains everything currently in the directory
     and stops (the replay/bench mode); ``False`` keeps tailing.
-    Each micro-batch is merged unreduced.  ``compact_mode`` forwards to
-    ``lake.merge`` and defaults to ``"sync"``: past the fold threshold
-    ``"async"`` measured about the same cycle CPU (3.12 vs 3.10 s per
-    2k-event commit, change feed and 3-key lookup; 4-core host) and a
-    worse lookup p50 (400 vs 320 ms; +37 % vs +10 % over per-bucket
-    delta files).
+    Each micro-batch is merged unreduced, and its folds run inline in
+    the merge: a fold that fails fails the batch.
     ``derived`` — change-feed consumers refreshed after every batch's
     merge: anything with ``refresh(lake)`` keyed to the lake version —
     ``DerivedAggTable`` materialized views (operators/incremental.py)
@@ -158,10 +153,6 @@ def tail_changelog(
     Each keeps its own lake-version pointer, so replayed batches are
     no-ops and a consumer that missed batches catches up over the
     widened feed.
-    With ``compact_mode="async"``, call ``lake.wait_for_compaction()``
-    after the query terminates to land any inflight fold (state is
-    correct either way; the unharvested output is merely orphaned and
-    vacuum-collected).
     The declared schema may be a superset of early files — parquet
     fills missing columns with null, and the lake promotes genuinely
     new columns on first sight (additive evolution, SURVEY.md T6).
@@ -207,9 +198,7 @@ def tail_changelog(
             F.max("event_sequence").alias("max_seq"),
             F.max("event_time").alias("max_event_time"),
         )
-        result = lake.merge(
-            prepare_batch(observed), batch_id, compact_mode=compact_mode
-        )
+        result = lake.merge(prepare_batch(observed), batch_id)
         # materialized views ride the same batch cadence; their own
         # version pointer makes a replayed batch a no-op and lets a
         # missed refresh catch up over the widened feed
@@ -237,8 +226,6 @@ def tail_changelog(
                 "skipped": result.get("skipped", False),
                 "touched_buckets": result.get("touched_buckets"),
                 "compacted_buckets": result.get("compacted_buckets"),
-                # cumulative over the lake's life, not per batch
-                "failed_folds": lake.failed_folds,
                 # the merge's phase seconds (plan/write/compact)
                 "timings": result.get("timings"),
                 "wall_time": time.time(),

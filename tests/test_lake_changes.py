@@ -176,16 +176,19 @@ def test_changes_range_scan_avoids_compaction_outputs(spark, lake):
 
     events = gen_events_pandas(0, 3000, seed=72, n_docs=150)
     chunks = [events.iloc[i::5] for i in range(5)]
-    versions = [
+    # folds start at the 4th commit's delta depth of 4, after vf: vf's
+    # from-state is all delta files, so a compaction output in the
+    # scan could only come from the range side
+    results = [
         lake.merge(
-            prepare_batch(_spark_events(spark, c)), b,
-            compact_mode="async", auto_compact_deltas=2,
-        )["version"]
+            prepare_batch(_spark_events(spark, c)), b, auto_compact_deltas=4
+        )
         for b, c in enumerate(chunks)
     ]
-    lake.wait_for_compaction()
+    assert sum(r["compacted_buckets"] for r in results) > 0
     lake.compact()
-    vf = versions[2]
+    vf = results[2]["version"]
+    assert not lake._manifest_at(vf)["buckets"]
     feed = lake.read_changes(vf)
     expected = oracle_changes(pd.concat(chunks[:3]), events)
     assert_pdf_equal(feed.toPandas(), expected)
@@ -653,7 +656,7 @@ def test_changes_property_vs_oracle(spark, tmp_path, seed):
     """Seeded random histories against the pandas oracles.  Each event
     lands in a random commit, so later commits carry late losers
     against earlier winners; the generator's deletes leave tombstones.
-    Commits fold their buckets sync or async at a delta depth of 2,
+    Commits fold their buckets inline at a delta depth of 2,
     some are followed by a full compact, and the history ends in one.
     Feeds for random (from, to) pairs — net, preimage and a projected
     preimage feed — must equal the oracles, first on the
@@ -672,7 +675,6 @@ def test_changes_property_vs_oracle(spark, tmp_path, seed):
     ).reset_index(drop=True)
     n_commits = int(rng.integers(4, 7))
     assign = rng.permutation(np.arange(len(events)) % n_commits)
-    mode = str(rng.choice(["sync", "async"]))
     lake = HashLakeTable.create(
         spark, str(tmp_path / "lake"), target_schema(), num_buckets=4
     )
@@ -681,11 +683,10 @@ def test_changes_property_vs_oracle(spark, tmp_path, seed):
         batch = prepare_batch(_spark_events(spark, events[assign == c]))
         if rng.integers(2):  # reduced and unreduced commits in one lake
             batch = lww_dedup(batch, "doc_id", "event_sequence")
-        r = lake.merge(batch, c, compact_mode=mode, auto_compact_deltas=2)
+        r = lake.merge(batch, c, auto_compact_deltas=2)
         merged[r["version"]] = c + 1
         if c < n_commits - 1 and rng.random() < 0.3:
             merged[lake.compact()["version"]] = c + 1
-    lake.wait_for_compaction()
     merged[lake.compact()["version"]] = n_commits
 
     versions = sorted(merged)
@@ -779,10 +780,10 @@ def test_changes_lineage_without_files_takes_fallback(spark, lake):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("seed,mode", [(91, "sync"), (92, "async"), (93, "async")])
-def test_partial_folds_of_shared_delta_files(spark, tmp_path, seed, mode):
+@pytest.mark.parametrize("seed", [91, 92, 93])
+def test_partial_folds_of_shared_delta_files(spark, tmp_path, seed):
     """Seeded histories on 4 buckets whose commits each touch 2-3
-    buckets, folded sync or async at a delta depth of 2.  A commit
+    buckets, folded inline at a delta depth of 2.  A commit
     writes one delta file listed under every bucket it holds, so a
     fold of some of them leaves the file listed under the others with
     stale rows of the folded ones.  Every read must drop those rows:
@@ -840,7 +841,7 @@ def test_partial_folds_of_shared_delta_files(spark, tmp_path, seed, mode):
     for c in range(n_commits):
         r = lake.merge(
             prepare_batch(_spark_events(spark, events[assign == c])), c,
-            compact_mode=mode, auto_compact_deltas=2,
+            auto_compact_deltas=2,
         )
         merged[r["version"]] = c + 1
         man = lake.snapshot()
@@ -862,8 +863,6 @@ def test_partial_folds_of_shared_delta_files(spark, tmp_path, seed, mode):
             unique_keys(lake.read_keys(keys).toPandas()),
             live.drop(columns=["_seq", "_deleted"]),
         )
-    if lake.wait_for_compaction():
-        merged[lake.version] = n_commits
     assert partial, "no fold left a shared delta file partly listed"
 
     versions = sorted(merged)

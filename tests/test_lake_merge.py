@@ -266,22 +266,18 @@ def test_compact_folds_deltas_preserves_state(spark, lake):
     )
 
 
-@pytest.mark.parametrize("compact_mode", ["sync", "async"])
-def test_auto_compact_triggers_at_threshold(spark, lake, compact_mode):
-    """Both entry points of the one fold — inline (sync) and the
-    background pool (async) — fold threshold buckets into bases that
-    carry harvested key stats."""
+def test_auto_compact_triggers_at_threshold(spark, lake):
+    """Merge folds threshold buckets inline into bases that carry
+    harvested key stats."""
     events = gen_events_pandas(0, 1200, seed=15, n_docs=20)  # few docs → few buckets
     compactions = 0
     for bid, start in enumerate(range(0, 1200, 200)):
         chunk = events.iloc[start : start + 200]
         r = lake.merge(
             prepare_batch(_spark_events(spark, chunk)), bid,
-            auto_compact_deltas=3, compact_mode=compact_mode,
+            auto_compact_deltas=3,
         )
         compactions += r.get("compacted_buckets", 0)
-    if compact_mode == "async":
-        lake.wait_for_compaction()
     assert compactions > 0
     deltas = lake.snapshot()["deltas"]
     # smoothed compaction folds a bounded bucket set per commit, so
@@ -375,24 +371,20 @@ def test_vacuum_reclaims_superseded_files_preserves_state(spark, lake):
 
 
 def test_fast_policy_replay_equals_oracle(spark, lake):
-    """The sustained-ingest policy with compact_mode="async"
-    (background folding harvested at later commits) must reach the
-    exact same final state as the oracle.  auto_compact_deltas=2
-    forces several async folds to be scheduled AND harvested
-    mid-replay, exercising the snapshot/consumed-prefix bookkeeping
-    under concurrent delta appends to the same buckets."""
+    """The sustained-ingest policy must reach the exact same final
+    state as the oracle.  auto_compact_deltas=2 forces several inline
+    folds mid-replay, each followed by more delta appends to the same
+    buckets."""
     events = gen_events_pandas(0, 3000, seed=11, n_docs=200, dirty_frac=0.1)
     for bid, start in enumerate(range(0, 3000, 300)):
         chunk = events.iloc[start : start + 300]
         lake.merge(
             prepare_batch(_spark_events(spark, chunk)), bid,
-            compact_mode="async", auto_compact_deltas=2,
+            auto_compact_deltas=2,
         )
-    lake.wait_for_compaction()
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
     # reopening from disk (fresh reader) sees the identical state —
-    # every harvested fold was persisted by a later manifest write or
-    # by wait_for_compaction's own version bump
+    # every fold was persisted by its merge's manifest write
     reopened = HashLakeTable(spark, lake.root)
     assert_pdf_equal(reopened.read().toPandas(), oracle_reduce(events))
 
@@ -402,9 +394,9 @@ def test_unreduced_deltas_fold_at_compaction(spark, lake):
     must still LWW them away, and compact() must fold them into
     singletons."""
     events = gen_events_pandas(0, 1200, seed=12, n_docs=40)  # heavy dups
-    lake.merge(
-        prepare_batch(_spark_events(spark, events)), 0, compact_mode="off"
-    )
+    # one commit never reaches the default fold threshold
+    lake.merge(prepare_batch(_spark_events(spark, events)), 0)
+    assert any(lake.snapshot()["deltas"].values())
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
     lake.compact()
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
@@ -413,105 +405,47 @@ def test_unreduced_deltas_fold_at_compaction(spark, lake):
     assert (raw["count"] == 1).all()
 
 
-def test_sync_compact_lands_inflight_async_fold_first(spark, lake):
-    """Mode-switch safety: an inflight async fold's consumed-prefix
-    bookkeeping must be applied before any sync fold touches the same
-    buckets — otherwise the harvest would drop the wrong delta sets."""
-    events = gen_events_pandas(0, 2000, seed=21, n_docs=120, dirty_frac=0.1)
-    chunks = [events.iloc[i : i + 250] for i in range(0, 2000, 250)]
-    for bid, chunk in enumerate(chunks[:-1]):
-        lake.merge(
-            prepare_batch(_spark_events(spark, chunk)), bid,
-            compact_mode="async", auto_compact_deltas=2,
-        )
-    # switch to sync for the last commit while a fold may be inflight
-    lake.merge(
-        prepare_batch(_spark_events(spark, chunks[-1])), len(chunks) - 1,
-        compact_mode="sync", auto_compact_deltas=2,
+def test_failed_fold_rolls_back_the_commit(spark, tmp_path, monkeypatch):
+    """A fold that raises inside merge fails the batch and leaves the
+    handle where the disk is: the same version and last committed batch
+    id as a reopened handle.  The retry of that batch id is applied, not
+    skipped, and both handles then read the oracle's state."""
+    lake = HashLakeTable.create(
+        spark, str(tmp_path / "lake"), target_schema(), num_buckets=4
     )
-    lake.wait_for_compaction()
-    assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
-
-
-def test_vacuum_lands_inflight_fold_before_collecting(spark, lake):
-    """vacuum() must persist an inflight async fold before orphan
-    collection, or it would delete the fold's not-yet-referenced
-    output files."""
-    events = gen_events_pandas(0, 1500, seed=22, n_docs=100)
-    chunks = [events.iloc[i : i + 300] for i in range(0, 1500, 300)]
-    for bid, chunk in enumerate(chunks):
-        lake.merge(
-            prepare_batch(_spark_events(spark, chunk)), bid,
-            compact_mode="async", auto_compact_deltas=2,
-        )
-    lake.vacuum(keep_manifests=1)
-    assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
-    # reopening from disk agrees — the fold was persisted, not orphaned
-    reopened = HashLakeTable(spark, lake.root)
-    assert_pdf_equal(reopened.read().toPandas(), oracle_reduce(events))
-
-
-def test_failed_background_fold_does_not_fail_next_batch(
-    spark, lake, monkeypatch
-):
-    """A background fold that fails is logged, counted and discarded by
-    the next merge's non-blocking harvest — that unrelated batch
-    commits.  The fold's buckets stay over the threshold, so a later
-    commit folds them, and the state equals the oracle throughout."""
-    import concurrent.futures
-
-    real_fold, calls = lake._fold, []
-
-    def fail_once(*args):
-        calls.append(args)
-        if len(calls) == 1:
-            raise RuntimeError("injected fold failure")
-        return real_fold(*args)
-
-    monkeypatch.setattr(lake, "_fold", fail_once)
-    events = gen_events_pandas(0, 1500, seed=24, n_docs=100)
-    chunks = [events.iloc[i : i + 300] for i in range(0, 1500, 300)]
-    policy = dict(compact_mode="async", auto_compact_deltas=2)
-    lake.merge(prepare_batch(_spark_events(spark, chunks[0])), 0, **policy)
-    lake.merge(prepare_batch(_spark_events(spark, chunks[1])), 1, **policy)
-    # the second commit scheduled the fold; let it fail before commit 3
-    assert len(calls) == 1 and lake._compact_future is not None
-    failed = set(lake._compact_future[1])
-    concurrent.futures.wait([lake._compact_future[0]])
-
-    r = lake.merge(prepare_batch(_spark_events(spark, chunks[2])), 2, **policy)
-    assert not r["skipped"] and lake.failed_folds == 1
-    assert not any(lake._manifest["buckets"].get(b) for b in failed)
-    assert_pdf_equal(
-        lake.read().toPandas(), oracle_reduce(pd.concat(chunks[:3]))
-    )
-    for bid, chunk in enumerate(chunks[3:], start=3):
-        lake.merge(prepare_batch(_spark_events(spark, chunk)), bid, **policy)
-    lake.wait_for_compaction()
-    assert lake.failed_folds == 1 and len(calls) > 1
-    # a later commit folded the failed fold's buckets
-    assert all(lake._manifest["buckets"].get(b) for b in failed)
-    assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
-
-
-def test_failed_fold_raises_from_wait_for_compaction(spark, lake, monkeypatch):
-    """A blocking harvest still surfaces a failed fold, and discards it."""
+    events = gen_events_pandas(0, 600, seed=25, n_docs=60)
+    chunks = [events.iloc[:300], events.iloc[300:]]
+    lake.merge(prepare_batch(_spark_events(spark, chunks[0])), 0, auto_compact_deltas=2)
+    calls = []
 
     def boom(*args):
+        calls.append(args)
         raise RuntimeError("injected fold failure")
 
-    monkeypatch.setattr(lake, "_fold", boom)
-    events = gen_events_pandas(0, 600, seed=25, n_docs=60)
-    for bid, start in enumerate((0, 300)):
-        lake.merge(
-            prepare_batch(_spark_events(spark, events.iloc[start : start + 300])),
-            bid, compact_mode="async", auto_compact_deltas=2,
-        )
-    with pytest.raises(RuntimeError, match="injected fold failure"):
-        lake.wait_for_compaction()
-    assert lake.failed_folds == 1 and lake._compact_future is None
-    assert lake.wait_for_compaction() == 0
-    assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
+    with monkeypatch.context() as m:
+        m.setattr(lake, "_fold", boom)
+        with pytest.raises(RuntimeError, match="injected fold failure"):
+            lake.merge(
+                prepare_batch(_spark_events(spark, chunks[1])), 1,
+                auto_compact_deltas=2,
+            )
+    assert calls
+    reopened = HashLakeTable(spark, lake.root)
+    assert (lake.version, lake.last_committed()) == (
+        reopened.version, reopened.last_committed()
+    ) == (1, 0)
+    assert_pdf_equal(lake.read().toPandas(), oracle_reduce(chunks[0]))
+
+    r = lake.merge(
+        prepare_batch(_spark_events(spark, chunks[1])), 1, auto_compact_deltas=2
+    )
+    assert not r["skipped"] and r["compacted_buckets"] > 0
+    reopened = HashLakeTable(spark, lake.root)
+    assert (lake.version, lake.last_committed()) == (
+        reopened.version, reopened.last_committed()
+    ) == (2, 1)
+    for handle in (lake, reopened):
+        assert_pdf_equal(handle.read().toPandas(), oracle_reduce(events))
 
 
 def test_read_keys_prunes_to_key_buckets(spark, lake):
@@ -857,10 +791,10 @@ def test_file_stats_survive_manifest_roundtrip(spark, lake):
     )
 
 
-def test_file_skipping_with_tombstones_and_async_compaction(spark, lake):
+def test_file_skipping_with_tombstones_and_compaction(spark, lake):
     """Skipping is sound under the full LWW surface: tombstoned keys
-    stay dead, late events stay lost, and the async-compaction harvest
-    carries the new bases' stats (old files' stats dropped)."""
+    stay dead, late events stay lost, and the inline folds carry the
+    new bases' stats (old files' stats dropped)."""
     lake.compact_target_file_rows = 4
     events = gen_events_pandas(0, 2500, seed=33, n_docs=180, dirty_frac=0.1)
     for bid, start in enumerate(range(0, 2500, 500)):
@@ -869,9 +803,7 @@ def test_file_skipping_with_tombstones_and_async_compaction(spark, lake):
             prepare_batch(_spark_events(spark, chunk)),
             bid,
             auto_compact_deltas=2,
-            compact_mode="async",
         )
-    lake.wait_for_compaction()
     oracle = oracle_reduce(events)
     all_ids = {f"doc-{n:08d}" for n in range(180)}
     dead = sorted(all_ids - set(oracle["doc_id"]))[:2]
@@ -918,25 +850,25 @@ def test_iceberg_requires_configured_runtime(spark):
 
     with pytest.raises(RuntimeError, match="Iceberg runtime not configured"):
         IcebergLakeTable(spark, "cat.db.docs")
-    # what replay_batch and the tailer read besides merge()
+    # what replay_batch reads besides merge()
     bare = object.__new__(IcebergLakeTable)
-    assert (bare.last_committed(), bare.failed_folds) == (-1, 0)
+    assert bare.last_committed() == -1
 
 
-# -------------------- async-compaction concurrency property (task 6)
+# ------------------------- interleaved-read property over inline folds
 
 
 @pytest.mark.parametrize("seed", range(20))
 def test_async_compaction_interleaved_reads_lww_equivalent(
     spark, tmp_path, seed
 ):
-    """Randomized (seeded) multi-commit ingest with compact_mode='async':
-    background folds overlap subsequent commits (lake.py merge →
-    _harvest_compaction), and a read issued at ANY point — including
-    while a fold is in flight — must see the exact LWW survivor set of
-    the commits applied so far (round-5, VERDICT r4 task 6).  Also
-    time-travels back to every recorded version at the end: harvested
-    compaction commits must not have changed any snapshot's rows."""
+    """Randomized (seeded) multi-commit ingest whose merges fold
+    inline at a delta depth of 1 or 2: a read issued between commits
+    must see the exact LWW survivor set of the commits applied so far
+    (round-5, VERDICT r4 task 6).  Also time-travels back to every
+    recorded version at the end: later folds must not have changed any
+    snapshot's rows.  The name predates the removal of the background
+    fold this test first ran against; its 20 seeded ids are kept."""
     import random
 
     rng = random.Random(seed)
@@ -957,17 +889,14 @@ def test_async_compaction_interleaved_reads_lww_equivalent(
             prepare_batch(_spark_events(spark, part)),
             bid,
             auto_compact_deltas=rng.choice([1, 2]),
-            compact_mode="async",
         )
         snapshots.append((lake.version, (bid + 1) * chunk))
-        # mid-flight read: the async fold from THIS commit may still be
-        # running — the read must already be LWW-exact
+        # read between commits: already LWW-exact after this one's fold
         if rng.random() < 0.7:
             assert_pdf_equal(
                 lake.read().toPandas(),
                 oracle_reduce(events.iloc[: (bid + 1) * chunk]),
             )
-    lake.wait_for_compaction()
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
     # every recorded snapshot still reads to its own prefix's LWW state
     for version, end in snapshots:
