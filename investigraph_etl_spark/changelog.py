@@ -17,8 +17,6 @@ Event shape (FIXTURES.md §2):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 
@@ -276,10 +274,3 @@ def read_changelog_pandas(out_dir: str) -> pd.DataFrame:
     df["lang"] = df["lang"].where(df["lang"].notna(), None)
     return df
 
-
-def iter_event_batches(
-    n_events: int, batch_rows: int = 100_000, **knobs
-) -> Iterator[pd.DataFrame]:
-    """Generator of event batches (bench-scale driverless generation)."""
-    for start in range(0, n_events, batch_rows):
-        yield gen_events_pandas(start, min(batch_rows, n_events - start), **knobs)

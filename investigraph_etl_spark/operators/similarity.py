@@ -119,51 +119,6 @@ def _hyperplanes(dim: int, n_bits: int, n_tables: int, seed: int) -> np.ndarray:
     return rng.standard_normal((n_tables, n_bits, dim))
 
 
-def lsh_bucket_ids(
-    df: DataFrame,
-    *,
-    dim: int,
-    n_bits: int = 12,
-    n_tables: int = 4,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, table_ix, bucket) — signed-random-projection buckets."""
-    planes = _hyperplanes(dim, n_bits, n_tables, seed)
-    sc = df.sparkSession.sparkContext
-    bp = sc.broadcast(planes)
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("table_ix", LongType()),
-            StructField("bucket", LongType()),
-        ]
-    )
-
-    def bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pl = bp.value  # (T, B, D)
-        weights = 1 << np.arange(pl.shape[1], dtype=np.int64)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)  # (N, D)
-            # bits: (T, B, N) → bucket codes (T, N)
-            bits = (np.einsum("tbd,nd->tbn", pl, mat) > 0).astype(np.int64)
-            codes = np.einsum("tbn,b->tn", bits, weights)
-            t_ix = np.repeat(np.arange(pl.shape[0], dtype=np.int64), len(ids))
-            yield pd.DataFrame(
-                {
-                    "id": np.tile(ids, pl.shape[0]),
-                    "table_ix": t_ix,
-                    "bucket": codes.ravel(),
-                }
-            )
-
-    return fan_out(df.select(id_col, vec_col)).mapInPandas(bucketize, schema)
-
-
 def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
     """Collect + L2-normalize the (bounded, by contract) query set.
     Same boundedness contract as :func:`brute_force_knn`: a KNN query
@@ -356,44 +311,6 @@ def ivf_centroids(
                 if n > 0:
                     cent[c] = v / n
     return cent
-
-
-def ivf_assign(
-    df: DataFrame,
-    centroids: np.ndarray,
-    *,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, centroid_id) rows — nearest ``nprobe`` centroids per vector
-    (data side uses 1; query side probes several).  One numpy matmul
-    per Arrow batch against the broadcast quantizer."""
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(centroids)
-    schema = StructType(
-        [StructField("id", LongType()), StructField("centroid_id", LongType())]
-    )
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cent = bc.value
-        p = min(nprobe, len(cent))
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = mat @ cent.T  # (N, C)
-            top = np.argpartition(-sims, p - 1, axis=1)[:, :p]
-            yield pd.DataFrame(
-                {
-                    "id": np.repeat(ids, p),
-                    "centroid_id": top.ravel().astype(np.int64),
-                }
-            )
-
-    return fan_out(df.select(id_col, vec_col)).mapInPandas(assign, schema)
 
 
 def ivf_knn(

@@ -168,15 +168,17 @@ def load_config(path: str, *, validate_schemata: bool = True) -> PipelineConfig:
     )
 
 
-def extract_records(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    """Seed + extract: one unioned DataFrame of all sources' records.
+def resolve_sources(
+    cfg: PipelineConfig, seeds: list[dict] | None = None
+) -> list[Source]:
+    """Seed: configured + handler-seeded + glob-seeded sources, in that
+    order (reference logic/seed.py) — or, given ``seeds`` (the ``seed``
+    command's JSON lines, one ``dataclasses.asdict(Source)`` each),
+    exactly those."""
+    from investigraph_etl_spark.plans.custom import resolve_handler
 
-    Precedence mirrors the reference's stage dispatch
-    (model/stage.py:61-83): a custom extract handler wins; otherwise
-    the built-in readers run per source (seeded from glob when
-    configured) and union by column name (missing columns null)."""
-    from investigraph_etl_spark.plans.custom import apply_custom_extract, resolve_handler
-
+    if seeds is not None:
+        return [Source(**d) for d in seeds]
     sources = list(cfg.sources)
     if cfg.seed_handler:
         sources += [
@@ -189,6 +191,25 @@ def extract_records(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
             pattern=cfg.seed_glob,
             exclude=cfg.seed_exclude,
         )
+    return sources
+
+
+def extract_records(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    sources: list[Source] | None = None,
+) -> DataFrame:
+    """Extract: one unioned DataFrame of the records of ``sources``
+    (default: :func:`resolve_sources`), capped at ``record_limit``.
+
+    Precedence mirrors the reference's stage dispatch
+    (model/stage.py:61-83): a custom extract handler wins; otherwise
+    the built-in readers run per source and union by column name
+    (missing columns null)."""
+    from investigraph_etl_spark.plans.custom import apply_custom_extract
+
+    if sources is None:
+        sources = resolve_sources(cfg)
     if cfg.extract_handler:
         df = apply_custom_extract(spark, cfg.extract_handler, sources)
     else:
@@ -221,6 +242,31 @@ def transform_statements(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
     for o in outs[1:]:
         df = df.unionByName(o)
     return df
+
+
+def load_statements(
+    spark: SparkSession,
+    statements: DataFrame,
+    cfg: PipelineConfig,
+    uri: str | None = None,
+) -> DataFrame:
+    """Load: the custom load handler if configured, else a parquet
+    write to ``uri`` (default ``cfg.load_uri``); returns the loaded
+    statements.  The reference's custom load is handle(ctx, proxies) —
+    here the handler receives the statement DataFrame + config and may
+    return a replacement frame (e.g. after writing to its own sink);
+    None keeps the original.  With neither a handler nor a uri the
+    statements pass through unwritten."""
+    from investigraph_etl_spark.plans.custom import resolve_handler
+
+    uri = uri or cfg.load_uri
+    if cfg.load_handler:
+        replaced = resolve_handler(cfg.load_handler)(statements, cfg)
+        return replaced if replaced is not None else statements
+    if uri:
+        statements.write.mode("overwrite").parquet(uri)
+        return spark.read.parquet(uri)  # reuse materialization
+    return statements
 
 
 def run_pipeline(
@@ -256,16 +302,7 @@ def run_pipeline(
     statements = transform_statements(records, cfg)
     timings["transform"] = round(_time.monotonic() - t, 3)
     t = _time.monotonic()
-    if cfg.load_handler:
-        # reference custom load: handle(ctx, proxies) — here the
-        # handler receives the statement DataFrame + config and may
-        # return a replacement frame (e.g. after writing to its own
-        # sink); None keeps the original
-        replaced = resolve_handler(cfg.load_handler)(statements, cfg)
-        statements = replaced if replaced is not None else statements
-    elif cfg.load_uri:
-        statements.write.mode("overwrite").parquet(cfg.load_uri)
-        statements = spark.read.parquet(cfg.load_uri)  # reuse materialization
+    statements = load_statements(spark, statements, cfg)
     timings["load"] = round(_time.monotonic() - t, 3)
     t = _time.monotonic()
     entities = entities_from_statements(statements)

@@ -17,7 +17,14 @@ Subcommands:
                 GNU-parallel stage commands, cli.py:102-176 and
                 docs/run/parallelization.md):
                 ``seed -c cfg | extract --from-stdin -c cfg |
-                transform -c cfg | load -c cfg``.  Deliberate scope:
+                transform -c cfg | load -c cfg``.  Each stage command
+                calls the same function ``run`` does
+                (plans/pipeline.py: ``resolve_sources``,
+                ``extract_records``, ``transform_statements``,
+                ``load_statements``), so the pipe and ``run`` give the
+                same statements — playbook operations,
+                ``record_limit`` and custom handlers included.
+                Deliberate scope:
                 the pipe surface exists for reference-parity scripting
                 of moderate data; at lake scale the SAME stages run as
                 one Spark plan (``run``) or as the streaming tailer —
@@ -49,29 +56,6 @@ from investigraph_etl_spark.streaming.tailer import (
     tail_changelog,
     target_schema,
 )
-
-
-def _resolve_sources(cfg) -> list:
-    """Configured + handler-seeded + glob-seeded sources, in the same
-    precedence order as the extract stage (reference logic/seed.py)."""
-    import pathlib
-
-    from investigraph_etl_spark.plans.custom import resolve_handler
-    from investigraph_etl_spark.sources.readers import Source, seed_sources
-
-    sources = list(cfg.sources)
-    if cfg.seed_handler:
-        sources += [
-            s if isinstance(s, Source) else Source(**s)
-            for s in resolve_handler(cfg.seed_handler)({"name": cfg.name})
-        ]
-    if cfg.seed_glob:
-        sources += seed_sources(
-            str(pathlib.Path(cfg.base_path)),
-            pattern=cfg.seed_glob,
-            exclude=cfg.seed_exclude,
-        )
-    return sources
 
 
 def _open_out(uri: str):
@@ -211,28 +195,21 @@ def main(argv: list[str] | None = None) -> None:
         # reference `investigraph seed` (cli.py:82-99): resolve and
         # print the pipeline's sources, one JSON line each, for piping
         # into `extract --from-stdin`
-        from investigraph_etl_spark.plans.pipeline import load_config
+        import dataclasses
+
+        from investigraph_etl_spark.plans.pipeline import (
+            load_config,
+            resolve_sources,
+        )
 
         if not args.config:
             p.error("seed requires -c/--config")
-        cfg = load_config(args.config)
-        sources = _resolve_sources(cfg)
+        sources = resolve_sources(load_config(args.config))
         if args.limit is not None:
             sources = sources[: args.limit]
         with _open_out(args.out_uri) as fh:
             for s in sources:
-                print(
-                    json.dumps(
-                        {
-                            "uri": s.uri,
-                            "name": s.name,
-                            "options": s.options,
-                            "limit": s.limit,
-                            "slug_columns": s.slug_columns,
-                        }
-                    ),
-                    file=fh,
-                )
+                print(json.dumps(dataclasses.asdict(s)), file=fh)
         return
 
     spark = get_spark("investigraph_etl_spark", master=args.master)
@@ -243,44 +220,19 @@ def main(argv: list[str] | None = None) -> None:
         from investigraph_etl_spark.plans.pipeline import (
             extract_records,
             load_config,
+            resolve_sources,
         )
-        from investigraph_etl_spark.sources.readers import Source, read_source
 
         if not args.config:
             p.error("extract requires -c/--config")
         cfg = load_config(args.config)
-        if args.from_stdin or args.source is not None:
-            if args.from_stdin:
-                seeds = [json.loads(ln) for ln in _read_lines(args.in_uri)]
-                sources = [
-                    Source(
-                        uri=d["uri"],
-                        name=d.get("name"),
-                        options=d.get("options") or {},
-                        limit=d.get("limit"),
-                        slug_columns=bool(d.get("slug_columns", False)),
-                    )
-                    for d in seeds
-                ]
-            else:
-                sources = _resolve_sources(cfg)
-            if args.source is not None:
-                sources = [s for s in sources if s.name == args.source]
-            if cfg.extract_handler:
-                from investigraph_etl_spark.plans.custom import (
-                    apply_custom_extract,
-                )
-
-                df = apply_custom_extract(spark, cfg.extract_handler, sources)
-            else:
-                if not sources:
-                    p.error("extract: no matching sources")
-                frames = [read_source(spark, s) for s in sources]
-                df = frames[0]
-                for other in frames[1:]:
-                    df = df.unionByName(other, allowMissingColumns=True)
-        else:
-            df = extract_records(spark, cfg)
+        seeds = None
+        if args.from_stdin:
+            seeds = [json.loads(ln) for ln in _read_lines(args.in_uri)]
+        sources = resolve_sources(cfg, seeds)
+        if args.source is not None:
+            sources = [s for s in sources if s.name == args.source]
+        df = extract_records(spark, cfg, sources=sources)
         if args.limit is not None:
             df = df.limit(args.limit)
         with _open_out(args.out_uri) as fh:
@@ -309,19 +261,28 @@ def main(argv: list[str] | None = None) -> None:
     if args.command == "load":
         # reference `investigraph load` (cli.py:163-175): statements in
         # (line-JSON), merged into the configured statement sink
-        from investigraph_etl_spark.plans.pipeline import load_config
+        from investigraph_etl_spark.plans.pipeline import (
+            load_config,
+            load_statements,
+        )
 
         if not args.config:
             p.error("load requires -c/--config")
         cfg = load_config(args.config)
         dest = cfg.load_uri if args.out_uri in ("-", None) else args.out_uri
-        if not dest:
-            p.error("load requires a load.uri in the config or -o/--out-uri")
+        if not (cfg.load_handler or dest):
+            p.error(
+                "load requires a load.handler or load.uri in the config, "
+                "or -o/--out-uri"
+            )
         statements = _json_lines_df(spark, _read_lines(args.in_uri))
-        statements.write.mode("overwrite").parquet(dest)
+        loaded = load_statements(spark, statements, cfg, uri=dest)
         print(
             json.dumps(
-                {"statements": spark.read.parquet(dest).count(), "uri": dest}
+                {
+                    "statements": loaded.count(),
+                    "uri": None if cfg.load_handler else dest,
+                }
             )
         )
         return

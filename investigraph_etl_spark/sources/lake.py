@@ -81,10 +81,10 @@ _INTERNAL = [
 _COMMIT = StructField("_commit", LongType(), True)
 
 # a data file's writing commit, from its ``c%06d`` (delta) or
-# ``c%06dx``/``c%06da`` (compaction) directory.  \d{6,}: versions are
+# ``c%06dx`` (compaction) directory.  \d{6,}: versions are
 # zero-padded to six digits but NOT capped at six — past commit 999,999
 # f"c{v:06d}" emits 7+ digits and a fixed-width match would miss it.
-_COMMIT_DIR = re.compile(r"c(\d{6,})[xa]?(?=/|$)")
+_COMMIT_DIR = re.compile(r"c(\d{6,})x?(?=/|$)")
 # stored per row in delta files (a delta file may hold several
 # buckets); base files keep it in their directory name and read it as null
 _BUCKET = StructField("_bucket", LongType(), True)
@@ -259,15 +259,10 @@ class HashLakeTable:
         *,
         key: str = "doc_id",
         num_buckets: int = 32,
-        overwrite: bool = False,
     ) -> HashLakeTable:
         rootp = pathlib.Path(root)
         if (rootp / "_latest").exists():
-            if not overwrite:
-                return cls(spark, root)
-            import shutil
-
-            shutil.rmtree(rootp)
+            return cls(spark, root)
         (rootp / "manifests").mkdir(parents=True, exist_ok=True)
         (rootp / "data").mkdir(parents=True, exist_ok=True)
         manifest = {
@@ -364,9 +359,7 @@ class HashLakeTable:
     @staticmethod
     def _materialize(mdir: pathlib.Path, doc: dict) -> dict:
         """Resolve a manifest list's ``bucket_refs`` into the in-memory
-        ``buckets``/``deltas`` maps (legacy inline docs pass through)."""
-        if "bucket_refs" not in doc:
-            return doc
+        ``buckets``/``deltas`` maps."""
         buckets: dict[str, list] = {}
         deltas: dict[str, list] = {}
         file_stats: dict[str, list | dict] = {}
@@ -505,10 +498,6 @@ class HashLakeTable:
     def schema(self) -> StructType:
         """Payload schema (without internal columns)."""
         return StructType.fromJson(self._manifest["schema"])
-
-    @property
-    def full_schema(self) -> StructType:
-        return StructType(list(self.schema.fields) + list(_INTERNAL))
 
     @property
     def version(self) -> int:
@@ -699,7 +688,7 @@ class HashLakeTable:
     @staticmethod
     def _file_commit_version(path: str) -> int:
         """The commit version that WROTE a data file, parsed from its
-        directory name (``c%06d`` delta, ``c%06dx``/``c%06da``
+        directory name (``c%06d`` delta, ``c%06dx``
         compaction).  Every row in a file has ``_commit`` ≤ this
         version, so files at version ≤ v cannot contain rows committed
         after v — the file-level pruning :meth:`read_changes` uses."""
@@ -727,8 +716,7 @@ class HashLakeTable:
 
         Returns ``None`` — caller falls back to the manifest file set
         + ``_commit`` row filter — when the lineage window (last 200
-        commits) doesn't reach back to ``from_version``, when an entry
-        has no ``files`` (written before they were recorded), or when a
+        commits) doesn't reach back to ``from_version``, or when a
         recorded file is gone (defensive: unexpected vacuum)."""
         lin = man_to.get("lineage", [])
         if not lin or min(e["version"] for e in lin) > from_version + 1:
@@ -738,8 +726,6 @@ class HashLakeTable:
         for e in lin:
             if not (from_version < e["version"] <= to_version):
                 continue
-            if "files" not in e:
-                return None
             files += e["files"]
             touched.update(e["touched_buckets"])
         if not all(os.path.exists(f) for f in files):

@@ -140,7 +140,9 @@ def tail_changelog(
     envelope stream from :func:`tail_debezium`).  If it carries the
     ``_dead`` marker column (sources/debezium.py), dead-lettered rows
     are quarantined to ``dead_letter_dir`` (append-parquet, keyed by
-    batch id for idempotent retries) instead of poisoning the merge.
+    batch id for idempotent retries) instead of poisoning the merge;
+    such a stream without a ``dead_letter_dir`` raises ``ValueError``
+    rather than drop its dead letters unrecorded.
 
     ``available_now=True`` drains everything currently in the directory
     and stops (the replay/bench mode); ``False`` keeps tailing.
@@ -165,6 +167,10 @@ def tail_changelog(
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(changelog_dir)
         )
+    if "_dead" in stream.columns and dead_letter_dir is None:
+        raise ValueError(
+            "stream carries dead letters (_dead): pass dead_letter_dir"
+        )
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
@@ -180,12 +186,11 @@ def tail_changelog(
 
             persisted = batch.persist()
             good, dead = split_dead_letters(batch)
-            if dead_letter_dir is not None:
-                (
-                    dead.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .parquet(f"{dead_letter_dir}/batch_id={batch_id}")
-                )
+            (
+                dead.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .parquet(f"{dead_letter_dir}/batch_id={batch_id}")
+            )
             batch = good
         # metrics ride the merge's own actions via observe() — no extra
         # scan of the batch (batch.count() would re-read every file, a
@@ -250,15 +255,16 @@ def tail_debezium(
     lake,
     checkpoint_dir: str,
     *,
+    dead_letter_dir: str,
     with_lang: bool = False,
     max_files_per_trigger: int = 4,
-    dead_letter_dir: str | None = None,
     **kwargs,
 ):
     """Tail a directory of Debezium JSON-lines envelope files (the
     file-based stand-in for a Kafka topic) into the lake: decode →
     dead-letter quarantine → normalize → MERGE, with the same
     exactly-once checkpoint semantics as :func:`tail_changelog`.
+    ``dead_letter_dir`` is required: undecodable envelopes land there.
 
     On a real cluster swap the file source for ``format("kafka")`` and
     pass ``key_col="key"``/``seq_col="offset"`` through to

@@ -19,6 +19,7 @@ from investigraph_etl_spark.changelog import (
     oracle_reduce,
 )
 from investigraph_etl_spark.sources.debezium import (
+    debezium_stream,
     decode_debezium,
     split_dead_letters,
 )
@@ -26,6 +27,7 @@ from investigraph_etl_spark.sources.lake import HashLakeTable
 from investigraph_etl_spark.streaming.tailer import (
     change_schema,
     prepare_batch,
+    tail_changelog,
     tail_debezium,
     target_schema,
 )
@@ -194,11 +196,31 @@ def test_debezium_schema_evolution_mid_stream(spark, tmp_path):
         str(tmp_path / "ckpt"),
         with_lang=True,
         max_files_per_trigger=1,
+        dead_letter_dir=str(tmp_path / "dead"),
     )
     q.awaitTermination(120)
     expected = oracle_reduce(pd.concat([pdf1, pdf2], ignore_index=True))
     assert "lang" in [f.name for f in lake.schema.fields]
     assert_pdf_equal(lake.read().toPandas(), expected)
+    assert spark.read.parquet(str(tmp_path / "dead")).count() == 0
+
+
+def test_dead_letter_stream_without_dir_raises(spark, tmp_path):
+    """A stream that carries the ``_dead`` marker and no quarantine
+    directory is refused before any batch runs: its dead letters would
+    otherwise be dropped unrecorded."""
+    env_dir = tmp_path / "envelopes"
+    env_dir.mkdir()
+    (env_dir / "chunk-0000.jsonl").write_text("{corrupt")
+    lake = HashLakeTable.create(
+        spark, str(tmp_path / "lake"), target_schema(), num_buckets=4
+    )
+    stream = debezium_stream(spark, str(env_dir))
+    with pytest.raises(ValueError, match="dead_letter_dir"):
+        tail_changelog(
+            spark, str(env_dir), lake, str(tmp_path / "ckpt"), stream=stream
+        )
+    assert lake.version == 0
 
 
 def test_decode_is_streaming_safe_and_udf_free(spark):

@@ -546,7 +546,6 @@ def test_file_commit_version_parsing():
     f = HashLakeTable._file_commit_version
     assert f("/x/data/c000005/_bucket=3/part-0.parquet") == 5
     assert f("/x/data/c000007x/_bucket=0/part-0.parquet") == 7
-    assert f("/x/data/c000009a/_bucket=1/p.parquet") == 9
     assert f("/tmp/c123456_w/data/c000002/_bucket=1/p.parquet") == 2
     # versions past 999,999 widen beyond the 6-digit zero padding
     assert f(f"/x/data/c{1000001:06d}/_bucket=0/p.parquet") == 1000001
@@ -731,23 +730,10 @@ def test_changes_property_vs_oracle(spark, tmp_path, seed):
     )
 
 
-def _strip_lineage_files(lake: HashLakeTable) -> None:
-    """Drop ``files`` from every persisted lineage entry — the shape of
-    a lineage written before commits recorded their delta files."""
-    import json
-    import pathlib
-
-    for mp in (pathlib.Path(lake.root) / "manifests").glob("v*.json"):
-        doc = json.loads(mp.read_text())
-        for e in doc["lineage"]:
-            e.pop("files", None)
-        mp.write_text(json.dumps(doc))
-
-
-def test_changes_lineage_without_files_takes_fallback(spark, lake):
-    """A range whose lineage entries carry no ``files`` cannot name its
-    delta files, so the feed takes the manifest-file fallback (a
-    distinct job finds the touched buckets) with unchanged values."""
+def test_changes_truncated_lineage_takes_fallback(spark, lake):
+    """A range the lineage does not cover cannot name its delta files,
+    so the feed takes the manifest-file fallback (a distinct job finds
+    the touched buckets) with unchanged values."""
     events = gen_events_pandas(0, 2400, seed=74, n_docs=160, dirty_frac=0.1)
     chunks = [events.iloc[i::4] for i in range(4)]
     versions = [
@@ -760,7 +746,7 @@ def test_changes_lineage_without_files_takes_fallback(spark, lake):
     want = lake.read_changes(vf).toPandas()
     want_pre = lake.read_changes(vf, include_preimage=True).toPandas()
     assert_pdf_equal(want, oracle_changes(pd.concat(chunks[:2]), events))
-    _strip_lineage_files(lake)
+    _truncate_lineage(lake)
     lake = HashLakeTable(spark, lake.root)
     assert lake._range_delta_files(lake._manifest, vf, lake.version) is None
     sc = spark.sparkContext

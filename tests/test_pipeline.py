@@ -371,6 +371,174 @@ def test_stage_pipe_cli_chain(spark, tmp_path, capsys):
     assert seeds.read_text().strip() == ""
 
 
+def _write_people_config(tmp_path: pathlib.Path) -> str:
+    """A self-contained stage fixture: a 5-row CSV with a duplicate key
+    (p1), a playbook op that drops one row (p3), a ``record_limit``
+    that cuts the last (p4), and a load handler writing the statements
+    it receives to ``<config dir>/loaded``."""
+    (tmp_path / "people.csv").write_text(
+        "id,name,country\n"
+        "p1,Alice,de\n"
+        "p2,Bob,fr\n"
+        "p1,Alicia,de\n"
+        "p3,Carol,xx\n"
+        "p4,Dan,it\n"
+    )
+    (tmp_path / "sinks.py").write_text(
+        textwrap.dedent(
+            """
+            import pathlib
+
+            def load(statements, cfg):
+                out = pathlib.Path(cfg.base_path) / "loaded"
+                statements.write.mode("overwrite").parquet(str(out))
+            """
+        )
+    )
+    cfg = tmp_path / "config.yml"
+    cfg.write_text(
+        textwrap.dedent(
+            """
+            name: people
+            prefix: ppl
+            record_limit: 3
+            extract:
+              sources:
+                - uri: people.csv
+                  pandas:
+                    operations:
+                      - handler: DataFrame.query
+                        options: {expr: "country != 'xx'"}
+            transform:
+              queries:
+                - entities:
+                    person:
+                      schema: Person
+                      key: id
+                      properties:
+                        name: {column: name}
+                        country: {column: country}
+            load:
+              handler: ./sinks.py:load
+            """
+        )
+    )
+    return str(cfg)
+
+
+def _sorted_json(rows) -> list[str]:
+    return sorted(json.dumps(r, sort_keys=True) for r in rows)
+
+
+def _jsonl(path: pathlib.Path) -> list[dict]:
+    return [json.loads(line) for line in path.read_text().splitlines()]
+
+
+def _loaded_rows(spark, tmp_path: pathlib.Path) -> list[str]:
+    rows = spark.read.parquet(str(tmp_path / "loaded")).collect()
+    return _sorted_json(r.asDict() for r in rows)
+
+
+def test_stage_pipe_matches_run(spark, tmp_path):
+    """``seed | extract --from-stdin | transform | load`` lands the same
+    statement rows as ``run_pipeline`` on the same config: the playbook
+    op, ``record_limit`` and the load handler act on both paths."""
+    import shutil
+
+    from investigraph_etl_spark.plans.pipeline import extract_records
+    from investigraph_etl_spark.run import main
+
+    cfg = _write_people_config(tmp_path)
+    out = run_pipeline(spark, cfg)
+    assert out["entities"] == 2 and out["statements"] == 6
+    want = _loaded_rows(spark, tmp_path)
+    shutil.rmtree(tmp_path / "loaded")
+
+    seeds, records, stmts = (
+        tmp_path / "seeds.jsonl", tmp_path / "records.jsonl",
+        tmp_path / "stmts.jsonl",
+    )
+    main(["seed", "-c", cfg, "-o", str(seeds)])
+    main(["extract", "-c", cfg, "--from-stdin", "-i", str(seeds),
+          "-o", str(records)])
+    expected = extract_records(spark, load_config(cfg)).collect()
+    assert _sorted_json(_jsonl(records)) == _sorted_json(
+        r.asDict() for r in expected
+    )
+    assert sorted(r["name"] for r in _jsonl(records)) == [
+        "Alice", "Alicia", "Bob"
+    ]
+    main(["transform", "-c", cfg, "-i", str(records), "-o", str(stmts)])
+    main(["load", "-c", cfg, "-i", str(stmts)])
+    assert _loaded_rows(spark, tmp_path) == want
+    names = sorted(
+        (r["id"], r["value"])
+        for r in map(json.loads, want)
+        if r["prop"] == "name"
+    )
+    assert [v for _, v in names] == ["Alice", "Alicia", "Bob"]
+    assert len({i for i, _ in names}) == 2  # p1's two rows: one entity
+
+
+def test_extract_config_and_source_filter_match_extract_records(
+    spark, tmp_path
+):
+    """``extract -c`` and ``extract -s <name>`` emit exactly the
+    records ``extract_records`` builds."""
+    from investigraph_etl_spark.plans.pipeline import extract_records
+    from investigraph_etl_spark.run import main
+
+    cfg = _write_people_config(tmp_path)
+    want = _sorted_json(
+        r.asDict() for r in extract_records(spark, load_config(cfg)).collect()
+    )
+    assert len(want) == 3
+    out = tmp_path / "records.jsonl"
+    main(["extract", "-c", cfg, "-o", str(out)])
+    assert _sorted_json(_jsonl(out)) == want
+    main(["extract", "-c", cfg, "-s", "people", "-o", str(out)])
+    assert _sorted_json(_jsonl(out)) == want
+
+
+def test_seed_prints_every_source_field(tmp_path):
+    """``seed`` prints each resolved source whole (operations
+    included), so ``extract --from-stdin`` rebuilds the same Source;
+    ``-l 0`` prints none."""
+    import dataclasses
+
+    from investigraph_etl_spark.run import main
+
+    cfg = _write_people_config(tmp_path)
+    seeds = tmp_path / "seeds.jsonl"
+    main(["seed", "-c", cfg, "-o", str(seeds)])
+    (src,) = load_config(cfg).sources
+    assert _jsonl(seeds) == [dataclasses.asdict(src)]
+    assert _jsonl(seeds)[0]["operations"][0]["handler"] == "DataFrame.query"
+    main(["seed", "-c", cfg, "-l", "0", "-o", str(seeds)])
+    assert seeds.read_text().strip() == ""
+
+
+def test_load_command_calls_configured_handler(spark, tmp_path, capsys):
+    """A config with only ``load: {handler: …}`` loads through the
+    handler, as ``run`` does."""
+    from investigraph_etl_spark.run import main
+
+    cfg = _write_people_config(tmp_path)
+    rows = [
+        {"id": "ppl-a", "schema": "Person", "prop": "name",
+         "value": "Ada", "dataset": "people"},
+        {"id": "ppl-b", "schema": "Person", "prop": "name",
+         "value": "Grace", "dataset": "people"},
+    ]
+    stmts = tmp_path / "stmts.jsonl"
+    stmts.write_text("\n".join(json.dumps(r) for r in rows))
+    capsys.readouterr()
+    main(["load", "-c", cfg, "-i", str(stmts)])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out == {"statements": 2, "uri": None}
+    assert _loaded_rows(spark, tmp_path) == _sorted_json(rows)
+
+
 def test_settings_cli(capsys):
     """reference `investigraph settings` parity (cli.py:188-196)."""
     from investigraph_etl_spark.run import main
