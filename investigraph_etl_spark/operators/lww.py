@@ -12,7 +12,9 @@ Physical strategy — measured, not guessed (BASELINE.md, History):
   **SortAggregate / Sort** because the agg buffer (or sort row)
   carries the variable-length token arrays — at 2M events that plan
   *inversely* scaled with cores (sorting MBs of array payload per
-  task, twice).
+  task, twice).  Lake point lookups (``HashLakeTable.read_keys``) do
+  pick winners with ``max_by``: their rows grow with keys × versions,
+  not with events, so the sort is cheap and saves the winner join.
 * The winning plan is **narrow-winner + semi-join**:
     1. ``winners = groupBy(key).agg(max(seq))`` — fixed-width buffer →
        whole-stage-codegen HashAggregate with map-side partial agg;

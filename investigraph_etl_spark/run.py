@@ -235,8 +235,13 @@ def main(argv: list[str] | None = None) -> None:
         df = extract_records(spark, cfg, sources=sources)
         if args.limit is not None:
             df = df.limit(args.limit)
+        # null fields stay in each line: a column that is null in every
+        # record must still reach transform's inferred schema
+        lines = df.select(
+            F.to_json(F.struct("*"), {"ignoreNullFields": "false"})
+        )
         with _open_out(args.out_uri) as fh:
-            for line in df.toJSON().toLocalIterator():
+            for (line,) in lines.toLocalIterator():
                 print(line, file=fh)
         return
 
@@ -261,6 +266,7 @@ def main(argv: list[str] | None = None) -> None:
     if args.command == "load":
         # reference `investigraph load` (cli.py:163-175): statements in
         # (line-JSON), merged into the configured statement sink
+        from investigraph_etl_spark.plans.custom import STATEMENT_SCHEMA
         from investigraph_etl_spark.plans.pipeline import (
             load_config,
             load_statements,
@@ -275,7 +281,9 @@ def main(argv: list[str] | None = None) -> None:
                 "load requires a load.handler or load.uri in the config, "
                 "or -o/--out-uri"
             )
-        statements = _json_lines_df(spark, _read_lines(args.in_uri))
+        statements = spark.read.schema(STATEMENT_SCHEMA).json(
+            spark.sparkContext.parallelize(_read_lines(args.in_uri), 8)
+        )
         loaded = load_statements(spark, statements, cfg, uri=dest)
         print(
             json.dumps(

@@ -1,16 +1,12 @@
-"""LakeTable — Iceberg-style upsert table with a parquet fallback.
+"""LakeTable — Iceberg-style upsert table on plain parquet.
 
 SURVEY.md §7.1: no Iceberg/Delta jars exist in this sandbox, so the
-engine ships a thin lake abstraction with two backends behind one API
-(``merge`` / ``read`` / ``add_columns`` / ``snapshot``):
-
-* :class:`HashLakeTable` (always available) — hash-bucketed parquet
-  directories + JSON manifest snapshots + an atomically-swapped
-  version pointer.  Functionally an "Iceberg-lite": MVCC reads,
-  bucket-pruned MERGE, additive schema evolution, idempotent commits.
-* :class:`IcebergLakeTable` (config-gated) — issues real ``MERGE INTO``
-  SQL when an Iceberg catalog is on the classpath.  Untestable here;
-  the SQL path is kept ready and asserted for shape only.
+engine ships its own lake behind one API (``merge`` / ``read`` /
+``add_columns`` / ``snapshot``): :class:`HashLakeTable` —
+hash-bucketed parquet directories + JSON manifest snapshots + an
+atomically-swapped version pointer.  Functionally an "Iceberg-lite":
+MVCC reads, bucket-pruned MERGE, additive schema evolution,
+idempotent commits.
 
 Merge semantics (the core invariant, SURVEY.md §1.3): the batch is a
 set of change rows ``(key, op, event_sequence, payload…)``, raw or
@@ -60,6 +56,7 @@ import json
 import os
 import pathlib
 import re
+import struct
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -216,6 +213,59 @@ def check_schema_compatibility(
     }
 
 
+# XXH64 (Collet) primes
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87,
+    0xC2B2AE3D27D4EB4F,
+    0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63,
+    0x27D4EB2F165667C5,
+)
+_M64 = (1 << 64) - 1
+
+
+def _xxh64(data: bytes) -> int:
+    """Signed XXH64 of ``data`` with seed 42 — the value Spark's
+    ``xxhash64`` gives a string column (its UTF-8 bytes) or a long
+    column (its 8 little-endian bytes).  Pure Python, for the few keys
+    of a lookup; Spark's expression (:meth:`HashLakeTable._bucket_col`)
+    hashes rows."""
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (64 - r))) & _M64
+
+    def rnd(acc: int, lane: int) -> int:
+        return rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+    seed, n, i = 42, len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, seed + _P2, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [rnd(x, lane) for x, lane in zip(v, lanes)]
+            i += 32
+        h = rotl(v[0], 1) + rotl(v[1], 7) + rotl(v[2], 12) + rotl(v[3], 18)
+        for x in v:
+            h = ((h ^ rnd(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = seed + _P5
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= rnd(0, struct.unpack_from("<Q", data, i)[0])
+        h = (rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= struct.unpack_from("<I", data, i)[0] * _P1 & _M64
+        h = (rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
 class HashLakeTable:
     """Hash-bucketed parquet table with snapshot manifests.
 
@@ -263,6 +313,13 @@ class HashLakeTable:
         rootp = pathlib.Path(root)
         if (rootp / "_latest").exists():
             return cls(spark, root)
+        key_type = schema[key].dataType
+        if not isinstance(key_type, (StringType, LongType)):
+            # lookups hash keys on the driver (_key_buckets), for these two
+            raise ValueError(
+                f"key column {key!r} is {key_type.simpleString()}; a lake "
+                "key must be string or bigint"
+            )
         (rootp / "manifests").mkdir(parents=True, exist_ok=True)
         (rootp / "data").mkdir(parents=True, exist_ok=True)
         manifest = {
@@ -552,7 +609,11 @@ class HashLakeTable:
             list(payload.fields) + list(_INTERNAL) + [_COMMIT, _BUCKET]
         )
         if not files:
-            return self.spark.createDataFrame([], stored)
+            # no partitions, so reading it (say, in a union) runs no
+            # task; an empty list would start a Python worker per task
+            return self.spark.createDataFrame(
+                self.spark.sparkContext.emptyRDD(), stored
+            )
         rows = self.spark.read.schema(stored).parquet(*files)
         return rows if live is None else rows.filter(live)
 
@@ -603,6 +664,37 @@ class HashLakeTable:
         agree on."""
         return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.num_buckets))
 
+    def _key_buckets(self, keys: list) -> dict:
+        """Each distinct key, coerced to the stored key type as
+        ``F.lit(k).cast(key_type)`` does, mapped to its bucket — the
+        driver-side twin of :meth:`_bucket_col` for string and long
+        keys (the only key types :meth:`create` accepts).  A long key
+        may arrive as a string (the CLI passes strings); one that does
+        not parse as a long raises ``ValueError`` naming it."""
+        long_key = isinstance(self.schema[self.key].dataType, LongType)
+        out: dict = {}
+        for k in keys:
+            if long_key:
+                v = k.strip() if isinstance(k, str) else k
+                if isinstance(v, str) and re.fullmatch(r"[+-]?[0-9]+", v):
+                    v = int(v)
+                if type(v) is not int or not -(1 << 63) <= v < 1 << 63:
+                    raise ValueError(
+                        f"lookup key {k!r} is not a bigint, the type of "
+                        f"key column {self.key!r}"
+                    )
+                data = struct.pack("<q", v)
+            else:
+                if not isinstance(k, (str, int)) or isinstance(k, bool):
+                    raise ValueError(
+                        f"lookup key {k!r} is not a string, the type of "
+                        f"key column {self.key!r}"
+                    )
+                v = str(k)
+                data = v.encode("utf-8")
+            out[v] = _xxh64(data) % self.num_buckets  # pmod
+        return out
+
     def read_raw(
         self,
         buckets: list[int] | None = None,
@@ -632,14 +724,14 @@ class HashLakeTable:
             .drop(*[f.name for f in _INTERNAL])
         )
 
-    def read_keys(self, keys: list[str]) -> DataFrame:
+    def read_keys(self, keys: list) -> DataFrame:
         """Point / multi-key lookup with two pruning layers:
 
         1. **bucket pruning** — scan only the files the manifest lists
-           under the buckets the keys hash into (the same ``xxhash64``
-           expression the merge path clusters by, evaluated in ONE
-           single-task job over the key literals, bounded by
-           ``len(keys)`` never table size).  Bases are per bucket, so
+           under the buckets the keys hash into.  The driver hashes the
+           keys itself (:meth:`_key_buckets`: the XXH64 and ``pmod``
+           that :meth:`_bucket_col` runs on rows), so the lookup
+           launches no job before its scan.  Bases are per bucket, so
            they prune per bucket; delta files are per write task, so
            they prune at that granularity — a micro-batch's one file
            is read whole and :meth:`_live` drops its other buckets'
@@ -655,34 +747,35 @@ class HashLakeTable:
            at 100 TB the bases hold the bytes, so that is megabytes,
            not the lake.
 
-        Pruning never changes LWW winners: a skipped file contains no
-        version of any requested key.  Tombstoned keys return no row,
-        exactly like :meth:`read`."""
+        The scan keeps the requested keys' rows only, and ONE aggregate
+        picks each key's winner with ``max_by`` over ``(_seq,
+        _commit)`` — the LWW rule of :meth:`_lww`, with no winner join:
+        its rows grow with keys × versions, so carrying their payload
+        through the aggregate is cheap.  Pruning never changes LWW
+        winners: a skipped file contains no version of any requested
+        key.  Tombstoned keys return no row, exactly like :meth:`read`."""
         cols = [f.name for f in self.schema.fields]
         if not keys:
             return self.read().limit(0)
-        key_type = self.schema[self.key].dataType
-        # the keys ride the plan as literals cast to the stored key type
-        # (the hash depends on it): no Python worker round trip, no shuffle
-        kdf = self.spark.range(1, numPartitions=1).select(
-            F.explode(
-                F.array(*[F.lit(k).cast(key_type) for k in dict.fromkeys(keys)])
-            ).alias(self.key)
-        )
-        bucket = self._bucket_col().cast("int").alias("b")
-        pairs = [(r[0], r[1]) for r in kdf.select(self.key, bucket).collect()]
-        buckets = sorted({b for _, b in pairs})
+        buckets_of = self._key_buckets(keys)
+        buckets = sorted(set(buckets_of.values()))
         files = self._files_for_keys(
             self._bucket_files(buckets),
             self._manifest.get("file_stats", {}),
-            pairs,
+            list(buckets_of.items()),
         )
         live = self._live(self._manifest, buckets)
+        payload = [c for c in cols if c != self.key]
+        winner = F.max_by(
+            F.struct(*payload, "_deleted"), F.struct("_seq", "_commit")
+        ).alias("_w")
         return (
-            self._lww(self._scan(files, self.schema, live))
-            .filter(~F.col("_deleted"))
-            .filter(F.col(self.key).isin(list(keys)))
-            .select(*cols)
+            self._scan(files, self.schema, live)
+            .filter(F.col(self.key).isin(list(buckets_of)))
+            .groupBy(self.key)
+            .agg(winner)
+            .filter(~F.col("_w._deleted"))
+            .select(*[c if c == self.key else f"_w.{c}" for c in cols])
         )
 
     @staticmethod
@@ -778,15 +871,15 @@ class HashLakeTable:
         writing commit is > ``from_version``: the range commits' delta
         files, or compaction outputs, which keep each row's original
         ``_commit``) and the from-state files of the buckets they
-        touch.  ONE narrow aggregate over ``from ∪ range`` — key and the
-        internal columns only — yields each key's range winner and
-        from-state winner; ONE join fetches the winners' payload from
-        the range files, and preimage feeds add one join for the
-        from-state payload.  The
-        range side is ∝ changes; the from-state side is ∝ the touched
-        buckets' row count, and a net feed reads only the key and the
-        internal columns there (metadata-weight), while a preimage feed
-        also reads the requested payload columns.  A from-state delta
+        touch.  ONE aggregate over ``from ∪ range`` yields each key's
+        range winner, which carries its payload, and its from-state
+        winner, which does not: a net feed has no join, and a preimage
+        feed adds one join for the from-state payload.  The aggregate
+        sorts the range rows with their payload; the range side is ∝
+        changes.  The from-state side is ∝ the touched buckets' row
+        count, and a net feed reads only the key and the internal
+        columns there (metadata-weight), while a preimage feed also
+        reads the requested payload columns.  A from-state delta
         file is shared by the buckets it holds, so that side also reads
         the untouched buckets' rows of the files it names; they have no
         range winner and drop out of the aggregate.  Building the feed
@@ -837,13 +930,7 @@ class HashLakeTable:
         in_range = (F.col("_commit") > F.lit(from_version)) & (
             F.col("_commit") <= F.lit(to_version)
         )
-        # on the delta path each range file is read once and all its
-        # rows are range changes, so the payload scan needs no stale-row
-        # filter; the fallback may list a shared delta file beside the
-        # base that folded part of it
-        live_to = None
         if touched is None:
-            live_to = self._live(man_to, None)
             # compacted files mix a bucket's history, so a narrow
             # distinct job over the range rows names the touched
             # buckets (bounded by num_buckets)
@@ -860,42 +947,44 @@ class HashLakeTable:
         # (additive evolution), so preimages of them are null
         man_from = self._manifest_at(from_version)
         old_files = self._bucket_files(touched, man_from)
-        # one aggregate over from ∪ range picks both winners per key.  A
-        # range file may hold rows with _commit <= from (compaction
-        # outputs written after from, fallback path only); each is a
-        # copy of the key's from-state winner, so _s is unchanged.  A
-        # stale row of a shared delta file (see _live) is a copy of, or
-        # loses to, its bucket's base winner, so neither max moves and
-        # the aggregate needs no filter.  _commit splits the two sides,
-        # so (_seq, _commit) never ties between _w and _s.
-        order = F.struct("_seq", "_commit", "_deleted")
-        state = (
-            self._scan(old_files + files, pay_to)
-            .select(key, "_seq", "_commit", "_deleted")
-            .groupBy(key)
-            .agg(
-                F.max(F.when(in_range, order)).alias("_w"),
-                F.max(
-                    F.when(F.col("_commit") <= F.lit(from_version), order)
-                ).alias("_s"),
-            )
+        # one aggregate over from ∪ range picks both winners per key:
+        # _w, the range winner, with _p, its payload, and _s, the
+        # from-state winner.  The from-state scan reads no payload, and
+        # the payload rides max_by, not max, as a map column cannot be
+        # ordered.  A range file may hold rows with _commit <= from
+        # (compaction outputs written after from, fallback path only);
+        # each is a copy of the key's from-state winner, so _s is
+        # unchanged.  A stale row of a shared delta file (see _live) is
+        # a copy of, or loses to, its bucket's base winner — same
+        # (_seq, _commit), same payload — so no winner moves and the
+        # aggregate needs no filter.  _commit splits the two sides, so
+        # (_seq, _commit) never ties between _w and _s.
+        order = ["_seq", "_commit", "_deleted"]
+        pre_cols = [c for c in pay_cols if c != key]
+        from_rows = self._scan(old_files, pay_to).select(
+            key, *order,
+            *[F.lit(None).cast(pay_to[c].dataType).alias(c) for c in pre_cols],
+        )
+        rows = from_rows.unionByName(
+            self._scan(files, pay_to).select(key, *order, *pre_cols)
+        )
+        state = rows.groupBy(key).agg(
+            F.max(F.when(in_range, F.struct(*order))).alias("_w"),
+            F.max_by(
+                F.struct(*pre_cols), F.when(in_range, F.struct("_seq", "_commit"))
+            ).alias("_p"),
+            F.max(
+                F.when(F.col("_commit") <= F.lit(from_version), F.struct(*order))
+            ).alias("_s"),
         )
         s_live = F.col("_s").isNotNull() & ~F.col("_s._deleted")
-        changed = state.filter(
+        j = state.filter(
             F.col("_w").isNotNull()
             & (F.col("_s").isNull() | (F.col("_w") > F.col("_s")))
             # a delete of a key that was not live at from_version is a
             # no-op for net-diff consumers
             & ~(F.col("_w._deleted") & ~s_live)
-        ).select(key, "_w.*", "_s")
-        # the winners' payload, from the range files only; the join
-        # strategy is left to Catalyst/AQE, as in _lww
-        post = (
-            self._scan(files, pay_to, live_to)
-            .select(*pay_cols, "_seq", "_commit")
-            .filter(in_range)
-        )
-        j = changed.join(post, on=[key, "_seq", "_commit"])
+        ).select(key, "_w.*", "_p.*", "_s")
         if not include_preimage:
             change = (
                 F.when(~s_live, F.lit("insert"))
@@ -907,7 +996,6 @@ class HashLakeTable:
         # the preimage shape: the from-state winner's payload, from the
         # old files' live rows (a stale copy would join twice), over the
         # REQUESTED payload columns only
-        pre_cols = [c for c in pay_cols if c != key]
         s_rows = self._scan(
             old_files, pay_to, self._live(man_from, touched)
         ).select(
@@ -1135,8 +1223,9 @@ class HashLakeTable:
         array/map/struct) cast up — anything else raises HERE with the
         column named, instead of an executor-side ANSI cast error (or,
         ANSI off, silent null corruption) after shuffle work is already
-        spent.  ``schema_policy="strict"`` additionally rejects ANY
-        drift (additive or absent) — the locked-schema production mode."""
+        spent.  The key column never changes type, under either policy.
+        ``schema_policy="strict"`` additionally rejects ANY drift
+        (additive or absent) — the locked-schema production mode."""
         for required in (self.key, seq, op):
             if required not in batch.columns:
                 raise SchemaCompatibilityError(
@@ -1165,6 +1254,15 @@ class HashLakeTable:
                 "array/map/struct) — nested struct field add/drop is not.  "
                 "Fix the producer, or migrate the table explicitly."
             )
+        for n, bt, tt in compat["promote"]:
+            if n == self.key:
+                # a row's bucket is the hash of its key AS STORED, and
+                # Spark hashes an int and a long of one value apart:
+                # promoting the key would re-bucket every stored row
+                raise SchemaCompatibilityError(
+                    f"key column {n!r}: batch {bt} cannot be applied to "
+                    f"stored {tt}; the key's type cannot change"
+                )
         if schema_policy == "strict" and (
             compat["additive"] or compat["missing"] or compat["promote"]
         ):
@@ -1180,9 +1278,7 @@ class HashLakeTable:
         # batch wider than stored (e.g. producer int→long): promote the
         # STORED type up the same lossless chain (Iceberg promotion,
         # round-5 ADVICE r4) — schema-only commit, no file rewrite.
-        # The key column may promote too: Spark's hash expressions
-        # normalize integral types to long, so bucket assignment is
-        # unchanged.  (seq/op never appear — they are not table columns.)
+        # (seq/op never appear — they are not table columns.)
         self.promote_columns(
             [(n, batch.schema[n].dataType) for n, _bt, _tt in compat["promote"]]
         )
@@ -1390,46 +1486,6 @@ class HashLakeTable:
             "expired_manifests": len(expired),
             "expired_bucket_manifests": expired_bm,
         }
-
-
-class IcebergLakeTable:
-    """Real-Iceberg backend: same API, SQL ``MERGE INTO`` execution.
-
-    Requires ``iceberg-spark-runtime`` on the classpath and a configured
-    catalog — not present in this sandbox (SURVEY.md §7.1), so this
-    class only validates availability and composes the SQL.  The MERGE
-    mirrors SURVEY.md §2.3 J4 with the late-event guard.
-    """
-
-    MERGE_SQL = """
-        MERGE INTO {table} t
-        USING {source} s
-        ON t.{key} = s.{key}
-        WHEN MATCHED AND s.op = 'delete' AND s.event_sequence > t._seq THEN DELETE
-        WHEN MATCHED AND s.event_sequence > t._seq THEN UPDATE SET *
-        WHEN NOT MATCHED AND s.op != 'delete' THEN INSERT *
-    """
-
-    def __init__(self, spark: SparkSession, table: str, key: str = "doc_id"):
-        if not any(
-            "iceberg" in str(spark.conf.get(k, "") or "").lower()
-            for k in ("spark.sql.extensions", "spark.sql.catalog.spark_catalog")
-        ):
-            raise RuntimeError(
-                "Iceberg runtime not configured; use HashLakeTable instead"
-            )
-        self.spark, self.table, self.key = spark, table, key
-
-    # read by replay_batch's skip check: this backend keeps no batch-id log
-    def last_committed(self, stream_id: str = "default") -> int:
-        return -1
-
-    def merge(self, batch: DataFrame, batch_id: int, **_: object) -> dict:
-        batch.createOrReplaceTempView("_merge_src")
-        self.spark.sql(
-            self.MERGE_SQL.format(table=self.table, source="_merge_src", key=self.key)
-        )
-        return {"skipped": False, "version": batch_id}
 
 
 LakeTable = HashLakeTable

@@ -74,9 +74,7 @@ def prepare_batch(events: DataFrame) -> DataFrame:
     No in-batch LWW: the lake's read/fold-time LWW resolves duplicate
     keys (``LWW(LWW(batch) ∪ target) ≡ LWW(batch ∪ target)``).  Reduce
     with :func:`investigraph_etl_spark.operators.lww.lww_dedup` when
-    fewer rows pay (a bulk replay, see :func:`replay_batch`) or a
-    standalone reduced batch is needed (e.g. feeding a real Iceberg
-    MERGE, whose cardinality check requires ≤1 source row per key).
+    fewer rows pay (a bulk replay, see :func:`replay_batch`).
     ``event_time`` is stream metadata (lag metrics), not table payload.
     """
     return normalize_events(events).drop("event_time")

@@ -584,14 +584,53 @@ def test_changes_column_projection_prunes_and_matches(spark, lake):
         lake.read_changes(v1, columns=["nope"])
 
 
+def test_changes_of_map_payload_and_key_only_projection(spark, tmp_path):
+    """A map column, which cannot be ordered, rides the feed's
+    aggregate as payload; a feed projected to the key alone carries no
+    payload.  Covers insert, update and delete rows, net and
+    preimage."""
+    ddl = "k string, m map<string,int>, seq long, op string"
+    first = spark.createDataFrame(
+        [("a", {"x": 1}, 1, "upsert"), ("b", {"y": 2}, 2, "upsert")], ddl
+    )
+    lake = HashLakeTable.create(
+        spark, str(tmp_path / "lake"), first.select("k", "m").schema,
+        key="k", num_buckets=4,
+    )
+    lake.merge(first, 0, seq="seq")
+    lake.merge(
+        spark.createDataFrame(
+            [("a", {"z": 3}, 3, "upsert"), ("b", None, 4, "delete"),
+             ("c", {"w": 5}, 5, "upsert")],
+            ddl,
+        ),
+        1, seq="seq",
+    )
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    assert rows(lake.read_changes(1)) == [
+        ("a", {"z": 3}, "update"), ("b", None, "delete"), ("c", {"w": 5}, "insert")
+    ]
+    assert rows(lake.read_changes(1, include_preimage=True)) == [
+        ("a", {"x": 1}, "update_preimage"), ("a", {"z": 3}, "update_postimage"),
+        ("b", {"y": 2}, "delete"), ("c", {"w": 5}, "insert"),
+    ]
+    assert rows(lake.read_changes(1, columns=["k"])) == [
+        ("a", "update"), ("b", "delete"), ("c", "insert")
+    ]
+
+
 def test_changes_build_runs_no_job_and_plans_one_aggregate(spark, lake):
     """The feed's plan shape.  Building it launches no Spark job — the
     touched buckets of a pure-delta range come off the lineage, and a
     from-state of more than 32 files (per-bucket bases, each rolled
     into several files by a compact) is not listed by a distributed
-    job.  The net feed scans parquet twice (from ∪ range, narrow; the
-    range payload) under one aggregate (partial + final) and one join;
-    the preimage feed adds one scan and one join for the from-state
+    job.  The net feed scans parquet twice (the from state, narrow;
+    the range files with their payload) under one aggregate (partial +
+    final) and no join: the range winner carries its payload.  The
+    preimage feed adds one scan and one join for the from-state
     payload."""
     import re
 
@@ -630,8 +669,8 @@ def test_changes_build_runs_no_job_and_plans_one_aggregate(spark, lake):
         )
 
     # 2 partial_max: the range winner and the from-state winner
-    assert shape(net) == (2, 2, 2, 1)
-    assert shape(pre) == (3, 2, 2, 2)
+    assert shape(net) == (2, 2, 2, 0)
+    assert shape(pre) == (3, 2, 2, 1)
     ev_from = pd.concat(chunks[:-1])
     assert_pdf_equal(net.toPandas(), oracle_changes(ev_from, events))
     assert_rows_equal(pre.toPandas(), oracle_changes_preimage(ev_from, events))

@@ -539,6 +539,68 @@ def test_load_command_calls_configured_handler(spark, tmp_path, capsys):
     assert _loaded_rows(spark, tmp_path) == _sorted_json(rows)
 
 
+def test_stage_pipe_keeps_all_null_column_and_loads_empty_input(
+    spark, tmp_path, capsys
+):
+    """A mapped column that is empty in every record still reaches
+    ``transform`` through the pipe, so the pipe loads what ``run``
+    loads; and ``load`` on an empty input writes 0 statements."""
+    import shutil
+
+    from investigraph_etl_spark.run import main
+
+    (tmp_path / "people.csv").write_text("id,name,alias\np1,Alice,\np2,Bob,\n")
+    cfg = tmp_path / "config.yml"
+    cfg.write_text(
+        textwrap.dedent(
+            """
+            name: people
+            prefix: ppl
+            extract:
+              sources:
+                - uri: people.csv
+            transform:
+              queries:
+                - entities:
+                    person:
+                      schema: Person
+                      key: id
+                      properties:
+                        name: {column: name}
+                        alias: {column: alias}
+            load:
+              uri: loaded
+            """
+        )
+    )
+    cfg = str(cfg)
+    out = run_pipeline(spark, cfg)
+    assert out["entities"] == 2
+    loaded = tmp_path / "loaded"
+    want = _loaded_rows(spark, tmp_path)
+    shutil.rmtree(loaded)
+
+    seeds, records, stmts = (
+        tmp_path / "seeds.jsonl", tmp_path / "records.jsonl",
+        tmp_path / "stmts.jsonl",
+    )
+    main(["seed", "-c", cfg, "-o", str(seeds)])
+    main(["extract", "-c", cfg, "--from-stdin", "-i", str(seeds),
+          "-o", str(records)])
+    assert [r["alias"] for r in _jsonl(records)] == [None, None]
+    main(["transform", "-c", cfg, "-i", str(records), "-o", str(stmts)])
+    main(["load", "-c", cfg, "-i", str(stmts)])
+    assert _loaded_rows(spark, tmp_path) == want
+
+    empty = tmp_path / "empty.jsonl"
+    empty.write_text("")
+    capsys.readouterr()
+    main(["load", "-c", cfg, "-i", str(empty)])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out == {"statements": 0, "uri": str(loaded)}
+    assert spark.read.parquet(str(loaded)).count() == 0
+
+
 def test_settings_cli(capsys):
     """reference `investigraph settings` parity (cli.py:188-196)."""
     from investigraph_etl_spark.run import main

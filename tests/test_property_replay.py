@@ -74,16 +74,3 @@ def test_any_changelog_any_batching_matches_oracle(spark, tmp_path_factory, case
         df = spark.createDataFrame(chunk, schema=change_schema())
         replay_batch(df, lake, batch_id=bid, salt_buckets=salt)
     assert_pdf_equal(lake.read().toPandas(), oracle_reduce(events))
-
-
-def test_iceberg_backend_guarded_and_sql_shape(spark):
-    """IcebergLakeTable refuses to run without a catalog, and its MERGE
-    carries the late-event guard + delete branch (SURVEY §2.3 J4)."""
-    from investigraph_etl_spark.sources.lake import IcebergLakeTable
-
-    with pytest.raises(RuntimeError, match="Iceberg"):
-        IcebergLakeTable(spark, "cat.db.tbl")
-    sql = IcebergLakeTable.MERGE_SQL
-    assert "WHEN MATCHED AND s.op = 'delete' AND s.event_sequence > t._seq THEN DELETE" in sql
-    assert "WHEN MATCHED AND s.event_sequence > t._seq THEN UPDATE SET *" in sql
-    assert "WHEN NOT MATCHED AND s.op != 'delete' THEN INSERT *" in sql
